@@ -10,17 +10,18 @@ import org.apache.spark.sql.functions._
   * convergence `|SSE(old) − SSE(new)| < 0.5` (master.py:365, delta at
   * master.py:22) } up to an iteration cap.
   *
-  * Spark realization: one job per iteration — scan + assignment expression
-  * + partial agg → exchange(K rows/partition) → final agg → collect K
-  * rows → rebuild the literal-centroid expression → repeat. The SSE
-  * piggybacks on the SAME aggregation pass (`sum(d2)` alongside the
-  * means), where the reference re-scans the full input TWICE per
-  * iteration for the objective (master.py:315-332, 365) — at 100 TB that
-  * is 200 TB/iteration of avoided IO.
+  * Spark realization: the shared plan-once [[LloydKernel]] at dim 2 over
+  * `(x, y)`. The points are planned and packed into cached blocks once
+  * per fit; each iteration broadcasts the K centroids and runs one job —
+  * per-partition partial (count, sums, SSE) per centroid → K×partitions
+  * shuffle → reduce → collect K rows. The SSE piggybacks on the SAME
+  * pass as the means, where the reference re-scans the full input TWICE
+  * per iteration for the objective (master.py:315-332, 365) — at 100 TB
+  * that is 200 TB/iteration of avoided IO.
   *
-  * Scale notes: per-iteration shuffle traffic is K×partitions rows
-  * (map-side combine), the driver holds only K centroids, and the
-  * assignment is a literal expression (no broadcast exchange needed).
+  * Scale notes: per-iteration shuffle traffic is K×partitions records
+  * (map-side combine), the driver holds only K centroids, and no Catalyst
+  * planning happens inside the loop.
   */
 object KMeansLoop {
 
@@ -31,24 +32,9 @@ object KMeansLoop {
       converged: Boolean,
       sseHistory: Seq[Double])
 
-  /** One assign+recenter+SSE pass. Returns (per-cid (cnt, mean), SSE). */
-  def step(points: DataFrame, cs: Seq[Centroid2D]): (Map[Int, (Long, Double, Double)], Double) = {
-    val assigned = Assign.withNearest(points, cs)
-    // means + SSE in ONE aggregation pass: sum(d2) is distributive, so it
-    // rides the same partial/final hash-agg as the means.
-    val rows = assigned.groupBy(col("cluster_id")).agg(
-      count(lit(1)).as("cnt"),
-      avg(col("x")).as("mx"),
-      avg(col("y")).as("my"),
-      sum(col("d2")).as("sse")).collect()
-    val byCid = rows.map(r =>
-      r.getInt(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3))).toMap
-    val sse = rows.map(_.getDouble(4)).sum
-    (byCid, sse)
-  }
-
   /** Full fit. `delta` mirrors master.py:22 (0.5); `maxIter` is the
-    * user-supplied cap (master.py:340).
+    * user-supplied cap (master.py:340). Rows with a null coordinate are
+    * skipped.
     */
   def fit(
       spark: SparkSession,
@@ -56,38 +42,27 @@ object KMeansLoop {
       init: Seq[Centroid2D],
       maxIter: Int,
       delta: Double = 0.5,
-      policy: Recenter.RepairPolicy = Recenter.RepairPolicy.KeepOld): FitResult = {
-    // cache: the SAME point table is scanned every iteration
-    points.cache()
-    try {
+      policy: Recenter.RepairPolicy = Recenter.RepairPolicy.KeepOld): FitResult =
+    LloydKernel.pack(points, array(col("x"), col("y")), dim = 2) { blocks =>
+      // one bounding-box job per fit, and only if a Rerandomize repair
+      // ever needs it
+      lazy val box = Recenter.bbox(points)
       var cs = init
       var prevSse = Double.NaN
       var history = Vector.empty[Double]
       var it = 0
       var converged = false
       while (it < maxIter && !converged) {
-        val (byCid, sse) = step(points, cs)
-        cs = policy match {
-          case Recenter.RepairPolicy.KeepOld =>
-            cs.map(c => byCid.get(c.cid)
-              .map { case (_, x, y) => Centroid2D(c.cid, x, y) }.getOrElse(c))
-          case Recenter.RepairPolicy.Rerandomize(seed) =>
-            val rnd = new java.util.Random(seed + it)
-            lazy val (xlo, xhi, ylo, yhi) = Recenter.bbox(points)
-            cs.map(c => byCid.get(c.cid)
-              .map { case (_, x, y) => Centroid2D(c.cid, x, y) }
-              .getOrElse(Centroid2D(c.cid,
-                xlo + rnd.nextDouble() * (xhi - xlo),
-                ylo + rnd.nextDouble() * (yhi - ylo))))
-        }
-        history :+= sse
+        val st = LloydKernel.step(blocks, cs.map(c => c.cid -> Array(c.cx, c.cy)))
+        val means = st.clusters.map { case (cid, c) => cid -> (c.mean(0), c.mean(1)) }
+        cs = Recenter.repair(cs, means, policy, draw = it)(box)
+        history :+= st.sse
         // convergence on |ΔSSE| < delta (master.py:365); the first
         // iteration has no previous SSE
-        if (!prevSse.isNaN && math.abs(prevSse - sse) < delta) converged = true
-        prevSse = sse
+        if (!prevSse.isNaN && math.abs(prevSse - st.sse) < delta) converged = true
+        prevSse = st.sse
         it += 1
       }
       FitResult(cs, prevSse, it, converged, history)
-    } finally points.unpersist()
-  }
+    }
 }

@@ -1,108 +1,31 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession, Encoder, Encoders}
-import org.apache.spark.sql.expressions.Aggregator
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import graft.functions.VecFunctions._
 
 /** n-dimensional k-means over `ArrayType(Double)` points (the flagship
   * embeddings table is 64-dim; the sequential oracle is 1-D — the kernel
   * is dimension-generic per SURVEY §1.1).
   *
-  * Ships the one custom aggregation surface promised in SURVEY §2.9:
-  * [[CentroidAggregator]], a typed `Aggregator[IN, BUF, OUT]` computing a
-  * per-cluster vector sum + count → mean — the idiomatic typed-Dataset
-  * form of A1 (reducer.py:30-44) for n-dim vectors, and the same shape
-  * MLlib uses internally. It gets Spark's map-side partial aggregation
-  * (reduce/merge) for free, unlike the reference which ships every raw
-  * point across its shuffle (mapper.py:67-68).
+  * [[fit]] is the shared plan-once [[LloydKernel]] over `vec`, the same
+  * kernel `KMeansLoop` runs at dim 2: the points are packed into cached
+  * blocks once per fit, and each iteration broadcasts the K centroids and
+  * runs one job whose map side emits one partial (count, vector sum, SSE)
+  * per centroid per partition — the map-side combine the reference lacks
+  * (it ships every raw point across its shuffle, mapper.py:67-68), in the
+  * shape MLlib uses internally. [[withNearest]] is the literal-expression
+  * assignment for one-shot queries.
   */
 object KMeansND {
 
-  /** (cluster_id, vector) → (sum vector, count) → mean vector. */
-  class CentroidAggregator(dim: Int)
-      extends Aggregator[(Int, Array[Double]), (Array[Double], Long), Array[Double]] {
-    override def zero: (Array[Double], Long) = (new Array[Double](dim), 0L)
-    override def reduce(b: (Array[Double], Long), a: (Int, Array[Double])): (Array[Double], Long) = {
-      val (s, n) = b
-      var i = 0
-      while (i < dim) { s(i) += a._2(i); i += 1 }
-      (s, n + 1)
-    }
-    override def merge(b1: (Array[Double], Long), b2: (Array[Double], Long)): (Array[Double], Long) = {
-      val (s1, n1) = b1; val (s2, n2) = b2
-      var i = 0
-      while (i < dim) { s1(i) += s2(i); i += 1 }
-      (s1, n1 + n2)
-    }
-    override def finish(r: (Array[Double], Long)): Array[Double] = {
-      val (s, n) = r
-      if (n == 0L) s else s.map(_ / n)
-    }
-    override def bufferEncoder: Encoder[(Array[Double], Long)] =
-      Encoders.tuple(ExprEnc.doubleArray, Encoders.scalaLong)
-    override def outputEncoder: Encoder[Array[Double]] = ExprEnc.doubleArray
-  }
-
-  private object ExprEnc {
-    import org.apache.spark.sql.catalyst.encoders.ExpressionEncoder
-    val doubleArray: Encoder[Array[Double]] = ExpressionEncoder[Array[Double]]()
-  }
-
-  /** Mean + count + SSE in ONE aggregation pass — the loop's per-cluster
-    * state. (The reference pays two extra full scans per iteration for
-    * the objective, master.py:365; the 2-D loop piggybacks SSE on its
-    * hash-agg; this is the typed-path equivalent.)
-    * IN = (cluster_id, vec, d2); OUT = (mean, n, sse).
-    */
-  class CentroidSseAggregator(dim: Int)
-      extends Aggregator[(Int, Array[Double], Double), (Array[Double], Long, Double), (Array[Double], Long, Double)] {
-    override def zero: (Array[Double], Long, Double) = (new Array[Double](dim), 0L, 0.0)
-    override def reduce(b: (Array[Double], Long, Double), a: (Int, Array[Double], Double)): (Array[Double], Long, Double) = {
-      val (s, n, e) = b
-      var i = 0
-      while (i < dim) { s(i) += a._2(i); i += 1 }
-      (s, n + 1, e + a._3)
-    }
-    override def merge(b1: (Array[Double], Long, Double), b2: (Array[Double], Long, Double)): (Array[Double], Long, Double) = {
-      val (s1, n1, e1) = b1; val (s2, n2, e2) = b2
-      var i = 0
-      while (i < dim) { s1(i) += s2(i); i += 1 }
-      (s1, n1 + n2, e1 + e2)
-    }
-    override def finish(r: (Array[Double], Long, Double)): (Array[Double], Long, Double) = {
-      val (s, n, e) = r
-      (if (n == 0L) s else s.map(_ / n), n, e)
-    }
-    override def bufferEncoder: Encoder[(Array[Double], Long, Double)] =
-      Encoders.tuple(ExprEnc.doubleArray, Encoders.scalaLong, Encoders.scalaDouble)
-    override def outputEncoder: Encoder[(Array[Double], Long, Double)] =
-      Encoders.tuple(ExprEnc.doubleArray, Encoders.scalaLong, Encoders.scalaDouble)
-  }
-
   /** Assignment: adds cluster_id + d2 for an n-dim point DF with a
-    * double-array column `vec`. Literal centroids → no shuffle.
-    *
-    * Staged like Assign.withNearest (2-D): one named column per centroid
-    * distance, then least, then a CASE of column refs. The inlined
-    * struct form duplicated every distSqFast(vec, [64 literals]) subtree
-    * ~2× per centroid, and at K=10×dim=64 the tree is re-ANALYZED every
-    * fit iteration — staging cuts planning from seconds to noise.
+    * double-array column `vec`. Literal centroids → no shuffle; the
+    * staged argmin of `Assign.withNearestNDFull`, in the historical
+    * column order (point cols, cluster_id, d2).
     */
-  def withNearest(points: DataFrame, cs: Seq[CentroidND]): DataFrame = {
-    val sorted = cs.sortBy(_.cid)
-    val ddNames = sorted.map(c => s"_dd${c.cid}")
-    val withDd = points.select(col("*") +: sorted.map(c =>
-      graft.functions.ArrayKernels.distSqFast(col("vec"),
-        array(c.vec.map(lit(_)): _*)).as(s"_dd${c.cid}")): _*)
-    val withD2 = withDd.withColumn("d2", least(ddNames.map(col): _*))
-    val cid = sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(col(s"_dd${c.cid}") === col("d2"), lit(c.cid)).otherwise(rest)
-    }
-    // keep the historical column order: point cols, cluster_id, d2
-    withD2.withColumn("cluster_id", cid)
+  def withNearest(points: DataFrame, cs: Seq[CentroidND]): DataFrame =
+    Assign.withNearestNDFull(points, col("vec"), cs, "cluster_id", d2Col = Some("d2"))
       .select(points.columns.map(col) :+ col("cluster_id") :+ col("d2"): _*)
-  }
 
   final case class FitResult(
       centroids: Seq[CentroidND],
@@ -110,8 +33,9 @@ object KMeansND {
       iterations: Int,
       converged: Boolean)
 
-  /** Lloyd's loop on n-dim points via the typed CentroidAggregator.
-    * Empty clusters keep their old centroid (KeepOld policy).
+  /** Lloyd's loop on n-dim points via [[LloydKernel]]. Empty clusters
+    * keep their old centroid (KeepOld policy); rows with a null vector or
+    * a null coordinate are skipped.
     */
   def fit(
       spark: SparkSession,
@@ -119,31 +43,23 @@ object KMeansND {
       init: Seq[CentroidND],
       maxIter: Int,
       delta: Double = 0.5): FitResult = {
-    import spark.implicits._
+    require(init.nonEmpty, "KMeansND.fit: init holds no centroid")
     val dim = init.head.vec.length
-    points.cache()
-    try {
+    require(init.forall(_.vec.length == dim),
+      s"KMeansND.fit: init centroids differ in length (${init.map(_.vec.length).distinct.mkString(", ")})")
+    LloydKernel.pack(points, col("vec"), dim) { blocks =>
       var cs = init
       var prevSse = Double.NaN
       var it = 0
       var converged = false
       while (it < maxIter && !converged) {
-        val assigned = withNearest(points, cs)
-        // ONE job per iteration: means + counts + SSE in the same typed
-        // aggregation (partial agg -> K rows per partition shuffle)
-        val ds: Dataset[(Int, Array[Double], Double)] =
-          assigned.select(col("cluster_id"), col("vec"), col("d2"))
-            .as[(Int, Array[Double], Double)]
-        val stats = ds.groupByKey(_._1)
-          .agg(new CentroidSseAggregator(dim).toColumn.name("stats"))
-          .collect().toMap
-        val sse = stats.valuesIterator.map(_._3).sum
-        cs = cs.map(c => stats.get(c.cid).map(s => CentroidND(c.cid, s._1)).getOrElse(c))
-        if (!prevSse.isNaN && math.abs(prevSse - sse) < delta) converged = true
-        prevSse = sse
+        val st = LloydKernel.step(blocks, cs.map(c => c.cid -> c.vec))
+        cs = cs.map(c => st.clusters.get(c.cid).fold(c)(s => CentroidND(c.cid, s.mean)))
+        if (!prevSse.isNaN && math.abs(prevSse - st.sse) < delta) converged = true
+        prevSse = st.sse
         it += 1
       }
       FitResult(cs, prevSse, it, converged)
-    } finally points.unpersist()
+    }
   }
 }

@@ -51,24 +51,33 @@ object Recenter {
       old: Seq[Centroid2D],
       policy: RepairPolicy): Seq[Centroid2D] = {
     val agg = means(assigned).collect()
-      .map(r => r.getInt(0) -> (r.getLong(1), r.getDouble(2), r.getDouble(3)))
+      .map(r => r.getInt(0) -> (r.getDouble(2), r.getDouble(3)))
       .toMap
-    // K is tiny: the merge itself is driver-side, like the reference's
-    // master (master.py:242-244) and MLlib.
+    repair(old, agg, policy)(bbox(assigned))
+  }
+
+  /** The merge after a means pass, shared by [[recenter]] and
+    * `KMeansLoop.fit`: a cid with a mean moves there; an empty one keeps
+    * its old centroid (KeepOld) or is redrawn uniformly inside `box` =
+    * (xlo, xhi, ylo, yhi) from `Random(seed + draw)` (Rerandomize). `box`
+    * is evaluated only if a Rerandomize repair happens. K is tiny: the
+    * merge is driver-side, like the reference's master
+    * (master.py:242-244) and MLlib.
+    */
+  def repair(
+      old: Seq[Centroid2D],
+      means: Map[Int, (Double, Double)],
+      policy: RepairPolicy,
+      draw: Int = 0)(box: => (Double, Double, Double, Double)): Seq[Centroid2D] = {
+    def moved(c: Centroid2D)(empty: => Centroid2D) =
+      means.get(c.cid).fold(empty) { case (x, y) => Centroid2D(c.cid, x, y) }
     policy match {
-      case RepairPolicy.KeepOld =>
-        old.map(c => agg.get(c.cid)
-          .map { case (_, x, y) => Centroid2D(c.cid, x, y) }
-          .getOrElse(c))
+      case RepairPolicy.KeepOld => old.map(c => moved(c)(c))
       case RepairPolicy.Rerandomize(seed) =>
-        val rnd = new java.util.Random(seed)
-        val (xlo, xhi, ylo, yhi) = bbox(assigned)
-        old.map(c => agg.get(c.cid)
-          .map { case (_, x, y) => Centroid2D(c.cid, x, y) }
-          .getOrElse {
-            Centroid2D(c.cid, xlo + rnd.nextDouble() * (xhi - xlo),
-              ylo + rnd.nextDouble() * (yhi - ylo))
-          })
+        val rnd = new java.util.Random(seed + draw)
+        lazy val (xlo, xhi, ylo, yhi) = box
+        old.map(c => moved(c)(Centroid2D(c.cid, xlo + rnd.nextDouble() * (xhi - xlo),
+          ylo + rnd.nextDouble() * (yhi - ylo))))
     }
   }
 

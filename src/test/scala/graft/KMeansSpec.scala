@@ -122,17 +122,64 @@ class KMeansSpec extends SparkSpec {
     assert(a == b)
   }
 
-  test("n-dim typed-Aggregator fit matches 2-D loop on 2-dim data") {
+  test("Lloyd kernel == expression form: tie point, empty cluster, 2-D and n-dim") {
     import spark.implicits._
-    val pts2 = Tables.points2d(spark, sf)
-    val ptsNd = pts2.select(array(col("x"), col("y")).as("vec"))
-    val init2d = Centroids.k2d
-    val initNd = init2d.map(c => CentroidND(c.cid, Array(c.cx, c.cy)))
-    val r2 = KMeansLoop.fit(spark, pts2, init2d, maxIter = 3, delta = 0.0)
-    val rn = KMeansND.fit(spark, ptsNd, initNd, maxIter = 3, delta = 0.0)
-    r2.centroids.zip(rn.centroids).foreach { case (a, b) =>
-      assert(math.abs(a.cx - b.vec(0)) < 1e-9 && math.abs(a.cy - b.vec(1)) < 1e-9)
+    import org.apache.spark.sql.{DataFrame, Row}
+    val cs = Centroids.k2dWithEmpty // cid 8 lies outside the data: empty
+    // (15000, 27.5) is exactly equidistant from cids 0 and 5 and nearer
+    // to them than to any other centroid: the lowest cid must win
+    val tie = (15000.0, 27.5)
+    val tieD = cs.map(c => (tie._1 - c.cx) * (tie._1 - c.cx) + (tie._2 - c.cy) * (tie._2 - c.cy))
+    assert(tieD(0) == tieD(5) && tieD.count(_ == tieD.min) == 2)
+    val pts = Tables.points2d(spark, sf).select(col("x"), col("y"))
+      .union(Seq(tie).toDF("x", "y"))
+    val centers = cs.map(c => c.cid -> Array(c.cx, c.cy))
+    def kernel(vecs: DataFrame, centers: Seq[(Int, Array[Double])]) =
+      LloydKernel.pack(vecs, col("vec"), centers.head._2.length)(LloydKernel.step(_, centers))
+    def close(a: Double, b: Double) = math.abs(a - b) <= 1e-9 * math.max(1.0, math.abs(b))
+    // want rows: (cluster_id, cnt, mean_0 .. mean_{dim-1}, sse)
+    def check(got: LloydKernel.Step, want: Array[Row], dim: Int): Unit = {
+      assert(got.clusters.keySet == want.map(_.getInt(0)).toSet)
+      want.foreach { r =>
+        val c = got.clusters(r.getInt(0))
+        assert(c.count == r.getLong(1), s"cluster ${r.getInt(0)} count")
+        (0 until dim).foreach(i => assert(close(c.mean(i), r.getDouble(2 + i)),
+          s"cluster ${r.getInt(0)} mean $i: ${c.mean(i)} vs ${r.getDouble(2 + i)}"))
+        assert(close(c.sse, r.getDouble(2 + dim)), s"cluster ${r.getInt(0)} sse")
+      }
+      assert(close(got.sse, want.map(_.getDouble(2 + dim)).sum))
     }
+    assert(kernel(Seq(tie).toDF("x", "y").select(array(col("x"), col("y")).as("vec")), centers)
+      .clusters.keySet == Set(0))
+
+    // 2-D: Assign.withNearest + groupBy
+    val vec2 = pts.select(array(col("x"), col("y")).as("vec"))
+    val got2 = kernel(vec2, centers)
+    val want2 = Assign.withNearest(pts, cs).groupBy(col("cluster_id"))
+      .agg(count(lit(1)), avg(col("x")), avg(col("y")), sum(col("d2"))).collect()
+    assert(!got2.clusters.contains(8))
+    check(got2, want2, dim = 2)
+    // and one fit iteration moves each centroid to that pass's mean,
+    // keeping the empty cid
+    val fit1 = KMeansLoop.fit(spark, pts, cs, maxIter = 1, delta = 0.0)
+    assert(fit1.centroids.find(_.cid == 8).get == cs.last)
+    fit1.centroids.filter(_.cid != 8).foreach { c =>
+      val m = got2.clusters(c.cid).mean
+      assert(close(c.cx, m(0)) && close(c.cy, m(1)))
+    }
+
+    // n-dim: Assign.withNearestNDFull + groupBy, on the same 2-dim points
+    // (tie + empty cluster) and on the 64-dim embeddings
+    def wantND(vecs: DataFrame, ccs: Seq[CentroidND], dim: Int) =
+      Assign.withNearestNDFull(vecs, col("vec"), ccs, "cluster_id", Some("d2"))
+        .groupBy(col("cluster_id"))
+        .agg(count(lit(1)), (0 until dim).map(i => avg(col("vec")(i))) :+ sum(col("d2")): _*)
+        .collect()
+    check(kernel(vec2, centers), wantND(vec2, cs.map(c => CentroidND(c.cid, Array(c.cx, c.cy))), 2), 2)
+    val emb = Tables.embeddings(spark, sf).select(
+      graft.functions.VecFunctions.toDoubleArray(col("embedding")).as("vec"))
+    val init64 = Centroids.randomInitND(k = 6, dim = 64, seed = 5L, -0.5, 0.5)
+    check(kernel(emb, init64.map(c => c.cid -> c.vec)), wantND(emb, init64, 64), 64)
   }
 
   test("MLlib flagship runs and improves on random-init SSE (sanity)") {
