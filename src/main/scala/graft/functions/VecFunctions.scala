@@ -53,27 +53,9 @@ object VecFunctions {
     */
   def toDoubleArray(a: Column): Column = transform(a, x => x.cast("double"))
 
-  /** Unrolled fixed-dim dot product: `a[1]*b[1] + a[2]*b[2] + …` with
-    * left-associative addition. Unlike the HOF form this is whole-stage
-    * codegen'd, and the identical expression text runs in DuckDB, so
-    * results are bit-exact across engines (same IEEE ops, same order).
+  /** Unrolled fixed-dim dot product in DuckDB SQL: `a[1]*b[1] + a[2]*b[2]
+    * + …` with left-associative addition (1-indexed lists both sides).
     */
-  def dotUnrolled(a: Column, b: Column, dim: Int): Column =
-    (1 to dim).map(i => element_at(a, i) * element_at(b, i))
-      .reduceLeft(_ + _)
-
-  /** Cosine via the unrolled dot — `dot/(sqrt(aa)*sqrt(bb))`; SQL twin in
-    * [[cosineUnrolledSql]] must keep the exact same operation order.
-    */
-  def cosineUnrolled(a: Column, b: Column, dim: Int): Column =
-    dotUnrolled(a, b, dim) /
-      (sqrt(dotUnrolled(a, a, dim)) * sqrt(dotUnrolled(b, b, dim)))
-
-  /** DuckDB SQL twin of [[dotUnrolled]] (1-indexed lists both sides). */
   def dotUnrolledSql(a: String, b: String, dim: Int): String =
     (1 to dim).map(i => s"$a[$i]*$b[$i]").mkString(" + ")
-
-  /** DuckDB SQL twin of [[cosineUnrolled]]. */
-  def cosineUnrolledSql(a: String, b: String, dim: Int): String =
-    s"(${dotUnrolledSql(a, b, dim)}) / (sqrt(${dotUnrolledSql(a, a, dim)}) * sqrt(${dotUnrolledSql(b, b, dim)}))"
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Approximate betweenness centrality — Brandes dependency accumulation
   * (Brandes 2001) from a SEEDED source set, depth-bounded: the
@@ -76,10 +77,9 @@ object Betweenness {
 
   /** Two-regime driver replay of the forward pass (optimization round
     * 19, guide §1.2 step 1 — the Mst/Louvain/KCore/LPA precedent):
-    * under `spark.graft.brandes.driverMaxEdges` (default 2M directed
-    * pairs; 0 disables) one bounded take pulls the edge list and seed
-    * set and the driver replays the IDENTICAL frontier rounds — same
-    * per-source visited sets, same σ sums over parallel shortest paths
+    * under the [[DriverRegime]] gate one bounded take pulls the edge
+    * list and seed set and the driver replays the IDENTICAL frontier
+    * rounds — same per-source visited sets, same σ sums over parallel shortest paths
     * (exact integer addition, order-free), so the (s, node, dist, σ)
     * frame is row-identical. This is the brandes STAGING build (3
     * sequential join+anti-join+aggregate+checkpoint rounds — 3.6 s of
@@ -88,20 +88,13 @@ object Betweenness {
     */
   private def forwardDriver(edges: DataFrame, seeds: DataFrame,
       rounds: Int): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.brandes.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_BRANDES_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("src"), col("dst"))
     val seedCol = seeds.select(col("node"))
     if (!(pairCols.schema.fields ++ seedCol.schema.fields)
-        .forall(_.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
-    val seedRows = seedCol.distinct().take(100001)
-    if (seedRows.length > 100000) return None
+        .forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(pairCols).getOrElse(return None)
+    val seedRows = DriverRegime.pull(seedCol.distinct(), cap = 100000)
+      .getOrElse(return None)
     // adjacency
     val adj = scala.collection.mutable.LongMap
       .empty[scala.collection.mutable.ArrayBuffer[Long]]
@@ -111,7 +104,7 @@ object Betweenness {
     }
     // per-source BFS with σ accumulation — the synchronous frontier
     // recurrence, one source at a time (sources are independent)
-    val out = Seq.newBuilder[org.apache.spark.sql.Row]
+    val out = Seq.newBuilder[Row]
     seedRows.foreach { sr =>
       val src = sr.getLong(0)
       val dist = scala.collection.mutable.LongMap.empty[Int]
@@ -132,22 +125,12 @@ object Betweenness {
         r += 1
       }
       dist.foreach { case (v, d0) =>
-        out += org.apache.spark.sql.Row(src, v, d0, sigma(v))
+        out += Row(src, v, d0, sigma(v))
       }
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("s",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("dist",
-        org.apache.spark.sql.types.IntegerType, false),
-      org.apache.spark.sql.types.StructField("sigma",
-        org.apache.spark.sql.types.LongType, false)))
-    val res = out.result()
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, res.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(res, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession, out.result(),
+      DriverRegime.schema("s" -> LongType, "node" -> LongType,
+        "dist" -> IntegerType, "sigma" -> LongType)))
   }
 
   /** Harmonic (closeness-family) centrality from the same seeded
@@ -235,8 +218,8 @@ object Betweenness {
   }
 
   /** Two-regime driver replay of the backward (dependency-accumulation)
-    * pass — see [[forwardDriver]]; same conf key
-    * (`spark.graft.brandes.driverMaxEdges`). Per source, level d's
+    * pass — see [[forwardDriver]]; same [[DriverRegime]] gate, over the
+    * edges and the visited frame. Per source, level d's
     * δ(v) = Σ_{v→w, dist(w)=d+1} (σ_v·(scale+δ_w)) div σ_w — exact
     * truncating integer division on positive operands (Long `/` ≡
     * Spark `div` ≡ DuckDB `//`), summed deepest-first exactly like the
@@ -246,21 +229,11 @@ object Betweenness {
     */
   private def backwardDriver(visited: DataFrame, edges: DataFrame,
       rounds: Int, scale: Long): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.brandes.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_BRANDES_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("src"), col("dst"))
-    if (!pairCols.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) return None
-    val eRows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (eRows.length > maxEdges) return None
-    val vRows = visited.select(col("s"), col("node"),
-        col("dist").cast("int"), col("sigma"))
-      .take(math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (vRows.length > maxEdges) return None
+    if (!pairCols.schema.fields.forall(_.dataType == LongType)) return None
+    val eRows = DriverRegime.pull(pairCols).getOrElse(return None)
+    val vRows = DriverRegime.pull(visited.select(col("s"), col("node"),
+      col("dist").cast("int"), col("sigma"))).getOrElse(return None)
     val adj = scala.collection.mutable.LongMap
       .empty[scala.collection.mutable.ArrayBuffer[Long]]
     eRows.foreach { r =>
@@ -300,16 +273,8 @@ object Betweenness {
         d0 -= 1
       }
     }
-    val out = total.toSeq.map { case (node, bc) =>
-      org.apache.spark.sql.Row(node, bc)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("bc_scaled",
-        org.apache.spark.sql.types.LongType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession,
+      total.toSeq.map { case (node, bc) => Row(node, bc) },
+      DriverRegime.schema("node" -> LongType, "bc_scaled" -> LongType)))
   }
 }

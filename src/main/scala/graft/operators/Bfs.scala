@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType}
 
 /** Frontier breadth-first search — multi-source shortest hop counts,
   * the reachability primitive behind "what can this supplier reach in
@@ -54,29 +55,21 @@ object Bfs {
   }
 
   /** Two-regime driver replay (optimization round 19, guide §1.2
-    * step 1 — the family-wide precedent): under
-    * `spark.graft.bfs.driverMaxEdges` (default 2M directed pairs; 0
-    * disables) one bounded take pulls the edge list and seeds and the
+    * step 1 — the family-wide precedent): under the [[DriverRegime]]
+    * gate one bounded take pulls the edge list and seeds and the
     * driver replays the identical frontier rounds — hop distance is a
     * min over paths, schedule-free, so rows are identical. Larger
     * graphs run the distributed frontier loop unchanged.
     */
   private def driverReplay(edges: DataFrame, seeds: DataFrame,
       rounds: Int): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.bfs.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_BFS_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("src"), col("dst"))
     val seedCol = seeds.select(col("node"))
     if (!(pairCols.schema.fields ++ seedCol.schema.fields)
-        .forall(_.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
-    val seedRows = seedCol.distinct().take(100001)
-    if (seedRows.length > 100000) return None
+        .forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(pairCols).getOrElse(return None)
+    val seedRows = DriverRegime.pull(seedCol.distinct(), cap = 100000)
+      .getOrElse(return None)
     val adj = scala.collection.mutable.LongMap
       .empty[scala.collection.mutable.ArrayBuffer[Long]]
     rows.foreach { r =>
@@ -98,17 +91,9 @@ object Bfs {
       frontier = next.keys.toSeq
       i += 1
     }
-    val out = dist.toSeq.map { case (node, d0) =>
-      org.apache.spark.sql.Row(node, d0)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("dist",
-        org.apache.spark.sql.types.IntegerType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession,
+      dist.toSeq.map { case (node, d0) => Row(node, d0) },
+      DriverRegime.schema("node" -> LongType, "dist" -> IntegerType)))
   }
 
   /** Run-to-fixpoint audit variant: expands until the frontier is

@@ -39,9 +39,8 @@ object ConnectedComponents {
     * Optimization round 19 (guide §1.2 step 1): two-regime, like
     * [[PageRank.chooseBroadcast]]. The fixpoint labeling (min node id
     * per component) is algorithm- and schedule-free, so when the edge
-    * relation is small enough to COUNT-and-COLLECT (≤
-    * `spark.graft.cc.driverMaxEdges`, default 2M pairs ≈ 32 MB of
-    * longs) the labels come from one exact driver union-find instead
+    * relation is small enough to collect (the [[DriverRegime]] gate) the
+    * labels come from one exact driver union-find instead
     * of O(log d) sequential rounds of 3–4 tiny Spark jobs each —
     * JobProfile measured graph_mst's 4 inner CC runs at ~150 of its
     * 218 jobs, nearly all sub-100 ms tasks under per-job scheduling +
@@ -65,23 +64,12 @@ object ConnectedComponents {
       srcCol: String, dstCol: String,
       outNode: String, outLbl: String): Option[DataFrame] = {
     import org.apache.spark.sql.types.LongType
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.cc.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
     val pairCols = edges.select(col(srcCol), col(dstCol))
-    val longKeyed = pairCols.schema.fields.forall(_.dataType == LongType)
-    if (maxEdges <= 0 || !longKeyed) return None
-    // ONE incremental take instead of count + collect: the edge subtree
-    // (often a scan + distinct or a join) executes once — its shuffle
-    // stages materialize once and the limit stage scans incrementally —
-    // with driver memory bounded at maxEdges+1 rows either way. An
-    // over-threshold graph at production scale short-circuits at the
+    if (!pairCols.schema.fields.forall(_.dataType == LongType)) return None
+    // an over-threshold graph at production scale stops the pull at the
     // threshold and falls back to the distributed loop (one bounded
-    // wasted pass, noise against the rounds it would otherwise pay).
-    val rows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
+    // wasted pass, noise against the rounds it would otherwise pay)
+    val rows = DriverRegime.pull(pairCols).getOrElse(return None)
     // union-find over the endpoint set
     val idx = scala.collection.mutable.LongMap.empty[Int]
     val ids = new scala.collection.mutable.ArrayBuffer[Long]()
@@ -110,13 +98,8 @@ object ConnectedComponents {
     }
     val out = ids.indices.map(i =>
       org.apache.spark.sql.Row(ids(i), minId(find(i))))
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField(outNode, LongType, false),
-      org.apache.spark.sql.types.StructField(outLbl, LongType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(
-      s.sparkContext.parallelize(out, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession, out,
+      DriverRegime.schema(outNode -> LongType, outLbl -> LongType)))
   }
 
   /** [[run]] plus the round count it took — the audit surface GraphSpec

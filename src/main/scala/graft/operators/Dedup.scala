@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Deduplication operators over the `documents` table — the
   * training-data-pipeline extension surface (builder prompt; SURVEY §7.4).
@@ -963,25 +964,17 @@ object Dedup {
   }
 
   /** Exact driver replay of `iters` SYNCHRONOUS hash-min rounds over a
-    * sub-threshold pair set (`spark.graft.cc.driverMaxEdges`, shared
-    * with the converged gate; 0 disables). Two-map rounds matter: an
+    * sub-threshold pair set (the [[DriverRegime]] gate, shared with the
+    * converged form). Two-map rounds matter: an
     * in-place sweep would over-propagate within a round and resolve
     * deeper chains than the declared truncation (the Scc.sccDriver
     * lesson).
     */
   private def ccFixedRoundsDriver(pairs: DataFrame,
       iters: Int): Option[DataFrame] = {
-    val s = pairs.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.cc.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_CC_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = pairs.select(col("doc_a"), col("doc_b"))
-    if (!pairCols.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
+    if (!pairCols.schema.fields.forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(pairCols).getOrElse(return None)
     val n2 = rows.length * 2
     val eu = new Array[Long](n2); val ev = new Array[Long](n2)
     var i = 0
@@ -1003,17 +996,9 @@ object Dedup {
       }
       labels = next
     }
-    val out = labels.toSeq.map { case (d0, lbl) =>
-      org.apache.spark.sql.Row(d0, lbl)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("d",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("lbl",
-        org.apache.spark.sql.types.LongType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out, slices), schema))
+    Some(DriverRegime.frame(pairs.sparkSession,
+      labels.toSeq.map { case (d0, lbl) => Row(d0, lbl) },
+      DriverRegime.schema("d" -> LongType, "lbl" -> LongType)))
   }
 
   /** One hash-min round: every member takes the min of its own and its

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, LongType}
 
 /** HyperBall (Boldi & Vigna's HyperANF) — per-node neighborhood-size
   * estimation by iterated sketch union: every node carries an HLL
@@ -168,9 +169,8 @@ object HyperBall {
 
   /** Two-regime driver replay of the round loop (optimization round
     * 19, guide §1.2 step 1 — the Mst/Louvain/LPA/Brandes precedent):
-    * under `spark.graft.hyperball.driverMaxEdges` (default 2M directed
-    * pairs; 0 disables) one bounded take pulls the edge list and the
-    * driver replays the IDENTICAL recurrence — the same
+    * under the [[DriverRegime]] gate one bounded take pulls the edge
+    * list and the driver replays the IDENTICAL recurrence — the same
     * md5-derived (register, rank) per node ([[DistinctSketch.hash60]]
     * replicated bit-for-bit: first 15 md5 hex digits as BIGINT;
     * rank = nlz(hash >> 6) − 9, i.e. 55 − len(bin(sfx)), 55 when the
@@ -183,17 +183,9 @@ object HyperBall {
     */
   private def packedStatesDriver(edges: DataFrame,
       rounds: Int): Option[Seq[DataFrame]] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.hyperball.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_HYPERBALL_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("src"), col("dst"))
-    if (!pairCols.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
+    if (!pairCols.schema.fields.forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(pairCols).getOrElse(return None)
     // hash60 replicated: md5 of the node id's decimal string, first 15
     // hex digits as a base-16 long (non-negative, < 2^60)
     def hash60(v: Long): Long = {
@@ -227,20 +219,11 @@ object HyperBall {
       }
       i += 1
     }
-    def snapshot(st: scala.collection.mutable.LongMap[Array[Long]]): DataFrame = {
-      val out = st.toSeq.map { case (node, arr) =>
-        org.apache.spark.sql.Row(node, arr.toSeq)
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, false),
-        org.apache.spark.sql.types.StructField("ranks",
-          org.apache.spark.sql.types.ArrayType(
-            org.apache.spark.sql.types.LongType, false), false)))
-      val slices = math.max(1, math.min(
-        s.sparkContext.defaultParallelism, out.length / 2048 + 1))
-      s.createDataFrame(s.sparkContext.parallelize(out, slices), schema)
-    }
+    val schema = DriverRegime.schema(
+      "node" -> LongType, "ranks" -> ArrayType(LongType, false))
+    def snapshot(st: scala.collection.mutable.LongMap[Array[Long]]): DataFrame =
+      DriverRegime.frame(edges.sparkSession,
+        st.toSeq.map { case (node, arr) => Row(node, arr.toSeq) }, schema)
     val buf = scala.collection.mutable.ArrayBuffer(snapshot(state))
     (1 to rounds).foreach { _ =>
       val next = scala.collection.mutable.LongMap.empty[Array[Long]]

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** K-core decomposition by iterative degree peeling — the standard
   * graph-cleaning pass before community/influence analysis (and the
@@ -65,9 +66,8 @@ object KCore {
 
   /** Two-regime driver replay of the fixed-round peel (optimization
     * round 19, guide §1.2 step 1 — the Mst/Louvain/Scc/CC precedent):
-    * under `spark.graft.kcore.driverMaxEdges` (default 2M undirected
-    * pairs; 0 disables) ONE bounded take pulls the edge list and the
-    * driver replays the IDENTICAL rounds — per round the same
+    * under the [[DriverRegime]] gate ONE bounded take pulls the edge
+    * list and the driver replays the IDENTICAL rounds — per round the same
     * surviving-degree count and the same both-endpoints-survive edge
     * filter, then the same final per-src degree aggregate. Deterministic
     * integer counting, so rows are identical by construction (GraphSpec
@@ -79,17 +79,9 @@ object KCore {
     */
   private def driverReplay(edges: DataFrame, k: Int,
       rounds: Int): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.kcore.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_KCORE_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("u"), col("v"))
-    if (!pairCols.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
+    if (!pairCols.schema.fields.forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(pairCols).getOrElse(return None)
     // symmetrized arrays; alive = survives the peel so far
     val n = rows.length
     val su = new Array[Long](n); val sv = new Array[Long](n)
@@ -123,17 +115,9 @@ object KCore {
       }
       i += 1
     }
-    val out = deg.toSeq.map { case (node, d) =>
-      org.apache.spark.sql.Row(node, d)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("deg",
-        org.apache.spark.sql.types.LongType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out, slices), schema))
+    val out = deg.toSeq.map { case (node, d) => Row(node, d) }
+    Some(DriverRegime.frame(edges.sparkSession, out,
+      DriverRegime.schema("node" -> LongType, "deg" -> LongType)))
   }
 
   /** Run-to-fixpoint audit variant: peels until the surviving edge

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Synchronous label-propagation community detection (Raghavan et al.,
   * 2007) with DETERMINISTIC semantics: every node starts in its own
@@ -65,10 +66,9 @@ object LabelProp {
   }
 
   /** Two-regime driver replay (optimization round 19, guide §1.2
-    * step 1 — the Mst/Louvain/KCore precedent): under
-    * `spark.graft.lpa.driverMaxEdges` (default 2M directed pairs; 0
-    * disables) one bounded take pulls the edge list and the driver
-    * replays the IDENTICAL synchronous rounds — per round the same
+    * step 1 — the Mst/Louvain/KCore precedent): under the
+    * [[DriverRegime]] gate one bounded take pulls the edge list and the
+    * driver replays the IDENTICAL synchronous rounds — per round the same
     * neighbor-label multiset count and the same
     * (max count, min label) plurality pick, deterministic by
     * construction, so every round state is row-identical (GraphSpec
@@ -80,17 +80,9 @@ object LabelProp {
     */
   private def driverReplayStates(edges: DataFrame,
       rounds: Int): Option[Seq[DataFrame]] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.lpa.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_LPA_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("src"), col("dst"))
-    if (!pairCols.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
+    if (!pairCols.schema.fields.forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(pairCols).getOrElse(return None)
     // symmetrized directed arrays
     val n = rows.length * 2
     val su = new Array[Long](n); val sv = new Array[Long](n)
@@ -102,19 +94,10 @@ object LabelProp {
     }
     var labels: scala.collection.mutable.LongMap[Long] = null
     val states = Seq.newBuilder[DataFrame]
-    def snapshot(l: scala.collection.mutable.LongMap[Long]): DataFrame = {
-      val out = l.toSeq.map { case (d0, lbl) =>
-        org.apache.spark.sql.Row(d0, lbl)
-      }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("node",
-          org.apache.spark.sql.types.LongType, false),
-        org.apache.spark.sql.types.StructField("community",
-          org.apache.spark.sql.types.LongType, false)))
-      val slices = math.max(1, math.min(
-        s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-      s.createDataFrame(s.sparkContext.parallelize(out, slices), schema)
-    }
+    val schema = DriverRegime.schema("node" -> LongType, "community" -> LongType)
+    def snapshot(l: scala.collection.mutable.LongMap[Long]): DataFrame =
+      DriverRegime.frame(edges.sparkSession,
+        l.toSeq.map { case (d0, lbl) => Row(d0, lbl) }, schema)
     (1 to rounds).foreach { r =>
       // neighbor-label multiset count, then (max count, min label):
       // round 1 runs under identity labels (the fused init). The count

@@ -1,8 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types.DecimalType
+import org.apache.spark.sql.types.{DecimalType, LongType}
 
 /** Newman modularity of a community partition — the SCORE half of
   * community detection (LabelProp finds the partition, this prices it;
@@ -53,7 +53,7 @@ object Modularity {
     * every operand of the gain/Q recurrences is bounded by M = Σdeg
     * (weighted: Σw), so |gain| ≤ 3·M² and |Q numerator| ≤ 2·M² — exact
     * in Long whenever M ≤ this bound (3·(1.5e9)² ≤ 6.75e18 < 2^63).
-    * The default 2M-edge driver threshold keeps M ≤ 4e6, six orders
+    * The [[DriverRegime]] threshold keeps M ≤ 2·MaxRows, six orders
     * inside; replays seeing a larger M return None and the distributed
     * decimal(38) tree runs instead of overflowing silently.
     */
@@ -191,8 +191,8 @@ object Modularity {
 
   /** Two-regime driver replay of the GENERAL half-sweep (optimization
     * round 19 — the louvainFitDriver precedent extended to the labeled
-    * step): same conf key `spark.graft.louvain.driverMaxEdges`, one
-    * bounded take of edges AND labels, then the identical recurrence
+    * step): the same [[DriverRegime]] gate, one bounded take of edges
+    * AND labels, then the identical recurrence
     * in Long (≡ the decimal(19×19→38) tree — exact under
     * [[driverLongGainMaxM]]): labels-driven community
     * degree sums with absent-degree nodes contributing 0, k_ic counts
@@ -203,20 +203,12 @@ object Modularity {
     */
   private def louvainStepDriver(edges: DataFrame, labels: DataFrame,
       parity: Int): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.louvain.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_LOUVAIN_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("src"), col("dst"))
     val lblCols = labels.select(col("node"), col("community"))
     if (!(pairCols.schema.fields ++ lblCols.schema.fields)
-        .forall(_.dataType == org.apache.spark.sql.types.LongType)) return None
-    val cap = math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1
-    val eRows = pairCols.take(cap)
-    if (eRows.length > maxEdges) return None
-    val lRows = lblCols.take(cap)
-    if (lRows.length > maxEdges) return None
+        .forall(_.dataType == LongType)) return None
+    val eRows = DriverRegime.pull(pairCols).getOrElse(return None)
+    val lRows = DriverRegime.pull(lblCols).getOrElse(return None)
     val lbl = scala.collection.mutable.LongMap.empty[Long]
     lRows.foreach(r => lbl(r.getLong(0)) = r.getLong(1))
     // deg + m over ALL edge srcs (the step's degree aggregate)
@@ -227,8 +219,8 @@ object Modularity {
     // Long gain arithmetic is EXACT under the driver threshold: every
     // operand is bounded by M = Σdeg (k_ic, k_i,a, d_c ≤ M), so
     // |gain| ≤ 3·M² — Long-safe whenever M ≤ driverLongGainMaxM
-    // (1.5e9 ⇒ 3M² ≤ 6.75e18 < 2^63). The default 2M-edge threshold
-    // puts M ≤ 2M, six orders inside the bound; a threshold raised past
+    // (1.5e9 ⇒ 3M² ≤ 6.75e18 < 2^63). The DriverRegime threshold puts
+    // M ≤ MaxRows, six orders inside the bound; a threshold raised past
     // it falls back to the distributed decimal(38) tree rather than
     // overflowing silently.
     if (m > driverLongGainMaxM) return None
@@ -277,21 +269,11 @@ object Modularity {
         case Some(g0) if g0 > 0 => (bestC(node), g0)
         case _ => (com, 0L)
       }
-      org.apache.spark.sql.Row(node, com, nc,
-        java.math.BigDecimal.valueOf(g))
+      Row(node, com, nc, java.math.BigDecimal.valueOf(g))
     }.toSeq
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("community",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("new_community",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("gain_num",
-        org.apache.spark.sql.types.DecimalType(38, 0), false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession, out, DriverRegime.schema(
+      "node" -> LongType, "community" -> LongType,
+      "new_community" -> LongType, "gain_num" -> DecimalType(38, 0))))
   }
 
   private def louvainStepDistributed(edges: DataFrame, labels: DataFrame,
@@ -486,25 +468,17 @@ object Modularity {
       .agg(count(lit(1)).as("w"))
   }
 
-  /** Two-regime driver replay of [[coarsen]] (same conf key): counts
+  /** Two-regime driver replay of [[coarsen]] (same gate): counts
     * per (label(src), label(dst)) over edges whose BOTH endpoints are
     * labeled — the inner-join semantics replicated. */
   private def coarsenDriver(edges: DataFrame,
       labels: DataFrame): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.louvain.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_LOUVAIN_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("src"), col("dst"))
     val lblCols = labels.select(col("node"), col("community"))
     if (!(pairCols.schema.fields ++ lblCols.schema.fields)
-        .forall(_.dataType == org.apache.spark.sql.types.LongType)) return None
-    val cap = math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1
-    val eRows = pairCols.take(cap)
-    if (eRows.length > maxEdges) return None
-    val lRows = lblCols.take(cap)
-    if (lRows.length > maxEdges) return None
+        .forall(_.dataType == LongType)) return None
+    val eRows = DriverRegime.pull(pairCols).getOrElse(return None)
+    val lRows = DriverRegime.pull(lblCols).getOrElse(return None)
     val lbl = scala.collection.mutable.LongMap.empty[Long]
     lRows.foreach(r => lbl(r.getLong(0)) = r.getLong(1))
     val agg = new PairCount(eRows.length)
@@ -514,43 +488,26 @@ object Modularity {
         case _ => ()
       }
     }
-    val out = Seq.newBuilder[org.apache.spark.sql.Row]
+    val out = Seq.newBuilder[Row]
     out.sizeHint(agg.size)
     var ji = 0
     while (ji < agg.capacity) {
       if (agg.isUsed(ji))
-        out += org.apache.spark.sql.Row(agg.keyA(ji), agg.keyB(ji),
-          agg.value(ji))
+        out += Row(agg.keyA(ji), agg.keyB(ji), agg.value(ji))
       ji += 1
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("c_src",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("c_dst",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("w",
-        org.apache.spark.sql.types.LongType, false)))
-    val outSeq = out.result()
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, outSeq.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(outSeq, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession, out.result(),
+      DriverRegime.schema("c_src" -> LongType, "c_dst" -> LongType,
+        "w" -> LongType)))
   }
 
-  /** Two-regime driver replay of the fixed-2-level driver (same conf
-    * key; the louvainFitDriver machinery specialized to exactly two
+  /** Two-regime driver replay of the fixed-2-level driver (same gate;
+    * the louvainFitDriver machinery specialized to exactly two
     * identity-labeled levels and the (node, c1, c2) projection). */
   private def louvainMultiDriver(edges: DataFrame): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.louvain.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_LOUVAIN_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("src"), col("dst"))
-    if (!pairCols.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
+    if (!pairCols.schema.fields.forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(pairCols).getOrElse(return None)
     val eSrc = rows.map(_.getLong(0)); val eDst = rows.map(_.getLong(1))
     // Long-gain bound (see driverLongGainMaxM): M = Σw is invariant
     // under contraction, and level 1 has w ≡ 1, so one check of the
@@ -610,19 +567,10 @@ object Modularity {
       ji += 1
     }
     val l2 = identityMove(gs, gd, gw)
-    val out = l1.toSeq.map { case (node, c1) =>
-      org.apache.spark.sql.Row(node, c1, l2(c1))
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("c1",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("c2",
-        org.apache.spark.sql.types.LongType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession,
+      l1.toSeq.map { case (node, c1) => Row(node, c1, l2(c1)) },
+      DriverRegime.schema("node" -> LongType, "c1" -> LongType,
+        "c2" -> LongType)))
   }
 
   /** [[score]] for a WEIGHTED graph (src, dst, w) — intra mass and
@@ -772,8 +720,7 @@ object Modularity {
 
   /** Two-regime driver replay of the full free-convergence ladder
     * (optimization round 19, guide §1.2 step 1 — the Mst/Scc/CC
-    * precedent): under `spark.graft.louvain.driverMaxEdges` (default 2M
-    * directed pairs ≈ 32 MB of longs; 0 disables) ONE bounded take
+    * precedent): under the [[DriverRegime]] gate ONE bounded take
     * pulls the deduplicated symmetric edge list and the driver replays
     * the IDENTICAL recurrence level for level — the same
     * parity-0 half-sweep gains in exact integers (Long ≡ the
@@ -794,17 +741,9 @@ object Modularity {
     */
   private def louvainFitDriver(edges: DataFrame, maxLevels: Int,
       patience: Int): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.louvain.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_LOUVAIN_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val pairCols = edges.select(col("src"), col("dst"))
-    if (!pairCols.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = pairCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
+    if (!pairCols.schema.fields.forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(pairCols).getOrElse(return None)
     // Long-gain bound (see driverLongGainMaxM): M = Σw is invariant
     // under contraction and level 1 has w ≡ 1
     if (rows.length.toLong > driverLongGainMaxM) return None
@@ -905,17 +844,9 @@ object Modularity {
         level += 1
       }
     }
-    val out = best.toSeq.map { case (node, c) =>
-      org.apache.spark.sql.Row(node, c)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("community",
-        org.apache.spark.sql.types.LongType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession,
+      best.toSeq.map { case (node, c) => Row(node, c) },
+      DriverRegime.schema("node" -> LongType, "community" -> LongType)))
   }
 
   private def louvainFitDistributed(edges: DataFrame, maxLevels: Int,

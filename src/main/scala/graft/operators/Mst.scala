@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Minimum spanning forest via Borůvka's algorithm (Borůvka 1926; the
   * textbook distributed MST — each round every component picks its
@@ -57,8 +58,8 @@ object Mst {
 
   /** The two-regime driver replay (optimization round 19, guide §1.2
     * step 1 — the [[Scc.scc]] / [[ConnectedComponents.run]] precedent):
-    * under `spark.graft.mst.driverMaxEdges` (default 2M canonical
-    * edges ≈ 48 MB of longs; 0 disables), ONE bounded incremental take
+    * under the [[DriverRegime]] gate (≈ 48 MB of canonical-edge longs
+    * at the threshold), ONE bounded incremental take
     * pulls the already-checkpointed canonical edge list and the driver
     * replays the IDENTICAL fixed-round recurrence — per round the same
     * min-(w, a, b)-struct pick per component, the same distinct on the
@@ -75,15 +76,8 @@ object Mst {
     */
   private def driverReplay(s: SparkSession, canon: DataFrame,
       rounds: Int): Option[DataFrame] = {
-    val maxEdges = s.conf.getOption("spark.graft.mst.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_MST_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
-    if (!canon.schema.fields.forall(
-        _.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = canon.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
+    if (!canon.schema.fields.forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(canon).getOrElse(return None)
     val ea = rows.map(_.getLong(0)); val eb = rows.map(_.getLong(1))
     val ew = rows.map(_.getLong(2))
     val comp = scala.collection.mutable.LongMap.empty[Long]
@@ -158,17 +152,9 @@ object Mst {
       s"Borůvka under-ran: $left cross-component edges after $rounds " +
         "rounds — raise the round count for this graph")
     val out = mst.sortBy(t => (t._1, t._2))
-      .map { case (a, b, w) => org.apache.spark.sql.Row(a, b, w) }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("a",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("b",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("w",
-        org.apache.spark.sql.types.LongType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out.toSeq, slices), schema)
+      .map { case (a, b, w) => Row(a, b, w) }
+    Some(DriverRegime.frame(s, out.toSeq,
+      DriverRegime.schema("a" -> LongType, "b" -> LongType, "w" -> LongType))
       .orderBy("a", "b"))
   }
 

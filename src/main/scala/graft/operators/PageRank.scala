@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Distributed PageRank in FIXED-POINT integer arithmetic.
   *
@@ -167,10 +168,9 @@ object PageRank {
 
   /** Two-regime driver replay of the rank iterations (optimization
     * round 19, guide §1.2 step 1 — the family-wide precedent): under
-    * `spark.graft.pagerank.driverMaxEdges` (default 2M directed pairs;
-    * 0 disables; only the AUTO broadcast regime — an explicit
-    * `broadcastRanks` is a caller forcing a distributed path) one
-    * bounded take pulls the edge list (and seed set for the
+    * the [[DriverRegime]] gate (only the AUTO broadcast regime — an
+    * explicit `broadcastRanks` is a caller forcing a distributed path)
+    * one bounded take pulls the edge list (and seed set for the
     * personalized form) and the driver replays the IDENTICAL
     * fixed-point integer recurrence: the same `rank DIV outdeg`
     * (or `(rank·w) DIV strength`) floor contributions, the same
@@ -182,26 +182,18 @@ object PageRank {
     */
   private def driverReplay(edges: DataFrame, seeds: Option[DataFrame],
       iters: Int, weighted: Boolean): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.pagerank.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_PAGERANK_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val eCols =
       if (weighted) edges.select(col("src"), col("dst"), col("w"))
       else edges.select(col("src"), col("dst"))
     val seedCol = seeds.map(_.select(col("node")))
     if (!(eCols.schema.fields ++
         seedCol.map(_.schema.fields).getOrElse(Array.empty))
-        .forall(_.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = eCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
+        .forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(eCols).getOrElse(return None)
     val seedSet = scala.collection.mutable.LongMap.empty[Unit]
     seedCol.foreach { sc =>
-      val sr = sc.distinct().take(1000001)
-      if (sr.length > 1000000) return None
-      sr.foreach(r => seedSet(r.getLong(0)) = ())
+      DriverRegime.pull(sc.distinct(), cap = 1000000).getOrElse(return None)
+        .foreach(r => seedSet(r.getLong(0)) = ())
     }
     val n = rows.length
     val es = new Array[Long](n); val ed = new Array[Long](n)
@@ -239,17 +231,9 @@ object PageRank {
         ranks(v) = sOf(v) * 150000L + (850L * sc.getOrElse(v, 0L)) / 1000L
       }
     }
-    val out = ranks.toSeq.map { case (node, r) =>
-      org.apache.spark.sql.Row(node, r)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("rank",
-        org.apache.spark.sql.types.LongType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession,
+      ranks.toSeq.map { case (node, r) => Row(node, r) },
+      DriverRegime.schema("node" -> LongType, "rank" -> LongType)))
   }
 
   /** Static per-iteration edge relation: (src, dst, outdeg). */

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Strongly connected components of a DIRECTED graph — the
   * trim + forward-coloring + backward-settle algorithm (the
@@ -48,34 +49,23 @@ object Scc {
     // the edge build (often a window+distinct subtree) feeds the node
     // derivation AND the first alive filter — materialize it ONCE
     val edges = edgesIn.localCheckpoint(true)
-    // optimization round 19 (guide §1.2 step 1): the
-    // ConnectedComponents.smallGraphLabels two-regime gate, applied to
-    // the fixed-round ladder itself. The 18-round trim/color/settle
-    // chain is ~20 sequential checkpoint actions of tiny frames — the
-    // scc staging built in 22.7 s at sf0.1 with nearly all of it
-    // per-job scheduling/planning floor. A sub-threshold graph replays
-    // the IDENTICAL recurrence on the driver (same rounds, same
-    // synchronous min-label updates, same batch-settle sets, same
-    // absent-if-unsettled contract — GraphSpec's cycle+DAG toy pins
-    // exactly the peel-1 absence semantics); larger graphs take the
-    // distributed ladder unchanged.
-    val maxEdges = edges.sparkSession.conf
-      .getOption("spark.graft.scc.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_SCC_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    val longKeyed = edges.select(col("src"), col("dst")).schema.fields
-      .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    val fastRows: Option[Array[(Long, Long)]] =
-      if (maxEdges > 0 && longKeyed) {
-        val rows = edges.select(col("src"), col("dst")).take(
-          math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-        if (rows.length <= maxEdges)
-          Some(rows.map(r => (r.getLong(0), r.getLong(1))))
-        else None
-      } else None
-    if (fastRows.isDefined)
-      return sccDriver(edges.sparkSession, fastRows.get,
-        trimRounds, propRounds, peels)
+    // optimization round 19 (guide §1.2 step 1): the [[DriverRegime]]
+    // two-regime gate, applied to the fixed-round ladder itself. The
+    // 18-round trim/color/settle chain is ~20 sequential checkpoint
+    // actions of tiny frames — the scc staging built in 22.7 s at sf0.1
+    // with nearly all of it per-job scheduling/planning floor. A
+    // sub-threshold graph replays the IDENTICAL recurrence on the
+    // driver (same rounds, same synchronous min-label updates, same
+    // batch-settle sets, same absent-if-unsettled contract — GraphSpec's
+    // cycle+DAG toy pins exactly the peel-1 absence semantics in both
+    // regimes); larger graphs take the distributed ladder unchanged.
+    val pairCols = edges.select(col("src"), col("dst"))
+    if (pairCols.schema.fields.forall(_.dataType == LongType))
+      DriverRegime.pull(pairCols).foreach { rows =>
+        return sccDriver(edges.sparkSession,
+          rows.map(r => (r.getLong(0), r.getLong(1))),
+          trimRounds, propRounds, peels)
+      }
     val nodes = edges.select(col("src").as("v"))
       .union(edges.select(col("dst").as("v")))
       .distinct().localCheckpoint(true)
@@ -210,14 +200,7 @@ object Scc {
         alive = nextAlive
       }
     }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("scc_id",
-        org.apache.spark.sql.types.LongType, false)))
-    val rows = settled.map(t => org.apache.spark.sql.Row(t._1, t._2))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, rows.length / 4096 + 1))
-    s.createDataFrame(s.sparkContext.parallelize(rows.toSeq, slices), schema)
+    DriverRegime.frame(s, settled.map(t => Row(t._1, t._2)).toSeq,
+      DriverRegime.schema("node" -> LongType, "scc_id" -> LongType))
   }
 }

@@ -1,7 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 /** Weighted single-source (multi-seed) shortest paths — fixed-round
   * distributed Bellman-Ford, the weighted twin of [[Bfs]] and the
@@ -67,28 +68,21 @@ object Sssp {
   }
 
   /** Two-regime driver replay (optimization round 19 — the family-wide
-    * precedent): under `spark.graft.sssp.driverMaxEdges` (default 2M;
-    * 0 disables) the driver replays the identical delta Bellman-Ford
-    * rounds — distance is a min over integer path weights,
+    * precedent): under the [[DriverRegime]] gate the driver replays the
+    * identical delta Bellman-Ford rounds — distance is a min over
+    * integer path weights,
     * schedule-free, so rows are identical; the fixed round count bounds
     * the path length exactly as distributed.
     */
   private def driverReplay(edges: DataFrame, seeds: DataFrame,
       rounds: Int): Option[DataFrame] = {
-    val s = edges.sparkSession
-    val maxEdges = s.conf.getOption("spark.graft.sssp.driverMaxEdges")
-      .orElse(sys.env.get("SPARK_GRAFT_SSSP_DRIVER_MAX_EDGES"))
-      .map(_.trim.toLong).getOrElse(2000000L)
-    if (maxEdges <= 0) return None
     val eCols = edges.select(col("src"), col("dst"), col("w"))
     val seedCol = seeds.select(col("node"))
     if (!(eCols.schema.fields ++ seedCol.schema.fields)
-        .forall(_.dataType == org.apache.spark.sql.types.LongType)) return None
-    val rows = eCols.take(
-      math.min(maxEdges, Int.MaxValue.toLong - 1).toInt + 1)
-    if (rows.length > maxEdges) return None
-    val seedRows = seedCol.distinct().take(100001)
-    if (seedRows.length > 100000) return None
+        .forall(_.dataType == LongType)) return None
+    val rows = DriverRegime.pull(eCols).getOrElse(return None)
+    val seedRows = DriverRegime.pull(seedCol.distinct(), cap = 100000)
+      .getOrElse(return None)
     val adj = scala.collection.mutable.LongMap
       .empty[scala.collection.mutable.ArrayBuffer[(Long, Long)]]
     rows.foreach { r =>
@@ -117,17 +111,9 @@ object Sssp {
       changed = next
       i += 1
     }
-    val out = dist.toSeq.map { case (node, d0) =>
-      org.apache.spark.sql.Row(node, d0)
-    }
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("node",
-        org.apache.spark.sql.types.LongType, false),
-      org.apache.spark.sql.types.StructField("d",
-        org.apache.spark.sql.types.LongType, false)))
-    val slices = math.max(1, math.min(
-      s.sparkContext.defaultParallelism, out.length / 4096 + 1))
-    Some(s.createDataFrame(s.sparkContext.parallelize(out, slices), schema))
+    Some(DriverRegime.frame(edges.sparkSession,
+      dist.toSeq.map { case (node, d0) => Row(node, d0) },
+      DriverRegime.schema("node" -> LongType, "d" -> LongType)))
   }
 
   /** Run-to-fixpoint audit variant: relaxes until no distance improves

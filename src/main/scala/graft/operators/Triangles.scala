@@ -76,20 +76,13 @@ object Triangles {
     val adj = if (eager) adj0.localCheckpoint(true) else adj0
     // two-regime probe (the PageRank.chooseBroadcast discipline): the
     // adjacency is O(V + E) rows/entries, so it broadcasts only under
-    // `spark.graft.triangles.broadcastMaxEdges` (conf/env, default 2M
-    // oriented edges ≈ 16 MB of packed longs; 0 disables). Below the
-    // threshold the probe joins become broadcast hash joins and the
-    // CPU-heavy intersection pass inherits o's full p-way layout —
-    // AQE had coalesced the sort-merge exchange to 10 tasks (1.6 s of
-    // a 5.4 s warm JobProfile). Above it, the distributed shape is
-    // unchanged.
-    val bcastAdj = eager && {
-      val maxE = e.sparkSession.conf
-        .getOption("spark.graft.triangles.broadcastMaxEdges")
-        .orElse(sys.env.get("SPARK_GRAFT_TRIANGLES_BROADCAST_MAX_EDGES"))
-        .map(_.trim.toLong).getOrElse(2000000L)
-      maxE > 0 && e.count() <= maxE
-    }
+    // the [[DriverRegime]] count gate (≈ 16 MB of packed longs at the
+    // threshold). Below the threshold the probe joins become broadcast
+    // hash joins and the CPU-heavy intersection pass inherits o's full
+    // p-way layout — AQE had coalesced the sort-merge exchange to 10
+    // tasks (1.6 s of a 5.4 s warm JobProfile). Above it, the
+    // distributed shape is unchanged.
+    val bcastAdj = eager && DriverRegime.fits(e.sparkSession, e.count())
     def probeSide(d: DataFrame) = if (bcastAdj) broadcast(d) else d
     val probed = o
       .join(probeSide(adj.select(col("node").as("src"), col("nbrs").as("nu"))),

@@ -1,8 +1,10 @@
 package graft.queries
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 import graft.Tables
+import graft.operators.DriverRegime
 import graft.queries.QueryHelpers.{rnd, rndSql}
 
 /** Graph analytics over relations derived from the fixtures. Together
@@ -244,60 +246,10 @@ object GraphQueries {
         .localCheckpoint(true) // feeds out-degree AND every depth round
       val outdeg = cond.groupBy(col("s_s").as("scc_id"))
         .agg(count(lit(1)).as("n_out"))
-      // the fixed 6 max-prop rounds, two-regime (optimization round 19,
-      // the Scc.sccDriver pattern): the condensation is |SCC|-sized, so
-      // under the scc driver threshold the IDENTICAL synchronous
-      // recurrence replays on the collected cond edges — depths for
-      // SCCs untouched by any super-edge are 0 in both forms (the
-      // distributed init seeds every scc_id with 0 and max-prop only
-      // raises reachable ones), so the driver branch joins LEFT +
-      // coalesce(0) where the distributed branch joins the full init
-      val maxE = s.conf.getOption("spark.graft.scc.driverMaxEdges")
-        .orElse(sys.env.get("SPARK_GRAFT_SCC_DRIVER_MAX_EDGES"))
-        .map(_.trim.toLong).getOrElse(2000000L)
-      val condRows =
-        if (maxE > 0) cond.take(math.min(maxE, Int.MaxValue.toLong - 1).toInt + 1)
-        else Array.empty[org.apache.spark.sql.Row]
-      val depthDf =
-        if (maxE > 0 && condRows.length <= maxE) {
-          var m = scala.collection.mutable.LongMap.empty[Long]
-          condRows.foreach { r =>
-            m.getOrElseUpdate(r.getLong(0), 0L)
-            m.getOrElseUpdate(r.getLong(1), 0L)
-          }
-          (1 to 6).foreach { _ =>
-            val next = m.clone()
-            condRows.foreach { r =>
-              val cand = m(r.getLong(0)) + 1L
-              if (cand > next(r.getLong(1))) next.update(r.getLong(1), cand)
-            }
-            m = next
-          }
-          val sch = org.apache.spark.sql.types.StructType(Seq(
-            org.apache.spark.sql.types.StructField("scc_id",
-              org.apache.spark.sql.types.LongType, false),
-            org.apache.spark.sql.types.StructField("depth0",
-              org.apache.spark.sql.types.LongType, false)))
-          s.createDataFrame(s.sparkContext.parallelize(
-            m.toSeq.map(t => org.apache.spark.sql.Row(t._1, t._2)),
-            math.max(1, math.min(s.sparkContext.defaultParallelism,
-              m.size / 4096 + 1))), sch)
-        } else {
-          var d = lbl.select(col("scc_id").as("v")).distinct()
-            .withColumn("d", lit(0L))
-          (1 to 6).foreach { _ =>
-            d = d.unionAll(
-                cond.join(d.select(col("v").as("s_s"), col("d")), "s_s")
-                  .select(col("s_d").as("v"), (col("d") + lit(1L)).as("d")))
-              .groupBy(col("v")).agg(max(col("d")).as("d"))
-              .localCheckpoint(true)
-          }
-          d.select(col("v").as("scc_id"), col("d").as("depth0"))
-        }
       lbl.groupBy(col("scc_id")).agg(count(lit(1)).as("n_nodes"))
         .join(internal, Seq("scc_id"), "left")
         .join(outdeg, Seq("scc_id"), "left")
-        .join(depthDf, Seq("scc_id"), "left")
+        .join(condenseDepths(lbl, cond, rounds = 6), Seq("scc_id"), "left")
         .select(col("scc_id"), col("n_nodes"),
           coalesce(col("n_internal"), lit(0L)).as("n_internal"),
           coalesce(col("n_out"), lit(0L)).as("n_out"),
@@ -560,6 +512,50 @@ object GraphQueries {
     pairs.select(col("sup").as("src"), col("prt").as("dst"), col("w"))
       .unionAll(pairs.select(col("prt").as("src"), col("sup").as("dst"), col("w")))
   }
+
+  /** (scc_id, depth0): the longest path from any source SCC over the
+    * condensation edges `cond` (s_s, s_d), by `rounds` synchronous
+    * max-prop rounds from depth 0 — graph_scc_condense's depth.
+    * Two-regime (the Scc.sccDriver pattern): the condensation is
+    * |SCC|-sized, so under the [[graft.operators.DriverRegime]] gate
+    * the IDENTICAL synchronous recurrence replays on the collected
+    * cond edges. Depths of SCCs untouched by any super-edge are 0 in
+    * both forms (the distributed init seeds every scc_id of `lbl` with
+    * 0 and max-prop only raises reachable ones), so the driver branch
+    * omits them and the caller joins LEFT + coalesce(0).
+    */
+  private[graft] def condenseDepths(lbl: DataFrame, cond: DataFrame,
+      rounds: Int): DataFrame =
+    DriverRegime.pull(cond) match {
+      case Some(condRows) =>
+        var m = scala.collection.mutable.LongMap.empty[Long]
+        condRows.foreach { r =>
+          m.getOrElseUpdate(r.getLong(0), 0L)
+          m.getOrElseUpdate(r.getLong(1), 0L)
+        }
+        (1 to rounds).foreach { _ =>
+          val next = m.clone()
+          condRows.foreach { r =>
+            val cand = m(r.getLong(0)) + 1L
+            if (cand > next(r.getLong(1))) next.update(r.getLong(1), cand)
+          }
+          m = next
+        }
+        DriverRegime.frame(cond.sparkSession,
+          m.toSeq.map(t => Row(t._1, t._2)),
+          DriverRegime.schema("scc_id" -> LongType, "depth0" -> LongType))
+      case None =>
+        var d = lbl.select(col("scc_id").as("v")).distinct()
+          .withColumn("d", lit(0L))
+        (1 to rounds).foreach { _ =>
+          d = d.unionAll(
+              cond.join(d.select(col("v").as("s_s"), col("d")), "s_s")
+                .select(col("s_d").as("v"), (col("d") + lit(1L)).as("d")))
+            .groupBy(col("v")).agg(max(col("d")).as("d"))
+            .localCheckpoint(true)
+        }
+        d.select(col("v").as("scc_id"), col("d").as("depth0"))
+    }
 
   /** Unrolled trim + coloring SCC rounds — the exact Scc.scc chain:
     * `trimRounds` alive-set reductions (keep nodes with an in-edge AND

@@ -46,8 +46,7 @@ class GraphSpec extends SparkSpec {
     val drvP = graft.operators.PageRank
       .runPersonalized(edgesDf, seeds, iters = 3)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    spark.conf.set("spark.graft.pagerank.driverMaxEdges", "0")
-    try {
+    withDistributed {
       val dist = graft.operators.PageRank.run(edgesDf, iters = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist == got, "pagerank distributed != driver replay")
@@ -59,7 +58,7 @@ class GraphSpec extends SparkSpec {
         .runPersonalized(edgesDf, seeds, iters = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(distP == drvP, "personalized pagerank distributed != driver replay")
-    } finally spark.conf.unset("spark.graft.pagerank.driverMaxEdges")
+    }
   }
 
   test("degree-ordered triangle count equals known enumeration") {
@@ -73,14 +72,13 @@ class GraphSpec extends SparkSpec {
       .map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got == Map(1L -> 3L, 2L -> 3L, 3L -> 3L, 4L -> 3L))
     // two-regime pin (optimization round 19): the broadcast-adjacency
-    // probe (the default under spark.graft.triangles.broadcastMaxEdges)
+    // probe (the default under the DriverRegime count gate)
     // must equal the distributed sort-merge probe exactly
-    spark.conf.set("spark.graft.triangles.broadcastMaxEdges", "0")
-    try {
+    withDistributed {
       val dist = graft.operators.Triangles.countPerNode(edges).collect()
         .map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist == got, "distributed probe != broadcast probe")
-    } finally spark.conf.unset("spark.graft.triangles.broadcastMaxEdges")
+    }
   }
 
   test("k-core: fixed rounds under-peel a long path; converged form is exact") {
@@ -118,12 +116,11 @@ class GraphSpec extends SparkSpec {
     exact.values.foreach(d => assert(d >= 3L, "every 3-core degree >= 3"))
     // two-regime gate (optimization round 19): the distributed peel
     // must produce the identical (node, deg) rows as the driver replay
-    spark.conf.set("spark.graft.kcore.driverMaxEdges", "0")
-    try {
+    withDistributed {
       val dist = graft.operators.KCore.peel(edges, k = 3, rounds = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist == fixed, "distributed peel != driver replay")
-    } finally spark.conf.unset("spark.graft.kcore.driverMaxEdges")
+    }
   }
 
   test("graph_bfs's fixed-3 frontier reaches the true fixpoint on the fixture") {
@@ -144,12 +141,11 @@ class GraphSpec extends SparkSpec {
     assert(fixed == exact,
       "fixed-3 must equal the converged reach on the fixture supply graph")
     // two-regime driver gate (optimization round 19)
-    spark.conf.set("spark.graft.bfs.driverMaxEdges", "0")
-    try {
+    withDistributed {
       val dist = graft.operators.Bfs.run(edges, seeds, rounds = 3)
         .collect().map(r => r.getLong(0) -> r.getInt(1)).toMap
       assert(dist == fixed, "bfs distributed != driver replay")
-    } finally spark.conf.unset("spark.graft.bfs.driverMaxEdges")
+    }
   }
 
   test("sssp: fixed-3 is hop-bounded on the fixture; the converged audit finds the cheaper routes") {
@@ -173,12 +169,11 @@ class GraphSpec extends SparkSpec {
     assert(fixed == exact,
       "fixed-3 must equal the converged shortest paths on the sf0.001 fixture")
     // two-regime driver gate (optimization round 19)
-    spark.conf.set("spark.graft.sssp.driverMaxEdges", "0")
-    try {
+    withDistributed {
       val dist = graft.operators.Sssp.run(edges, seeds, rounds = 3)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist == fixed, "sssp distributed != driver replay")
-    } finally spark.conf.unset("spark.graft.sssp.driverMaxEdges")
+    }
   }
 
   test("bfs: hop distances on a directed path, frontier stops at rounds") {
@@ -574,8 +569,7 @@ class GraphSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
       .sortBy(t => (t._1, t._2)).toSeq
     val (drvStep, drvCoarsen) = (stepRows(), coarsenRows())
-    spark.conf.set("spark.graft.louvain.driverMaxEdges", "0")
-    try {
+    withDistributed {
       val dist = Modularity.louvainFit(edges)
         .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1).toSeq
       assert(dist == fit.sortBy(_._1), "distributed ladder != driver replay")
@@ -588,7 +582,7 @@ class GraphSpec extends SparkSpec {
       assert(stepRows() == drvStep, "distributed step != driver replay")
       assert(coarsenRows() == drvCoarsen,
         "distributed coarsen != driver replay")
-    } finally spark.conf.unset("spark.graft.louvain.driverMaxEdges")
+    }
   }
 
   test("labeled nodes with no outgoing edges survive the step and the score (gain 0)") {
@@ -688,13 +682,12 @@ class GraphSpec extends SparkSpec {
     // per ROUND, both broadcast regimes
     val driverStates = graft.operators.LabelProp.runStates(edges, rounds = 3)
       .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
-    spark.conf.set("spark.graft.lpa.driverMaxEdges", "0")
-    try {
+    withDistributed {
       val distStates = graft.operators.LabelProp.runStates(edges, rounds = 3)
         .map(_.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
       assert(driverStates == distStates,
         "LPA driver replay != distributed rounds")
-    } finally spark.conf.unset("spark.graft.lpa.driverMaxEdges")
+    }
     def cc(bc: Boolean) = ConnectedComponents.runWithRounds(edges,
         maxIters = 32, broadcastLabels = Some(bc))._1
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
@@ -745,6 +738,34 @@ class GraphSpec extends SparkSpec {
       "pinned broadcast regime lost its broadcast join")
     assert(!roundPlan(false).contains("BroadcastHashJoin"),
       "sketch state must not broadcast above the cap")
+  }
+
+  test("hyperball: driver replay == distributed packed states, round by round") {
+    import graft.operators.HyperBall
+    val pairs = Tables.lineitem(spark, sf)
+      .select(col("l_suppkey").as("sup"),
+        (lit(100000L) + col("l_partkey")).as("prt"))
+      .distinct()
+    val edges = pairs.select(col("sup").as("src"), col("prt").as("dst"))
+      .union(pairs.select(col("prt").as("src"), col("sup").as("dst")))
+      .coalesce(1).localCheckpoint(true)
+    val rounds = 3
+    // jobs counted over the state build only (the per-round collects
+    // run in both regimes)
+    def states(): (Seq[Map[Long, Seq[Long]]], Int) = {
+      val (sts, jobs) = countingJobs(HyperBall.packedStates(edges, rounds,
+        eager = true, broadcastSketches = None, broadcastMaxNodes = 5000000L))
+      (sts.map(_.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap), jobs)
+    }
+    val (drv, drvJobs) = states()
+    val (dist, distJobs) = withDistributed(states())
+    assert(drv.length == rounds + 1 && dist.length == rounds + 1)
+    drv.zip(dist).zipWithIndex.foreach { case ((d, x), r) =>
+      assert(x == d, s"round $r: distributed state != driver replay") }
+    // non-vacuity: the distributed loop materializes the initial state
+    // and every round; the replay is one bounded pull
+    assert(distJobs > rounds, s"distributed rounds ran only $distJobs jobs")
+    assert(drvJobs < rounds, s"driver replay ran $drvJobs jobs")
   }
 
   test("hyperball: estimates grow with radius and track true ball sizes") {
@@ -965,8 +986,7 @@ class GraphSpec extends SparkSpec {
       .forward(diamond, Seq(1L).toDF("node"), rounds = 3)
       .collect().map(r =>
         (r.getLong(0), r.getLong(1)) -> (r.getInt(2), r.getLong(3))).toMap
-    spark.conf.set("spark.graft.brandes.driverMaxEdges", "0")
-    try {
+    withDistributed {
       assert(run(path, Seq(1L, 5L)) == drvBc,
         "backward driver replay != distributed")
       val distFw = graft.operators.Betweenness
@@ -974,7 +994,7 @@ class GraphSpec extends SparkSpec {
         .collect().map(r =>
           (r.getLong(0), r.getLong(1)) -> (r.getInt(2), r.getLong(3))).toMap
       assert(distFw == drvFw, "forward driver replay != distributed")
-    } finally spark.conf.unset("spark.graft.brandes.driverMaxEdges")
+    }
   }
 
   /** Iterative Tarjan — the classic single-machine SCC ground truth
@@ -1104,6 +1124,78 @@ class GraphSpec extends SparkSpec {
     assert(got1.keySet == want.keySet -- Set(10L, 11L))
   }
 
+  test("SCC: driver replay == distributed ladder on the fixture flow graph and the cycle+DAG toy") {
+    import spark.implicits._
+    import graft.operators.Scc
+    def labels(edges: org.apache.spark.sql.DataFrame, peels: Int,
+        trim: Int, prop: Int): (Map[Long, Long], Int) = countingJobs(
+      Scc.scc(edges, trimRounds = trim, propRounds = prop, peels = peels)
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap)
+    // the registered depths (StagedLayouts.sccLabels) on the flow graph
+    val flow = graft.queries.GraphQueries.flowEdges(spark, sf)
+      .coalesce(1).localCheckpoint(true)
+    val (drv, drvJobs) = labels(flow, peels = 1, trim = 6, prop = 6)
+    val (dist, distJobs) = withDistributed(labels(flow, peels = 1, trim = 6, prop = 6))
+    assert(dist == drv, "SCC distributed ladder != driver replay on the flow graph")
+    // non-vacuity: the ladder checkpoints every trim and both
+    // propagation passes' rounds; the replay is a pull and a collect
+    assert(distJobs >= 6 + 2 * 6, s"distributed ladder ran only $distJobs jobs")
+    assert(drvJobs < 6 + 2 * 6, s"driver replay ran $drvJobs jobs")
+    // the toy's fixed-depth contract in both regimes: one peel leaves
+    // the dominated cycle {10, 11} ABSENT, two peels settle it; the
+    // 5-ring 100→…→104→100 needs exactly 4 propagation rounds, so 3
+    // leave part of it absent
+    val ring = (100L to 104L).map(i => (i, if (i == 104L) 100L else i + 1))
+    val toy = (Seq((1L, 2L), (2L, 3L), (3L, 1L), (3L, 10L), (10L, 11L),
+      (11L, 10L), (11L, 20L), (20L, 21L), (30L, 31L)) ++ ring).toDF("src", "dst")
+    Seq((1, 4), (2, 4), (1, 3)).foreach { case (peels, prop) =>
+      val (d, _) = labels(toy, peels, trim = 4, prop = prop)
+      val (x, xJobs) = withDistributed(labels(toy, peels, trim = 4, prop = prop))
+      assert(x == d, s"toy peels=$peels prop=$prop: distributed $x != driver $d")
+      assert(xJobs >= 4 + 2 * prop, s"toy peels=$peels prop=$prop ran only $xJobs jobs")
+      if (prop == 4) {
+        assert(x.contains(10L) == (peels == 2) && x.contains(11L) == (peels == 2),
+          s"toy peels=$peels: dominated cycle settled wrongly: $x")
+        assert((100L to 104L).forall(x.get(_).contains(100L)),
+          s"toy peels=$peels: 4 rounds must settle the 5-ring: $x")
+      } else assert(!(100L to 104L).forall(x.contains),
+        s"3 rounds cannot settle the 5-ring: $x")
+    }
+  }
+
+  test("SCC condensation depth: driver replay == distributed max-prop rounds") {
+    import spark.implicits._
+    // a chain 1→2→…→8 longer than the 6 rounds (7 and 8 stop at depth
+    // 6 in both forms), the shortcut 1→3, a second source 20→4, and
+    // SCC 9 touched by no super-edge (absent from the driver frame,
+    // depth 0 through the caller's LEFT join + coalesce)
+    val lbl = (Seq(9L, 20L) ++ (1L to 8L)).toDF("scc_id")
+    val cond = ((1L until 8L).map(i => (i, i + 1)) ++ Seq((1L, 3L), (20L, 4L)))
+      .toDF("s_s", "s_d")
+    def depths(): (Map[Long, Long], Int) = {
+      val (d, jobs) = countingJobs(
+        graft.queries.GraphQueries.condenseDepths(lbl, cond, rounds = 6))
+      (lbl.join(d, Seq("scc_id"), "left")
+        .select(col("scc_id"), coalesce(col("depth0"), lit(0L)))
+        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap, jobs)
+    }
+    val want = Map(1L -> 0L, 2L -> 1L, 3L -> 2L, 4L -> 3L, 5L -> 4L, 6L -> 5L,
+      7L -> 6L, 8L -> 6L, 9L -> 0L, 20L -> 0L)
+    val (drv, drvJobs) = depths()
+    val (dist, distJobs) = withDistributed(depths())
+    assert(drv == want, s"driver depth replay: $drv")
+    assert(dist == want, s"distributed depth rounds: $dist")
+    // non-vacuity: the distributed form checkpoints each of its 6
+    // rounds; the replay pulls a local relation without a job
+    assert(distJobs >= 6, s"distributed depth rounds ran only $distJobs jobs")
+    assert(drvJobs < 6, s"driver depth replay ran $drvJobs jobs")
+    // and the registered query end to end on the fixture
+    def condense() = graft.queries.GraphQueries
+      .queries("graph_scc_condense")(spark, sf).collect().toSeq
+    assert(withDistributed(condense()) == condense(),
+      "graph_scc_condense distributed != driver replay")
+  }
+
   test("MST: Borůvka forest equals a driver Kruskal under the (w, a, b) total order") {
     val got = graft.queries.GraphQueries.queries("graph_mst")(spark, sf)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
@@ -1137,12 +1229,11 @@ class GraphSpec extends SparkSpec {
     // fixed-round ladder must produce the identical forest as the
     // driver replay (rows AND order), and the round-for-round replay
     // must keep the distributed path's loud under-run guard
-    spark.conf.set("spark.graft.mst.driverMaxEdges", "0")
-    try {
+    withDistributed {
       val dist = graft.queries.GraphQueries.queries("graph_mst")(spark, sf)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSeq
       assert(dist == got, "distributed Borůvka != driver replay")
-    } finally spark.conf.unset("spark.graft.mst.driverMaxEdges")
+    }
     intercept[IllegalArgumentException] {
       graft.operators.Mst.boruvka(spark,
         Tables.lineitem(spark, sf)

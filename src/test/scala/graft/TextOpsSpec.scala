@@ -165,8 +165,7 @@ class TextOpsSpec extends SparkSpec {
     // two-regime gate (round 19): the distributed loop must produce the
     // identical fixpoint labels as the driver union-find fast path, and
     // its under-diameter bound must still fail loudly, never under-merge
-    spark.conf.set("spark.graft.cc.driverMaxEdges", "0")
-    try {
+    withDistributed {
       val dist = graft.operators.Dedup.connectedComponentsConverged(pairs)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
       assert(dist == conv, "distributed fixpoint != driver union-find")
@@ -180,7 +179,7 @@ class TextOpsSpec extends SparkSpec {
       intercept[IllegalStateException] {
         graft.operators.Dedup.connectedComponentsConverged(pairs, maxIters = 3)
       }
-    } finally spark.conf.unset("spark.graft.cc.driverMaxEdges")
+    }
   }
 
   test("char entropy: closed-form values and permutation invariance") {
