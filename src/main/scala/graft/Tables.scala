@@ -24,8 +24,9 @@ object Tables {
     * lazy relation (schema + file index): no data, no results — every
     * query still scans parquet for every row it reads. Keyed weakly on
     * the session so test sessions don't leak; fixture files are
-    * immutable per scale dir (the staged-LIFECYCLE tables, which ARE
-    * rewritten between invocations, do not go through this loader).
+    * immutable per scale dir. StagedLayouts' artifacts are immutable
+    * too once built (no staged path is written outside its build), but
+    * their readers do not go through this loader.
     */
   private val relMemo =
     new java.util.WeakHashMap[SparkSession,

@@ -46,9 +46,6 @@ object Scc {
     */
   def scc(edgesIn: DataFrame, trimRounds: Int, propRounds: Int,
       peels: Int = 1): DataFrame = {
-    // the edge build (often a window+distinct subtree) feeds the node
-    // derivation AND the first alive filter — materialize it ONCE
-    val edges = edgesIn.localCheckpoint(true)
     // optimization round 19 (guide §1.2 step 1): the [[DriverRegime]]
     // two-regime gate, applied to the fixed-round ladder itself. The
     // 18-round trim/color/settle chain is ~20 sequential checkpoint
@@ -59,13 +56,17 @@ object Scc {
     // batch-settle sets, same absent-if-unsettled contract — GraphSpec's
     // cycle+DAG toy pins exactly the peel-1 absence semantics in both
     // regimes); larger graphs take the distributed ladder unchanged.
-    val pairCols = edges.select(col("src"), col("dst"))
+    // The pull reads `edgesIn` itself, so only the ladder checkpoints.
+    val pairCols = edgesIn.select(col("src"), col("dst"))
     if (pairCols.schema.fields.forall(_.dataType == LongType))
       DriverRegime.pull(pairCols).foreach { rows =>
-        return sccDriver(edges.sparkSession,
+        return sccDriver(edgesIn.sparkSession,
           rows.map(r => (r.getLong(0), r.getLong(1))),
           trimRounds, propRounds, peels)
       }
+    // the edge build (often a window+distinct subtree) feeds the node
+    // derivation AND the first alive filter — materialize it ONCE
+    val edges = edgesIn.localCheckpoint(true)
     val nodes = edges.select(col("src").as("v"))
       .union(edges.select(col("dst").as("v")))
       .distinct().localCheckpoint(true)

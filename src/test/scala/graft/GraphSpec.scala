@@ -1141,6 +1141,9 @@ class GraphSpec extends SparkSpec {
     // propagation passes' rounds; the replay is a pull and a collect
     assert(distJobs >= 6 + 2 * 6, s"distributed ladder ran only $distJobs jobs")
     assert(drvJobs < 6 + 2 * 6, s"driver replay ran $drvJobs jobs")
+    // on an already-materialized edge frame the replay adds no
+    // checkpoint of its own: one pull and the collect
+    assert(drvJobs == 2, s"driver replay on a checkpointed graph ran $drvJobs jobs")
     // the toy's fixed-depth contract in both regimes: one peel leaves
     // the dominated cycle {10, 11} ABSENT, two peels settle it; the
     // 5-ring 100→…→104→100 needs exactly 4 propagation rounds, so 3
