@@ -14,7 +14,7 @@ object Tables {
   /** Per-session relation memo (optimization round 19, guide §6): a
     * bare `spark.read.parquet` re-lists the directory and re-reads the
     * parquet footer schema on EVERY call — measured 66–87 ms per call
-    * at sf0.1 (`graft.tools.ReadProbe`) vs ~2 ms to reuse the loaded
+    * at sf0.1 (OPTIMIZATION_r19.md) vs ~2 ms to reuse the loaded
     * relation. Across a 292-query bench pass (~2 fixture tables per
     * query, cold + warm) that is tens of seconds of pure metadata
     * re-reading. Production Spark gets this for free from the catalog

@@ -1,6 +1,5 @@
 package graft.examples
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators._
 import graft.sources.TextFormats
@@ -19,13 +18,10 @@ object ReferencePipeline {
     val k = args.lift(2).map(_.toInt).getOrElse(2)
     val maxIter = args.lift(3).map(_.toInt).getOrElse(10)
 
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[8]"))
+    val spark = graft.Session.builder()
       .appName("graft-reference-pipeline")
-      .config("spark.sql.shuffle.partitions", "8")
       // load the optimizer extension the way a cluster submit would
       .config("spark.sql.extensions", "graft.plans.GraftExtensions")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 

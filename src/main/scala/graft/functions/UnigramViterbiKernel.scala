@@ -14,10 +14,10 @@ import org.apache.spark.unsafe.types.UTF8String
   * (`UnigramLm.dpArray` + `segments`): those lambdas never codegen,
   * every `element_at(mapLiteral, key)` lookup is an O(|vocab|) linear
   * scan of the MapData, and the ~1,000-node lambda tree re-paid
-  * Catalyst analysis/optimization on every EM action — UnigramProbe
-  * measured each emCount at a flat ~1.4 s at sf0.1 (≈0.3 s of it
-  * tasks). This expression is ONE tree node evaluating the identical
-  * DP as a tight JVM loop with a hashed vocab table.
+  * Catalyst analysis/optimization on every EM action — each emCount
+  * measured a flat ~1.4 s at sf0.1, ≈0.3 s of it tasks
+  * (OPTIMIZATION_r19.md). This expression is ONE tree node evaluating
+  * the identical DP as a tight JVM loop with a hashed vocab table.
   *
   * EXACT-replication contract (the DuckDB oracle replays the HOF
   * semantics, so every branch below mirrors `dpArray`/`segments`

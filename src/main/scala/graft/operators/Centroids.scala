@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Centroid model + seeded initialization (SURVEY §1.1, §2.1 S4, §3.1.4).
   *
@@ -81,13 +80,6 @@ object Centroids {
     cs.toDF()
   }
 
-  /** Centroids as a literal array-of-structs column (for the unrolled
-    * expression form — no join, no shuffle).
-    */
-  def toLiteralArray(cs: Seq[CentroidND]): Column =
-    array(cs.map(c =>
-      struct(lit(c.cid).as("cid"), array(c.vec.map(lit(_)): _*).as("vec"))): _*)
-
   // ---- Oracle-SQL literal rendering (SURVEY §7.5: inline the same seeded
   // centroids into both the Spark plan and the DuckDB SQL). Doubles are
   // rendered with Java's shortest round-trip repr, which DuckDB parses back
@@ -99,8 +91,4 @@ object Centroids {
   def sql2d(cs: Seq[Centroid2D]): String =
     cs.map(c => s"(${c.cid}, ${sqlDouble(c.cx)}, ${sqlDouble(c.cy)})")
       .mkString("(VALUES ", ", ", ") c(cid, cx, cy)")
-
-  def sql1d(cs: Seq[Centroid1D]): String =
-    cs.map(c => s"(${c.cid}, ${sqlDouble(c.c)})")
-      .mkString("(VALUES ", ", ", ") c(cid, cx)")
 }

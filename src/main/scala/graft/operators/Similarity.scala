@@ -268,15 +268,6 @@ object Similarity {
       .select(col("vec_id"), col("cell"), col("d2c"))
   }
 
-  /** Deterministic coarse centroids for IVF (uniform in the embedding
-    * value range).
-    */
-  def ivfCoarse(nlist: Int, dim: Int, seed: Long): Seq[CentroidND] = {
-    val rnd = new java.util.Random(seed)
-    (0 until nlist).map(i =>
-      CentroidND(i, Array.fill(dim)(rnd.nextDouble() * 0.9 - 0.45)))
-  }
-
   /** Multi-probe IVF top-k: each query searches its `nprobe` nearest
     * coarse cells instead of only its own — the standard recall lever
     * (README round-1 gap). Probe selection ranks cells by (squared

@@ -136,13 +136,6 @@ object UnigramLm {
   /** One E/M step: Viterbi-segment the dict under `wmap`, re-count
     * piece usage (freq-weighted), collect the K-row count table.
     */
-  /** Probe surface for graft.tools.UnigramProbe (round-19 phase
-    * timing): one emCount from a given model state.
-    */
-  private[graft] def emCountProbe(dict: DataFrame,
-      model: Seq[(String, Long)], maxPiece: Int): Map[String, Long] =
-    emCount(dict, weightMap(model, model.size), maxPiece)
-
   private def emCount(dict: DataFrame, wmap: Column,
                       maxPiece: Int): Map[String, Long] =
     // optimization round 19: the dpArray+segments HOF pair replaced by

@@ -91,7 +91,7 @@ object GraphQueries {
     *
     * (A 2-shuffle build variant — groupBy(order) collect_set +
     * higher-order pair expansion over the sorted basket array — was
-    * A/B'd via tools/BasketProfile: the build alone is ~1 s cheaper
+    * A/B'd (BASELINE.md, round 10): the build alone is ~1 s cheaper
     * cold, but interleaved steady-state under BOTH graph consumers
     * came out ~1 s SLOWER for triangles and neutral for k-core, so
     * the self-join form stays. At real scale the basket aggregate

@@ -26,11 +26,6 @@ object TextFormats {
     spark.read.schema(pointsSchema).option("header", "false").csv(path)
       .select(col("x"), col("y"))
 
-  /** 1-D oracle input — one float per line (sequential-kmeans.py:70-77). */
-  def readPoints1d(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(StructType(Seq(StructField("x", DoubleType, nullable = false))))
-      .csv(path)
-
   /** `centroids.txt` — `x,y` per line, row index = centroid id
     * (master.py:90-95). S4 source form: read + attach the id by line
     * position. K is tiny, so a driver-side read is the honest shape (the

@@ -1,12 +1,14 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for named registered queries to files —
   * the plans/r19/<query>_{before,after}.txt evidence trail of the
   * optimization rounds.
   *
-  * Usage: tools/run_main.sh graft.tools.ExplainDump <outDir> <suffix> <q1,q2,...> [sfDir]
+  * Usage: tools/run_main.sh [-Dspark.<key>=<v> ...] graft.tools.ExplainDump <outDir> <suffix> <q1,q2,...> [sfDir]
+  *
+  * A `-Dspark.*` system property becomes a session conf (SparkConf loads
+  * them), e.g. `-Dspark.graft.driverRegime=false` dumps the distributed
+  * "before" shape of the two-regime operators.
   */
 object ExplainDump {
   def main(args: Array[String]): Unit = {
@@ -14,22 +16,8 @@ object ExplainDump {
     val suffix = args(1)
     val names = args(2).split(",").map(_.trim).filter(_.nonEmpty)
     val sfDir = args.lift(3).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
-    // optional session confs (e.g. driver-replay kill switches, to dump
-    // the distributed "before" shape): SPARK_GRAFT_EXPLAIN_CONFS=k=v;k=v
-    sys.env.get("SPARK_GRAFT_EXPLAIN_CONFS").foreach(_.split(";")
-      .map(_.trim).filter(_.nonEmpty).foreach { kv =>
-        val Array(k, v) = kv.split("=", 2)
-        spark.conf.set(k, v)
-      })
     new java.io.File(outDir).mkdirs()
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)

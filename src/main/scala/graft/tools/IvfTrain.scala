@@ -6,8 +6,7 @@ import graft.functions.VecFunctions.toDoubleArray
 import graft.operators._
 object IvfTrain {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions","16").config("spark.ui.enabled","false").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val pts = Tables.embeddings(spark, "/root/testdata/sf0.01")
       .select(col("vec_id"), toDoubleArray(col("embedding")).as("vec"))
@@ -19,7 +18,7 @@ object IvfTrain {
     sb.append("/** IVF coarse centroids trained ONCE offline (KMeansND.fit on the\n")
     sb.append("  * sf0.01 embeddings, K=8, 10 iters, seed 21) and frozen as literals —\n")
     sb.append("  * deterministic for the oracle, tighter cells than random planes.\n")
-    sb.append("  * Regenerate with graft.IvfTrain.\n  */\n")
+    sb.append("  * Regenerate with graft.tools.IvfTrain.\n  */\n")
     sb.append("object TrainedIvfCentroids {\n  val cells: Seq[CentroidND] = Seq(\n")
     res.centroids.foreach { c =>
       sb.append(s"    CentroidND(${c.cid}, Array(")

@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart, SparkListenerStageCompleted}
-import org.apache.spark.sql.SparkSession
 
 /** Job-level profiler for a single registered query: runs the query
   * cold + warm with a SparkListener recording every job's wall time,
@@ -18,14 +17,7 @@ object JobProfile {
   def main(args: Array[String]): Unit = {
     val name = args.headOption.getOrElse(sys.error("usage: JobProfile <query> [sfDir]"))
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     final case class J(id: Int, var desc: String = "", var start: Long = 0L,

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{SaveMode, SparkSession}
+import org.apache.spark.sql.SaveMode
 import org.apache.spark.sql.functions._
 
 /** Deterministic hash-sampled sub-corpus of a derived-scale fixture
@@ -28,13 +28,7 @@ object MakeSample {
     val mod = args.lift(2).map(_.toInt).getOrElse(37)
     val keep = args.lift(3).map(_.toInt).getOrElse(4)
     val OFF = 100000000L // MakeScale's key-shift stride
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
     def copy(t: String): Long = {

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps formatted physical plans of the flagship queries to PLANS.md —
   * the `.explain("formatted")` audit trail (builder contract: iterate on
   * plans, don't just ship the first one that passes).
@@ -390,12 +388,7 @@ object PlanAudit {
   def main(args: Array[String]): Unit = {
     val out = args.lift(0).getOrElse("PLANS.md")
     val sfDir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val sb = new StringBuilder
     sb.append("# PLANS — physical-plan audit (generated by graft.tools.PlanAudit)\n\n")

@@ -19,9 +19,7 @@ object PqResidualTrain {
   val K = 8
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val cells = TrainedIvfCentroids.cells.sortBy(_.cid)
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")

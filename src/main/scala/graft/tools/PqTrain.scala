@@ -16,9 +16,7 @@ object PqTrain {
   val K = 8 // codes per subspace
 
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder().master("local[16]")
-      .config("spark.sql.shuffle.partitions", "16")
-      .config("spark.ui.enabled", "false").getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
       .select(col("vec_id"), toDoubleArray(col("embedding")).as("vec"))

@@ -28,12 +28,7 @@ object SqlRunner {
     val sfDir = args.lift(0).getOrElse("/root/testdata/sf0.001")
     val sql = args.lift(1).getOrElse(
       "SELECT l_returnflag, count(*) AS n FROM lineitem GROUP BY 1 ORDER BY 1")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
+    val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     register(spark, sfDir)
     spark.sql(sql).show(50, truncate = false)

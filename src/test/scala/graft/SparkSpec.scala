@@ -3,17 +3,13 @@ package graft
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared session: one per suite (lazy), local[4], fixture-compatible
-  * configs matching Verify/Bench.
+/** Shared session: one per suite (lazy), [[Session]]'s configs with a
+  * fixed local[4] whatever `SPARK_GRAFT_CPUS` says.
   */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
+  lazy val spark: SparkSession = Session.builder()
     .master("local[4,2]") // 2 task attempts: lets FaultSpec observe a retry
-    .appName("graft-test")
     .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
     .config("spark.sql.warehouse.dir",
       java.nio.file.Files.createTempDirectory("graft-warehouse").toString)
     .getOrCreate()

@@ -7,13 +7,13 @@
 #
 # Usage: tools/closing_bench.sh [n_repeats=3]
 # Env: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1), SPARK_GRAFT_CPUS
-# (default 32), SPARK_DRIVER_MEM (default 32g).
+# (default nproc), SPARK_DRIVER_MEM (default half of RAM, clamped to 2g..8g).
 set -euo pipefail
 cd "$(dirname "$0")/.."
 N=${1:-3}
 export SPARK_GRAFT_SF_DIR=${SPARK_GRAFT_SF_DIR:-/root/testdata/sf0.1}
-export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-32}
-export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-32g}
+export SPARK_GRAFT_CPUS=${SPARK_GRAFT_CPUS:-$(nproc)}
+export SPARK_DRIVER_MEM=${SPARK_DRIVER_MEM:-$(awk '/^MemTotal:/ {g = int($2 / 2097152)} END {print (g < 2 ? 2 : g > 8 ? 8 : g) "g"}' /proc/meminfo)}
 export SPARK_GRAFT_BENCH_MODE=isolated
 colds=(); warms=(); errs=(); nq=0
 for i in $(seq 1 "$N"); do
