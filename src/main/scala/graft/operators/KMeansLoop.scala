@@ -12,16 +12,17 @@ import org.apache.spark.sql.functions._
   *
   * Spark realization: the shared plan-once [[LloydKernel]] at dim 2 over
   * `(x, y)`. The points are planned and packed into cached blocks once
-  * per fit; each iteration broadcasts the K centroids and runs one job —
-  * per-partition partial (count, sums, SSE) per centroid → K×partitions
-  * shuffle → reduce → collect K rows. The SSE piggybacks on the SAME
-  * pass as the means, where the reference re-scans the full input TWICE
-  * per iteration for the objective (master.py:315-332, 365) — at 100 TB
-  * that is 200 TB/iteration of avoided IO.
+  * per fit; each iteration broadcasts the K centroids and runs one job of
+  * one stage — a per-partition partial (count, sums, SSE) per centroid,
+  * collected and summed on the driver in partition order. The SSE
+  * piggybacks on the SAME pass as the means, where the reference re-scans
+  * the full input TWICE per iteration for the objective
+  * (master.py:315-332, 365) — at 100 TB that is 200 TB/iteration of
+  * avoided IO.
   *
-  * Scale notes: per-iteration shuffle traffic is K×partitions records
-  * (map-side combine), the driver holds only K centroids, and no Catalyst
-  * planning happens inside the loop.
+  * Scale notes: no shuffle; per iteration the driver receives
+  * partitions × K × 4 doubles, and no Catalyst planning happens inside the
+  * loop.
   */
 object KMeansLoop {
 

@@ -10,11 +10,11 @@ import org.apache.spark.sql.functions._
   * [[fit]] is the shared plan-once [[LloydKernel]] over `vec`, the same
   * kernel `KMeansLoop` runs at dim 2: the points are packed into cached
   * blocks once per fit, and each iteration broadcasts the K centroids and
-  * runs one job whose map side emits one partial (count, vector sum, SSE)
-  * per centroid per partition — the map-side combine the reference lacks
-  * (it ships every raw point across its shuffle, mapper.py:67-68), in the
-  * shape MLlib uses internally. [[withNearest]] is the literal-expression
-  * assignment for one-shot queries.
+  * runs one job of one stage whose tasks each emit one partial (count,
+  * vector sum, SSE per centroid), merged on the driver in partition
+  * order — the per-mapper combine the reference lacks (it ships every raw
+  * point across its shuffle, mapper.py:67-68). [[withNearest]] is the
+  * literal-expression assignment for one-shot queries.
   */
 object KMeansND {
 

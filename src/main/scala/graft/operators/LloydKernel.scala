@@ -7,17 +7,19 @@ import org.apache.spark.storage.StorageLevel
 
 /** The plan-once Lloyd kernel shared by [[KMeansLoop]] and [[KMeansND]]:
   * the reference's pass — broadcast K centroids (master.py:184-188), map
-  * each point to its nearest one (mapper.py:35-51), combine, shuffle,
-  * reduce to new means (reducer.py:30-44) — done literally, as MLlib's
-  * KMeans does it.
+  * each point to its nearest one (mapper.py:35-51), combine per mapper,
+  * reduce to new means (reducer.py:30-44). MLlib's KMeans shuffles its
+  * per-partition partials through `reduceByKey`; here they are so small
+  * (K × (dim + 2) doubles a partition) that the driver merges them, in a
+  * fixed order.
   *
   * [[pack]] plans the point projection ONCE per fit (through
   * `queryExecution.toRdd`) and caches each partition as row-major
   * `Array[Double]` blocks of [[BlockRows]] points. [[step]] is then one
-  * job of two stages per iteration: a per-partition partial
-  * (count, coordinate sums, SSE) per centroid, `reduceByKey` over
-  * K × partitions records, `collect`. No Catalyst planning happens inside
-  * the loop.
+  * job of one stage per iteration: a per-partition partial
+  * (count, coordinate sums, SSE) per centroid, `collect`, and a driver
+  * sum in ascending partition index. No Catalyst planning happens inside
+  * the loop, and no shuffle.
   *
   * The arithmetic is that of the expression forms (`Assign.withNearest`
   * over `distSq2`, `Assign.withNearestNDFull` over `SquaredDistance`):
@@ -72,7 +74,13 @@ object LloydKernel {
   }
 
   /** One assign + combine + reduce pass of `blocks` against `centers`
-    * (cid, coordinates): one job, two stages.
+    * (cid, coordinates): one job of one stage. Each partition emits one
+    * `k × (dim + 2)` partial; `collect` returns them in partition order
+    * and the driver sums them in ascending partition index, so the sums
+    * are the same from run to run (and, with one partition, the
+    * partition's own partial, as 0.0 + x = x). The driver receives
+    * partitions × K × (dim + 2) doubles — 34 KB for 4 partitions of
+    * K = 16 at dim 64 — under `spark.driver.maxResultSize`'s guard.
     */
   def step(blocks: RDD[Array[Double]], centers: Seq[(Int, Array[Double])]): Step = {
     require(centers.nonEmpty, "a Lloyd step needs at least one centroid")
@@ -108,19 +116,17 @@ object LloydKernel {
           p += dim
         }
       }
-      (0 until k).iterator.filter(j => acc(j * w) > 0.0)
-        .map(j => j -> java.util.Arrays.copyOfRange(acc, j * w, (j + 1) * w))
+      Iterator.single(acc)
     }
-    val merged =
-      try partials.reduceByKey((x, y) => {
-        var i = 0
-        while (i < w) { x(i) += y(i); i += 1 }
-        x
-      }, math.max(1, math.min(k, blocks.getNumPartitions))).collect().sortBy(_._1)
-      finally bc.destroy()
-    val clusters = merged.map { case (j, s) =>
-      val n = s(0)
-      sorted(j)._1 -> Cluster(n.toLong, Array.tabulate(dim)(i => s(1 + i) / n), s(dim + 1))
+    val sums = new Array[Double](k * w)
+    try partials.collect().foreach { acc =>
+      var i = 0
+      while (i < sums.length) { sums(i) += acc(i); i += 1 }
+    } finally bc.destroy()
+    val clusters = (0 until k).filter(j => sums(j * w) > 0.0).map { j =>
+      val (o, n) = (j * w, sums(j * w))
+      sorted(j)._1 -> Cluster(n.toLong, Array.tabulate(dim)(i => sums(o + 1 + i) / n),
+        sums(o + dim + 1))
     }
     Step(clusters.toMap, clusters.foldLeft(0.0)(_ + _._2.sse))
   }

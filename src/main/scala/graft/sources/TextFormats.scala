@@ -22,9 +22,29 @@ object TextFormats {
     StructField("x", DoubleType, nullable = false),
     StructField("y", DoubleType, nullable = false)))
 
-  def readPointsCsv(spark: SparkSession, path: String): DataFrame =
-    spark.read.schema(pointsSchema).option("header", "false").csv(path)
+  /** S1 source: `points.txt` parsed once, on all cores — the analogue of
+    * the reference's up-front `splitInput` (master.py:50), which cuts the
+    * file into one chunk per mapper before the first iteration.
+    *
+    * The lines are read as `defaultParallelism` contiguous byte ranges
+    * (`textFile` splits), so row order is file order; Spark's CSV reader
+    * parses them with [[pointsSchema]], keeping its PERMISSIVE nulls,
+    * extra-field dropping and blank-line skipping. The read is EAGER: it
+    * runs one job and returns a local checkpoint of `(x, y)`, so `bbox`,
+    * the fit and the KV write all read the parsed rows instead of each
+    * parsing the file again. The checkpoint has no CacheManager entry (a
+    * later read of a changed file is never stale, and there is nothing to
+    * unpersist; the ContextCleaner frees the blocks once the frame is
+    * unreachable) and no lineage: a lost executor fails later reads of
+    * the frame instead of re-parsing.
+    */
+  def readPointsCsv(spark: SparkSession, path: String): DataFrame = {
+    import spark.implicits._
+    val lines = spark.sparkContext.textFile(path, spark.sparkContext.defaultParallelism)
+    spark.read.schema(pointsSchema).option("header", "false").csv(lines.toDS())
       .select(col("x"), col("y"))
+      .localCheckpoint(eager = true)
+  }
 
   /** `centroids.txt` — `x,y` per line, row index = centroid id
     * (master.py:90-95). S4 source form: read + attach the id by line

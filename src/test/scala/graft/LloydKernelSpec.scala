@@ -1,53 +1,41 @@
 package graft
 
-import java.util.concurrent.{ConcurrentHashMap, CountDownLatch, TimeUnit}
+import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.DataFrame
 import graft.operators._
 
 /** The plan-once Lloyd kernel behind `KMeansLoop.fit` and `KMeansND.fit`:
-  * one job of two stages per iteration with a K × partitions shuffle,
-  * null rows skipped, and loud input checks.
+  * one job of one stage per iteration with no shuffle, partials merged in
+  * partition order, null rows skipped, and loud input checks.
   */
 class LloydKernelSpec extends SparkSpec {
 
-  /** (stage count, shuffle records written) of every job `body` runs, in
-    * job order. A marker job run after `body` flushes the listener: the
-    * bus delivers events in order, so once the marker has ended every
-    * event of `body` has been seen.
+  /** (stage count, task count, shuffle records written) of every job
+    * `body` runs, in job order.
     */
-  private def jobsOf(body: => Unit): Seq[(Int, Long)] = {
-    val sc = spark.sparkContext
+  private def jobsOf(body: => Unit): Seq[(Int, Int, Long)] = {
     val stages = new ConcurrentHashMap[Int, Int]() // job -> stage count
+    val tasks = new ConcurrentHashMap[Int, Int]() // job -> tasks ended
     val records = new ConcurrentHashMap[Int, Long]() // job -> records written
     val jobOfStage = new ConcurrentHashMap[Int, Int]()
-    val markerEnded = new CountDownLatch(1)
-    @volatile var marker = -1
-    val listener = new SparkListener {
+    listening(new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "marker"))
-          marker = e.jobId
-        else {
+        if (!isMarker(e)) {
           stages.put(e.jobId, e.stageInfos.size)
+          tasks.put(e.jobId, 0)
           records.put(e.jobId, 0L)
           e.stageIds.foreach(jobOfStage.put(_, e.jobId))
         }
       override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-        Option(jobOfStage.get(e.stageInfo.stageId)).foreach(j =>
+        Option(jobOfStage.get(e.stageInfo.stageId)).foreach { j =>
+          tasks.merge(j, e.stageInfo.numTasks, (a: Int, b: Int) => a + b)
           records.merge(j, e.stageInfo.taskMetrics.shuffleWriteMetrics.recordsWritten,
-            (a: Long, b: Long) => a + b))
-      override def onJobEnd(e: SparkListenerJobEnd): Unit =
-        if (e.jobId == marker) markerEnded.countDown()
-    }
-    sc.addSparkListener(listener)
-    try {
-      body
-      sc.setJobDescription("marker")
-      try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
-      assert(markerEnded.await(60, TimeUnit.SECONDS), "listener did not drain")
-    } finally sc.removeSparkListener(listener)
-    stages.keySet.asScala.toSeq.sorted.map(j => (stages.get(j), records.get(j)))
+            (a: Long, b: Long) => a + b)
+        }
+    })(body)
+    stages.keySet.asScala.toSeq.sorted.map(j => (stages.get(j), tasks.get(j), records.get(j)))
   }
 
   private def points2d(n: Int, parts: Int, seed: Long): DataFrame = {
@@ -60,15 +48,16 @@ class LloydKernelSpec extends SparkSpec {
   private val cs2d = Seq(Centroid2D(0, 20.0, 20.0), Centroid2D(1, 80.0, 20.0),
     Centroid2D(2, 20.0, 80.0), Centroid2D(3, 80.0, 80.0))
 
-  test("both fits plan once: N jobs of 2 stages, <= K x partitions shuffle records") {
+  test("both fits plan once: N jobs of 1 stage, 0 shuffle records") {
     import spark.implicits._
     val parts = 3
     val pts = points2d(500, parts, seed = 11L)
     val iters = 4
+    // one partial a task: the driver receives `parts` records a job
     val jobs2 = jobsOf(KMeansLoop.fit(spark, pts, cs2d, maxIter = iters, delta = 0.0))
     assert(jobs2.length == iters, s"2-D fit ran ${jobs2.length} jobs")
-    jobs2.foreach { case (st, rec) =>
-      assert(st == 2 && rec > 0 && rec <= cs2d.length * parts, s"2-D job: $st stages, $rec records")
+    jobs2.foreach { case (st, ts, rec) =>
+      assert(st == 1 && ts == parts && rec == 0, s"2-D job: $st stages, $ts tasks, $rec records")
     }
 
     val rnd = new scala.util.Random(12L)
@@ -77,9 +66,69 @@ class LloydKernelSpec extends SparkSpec {
     val initNd = Centroids.randomInitND(k = 5, dim = 8, seed = 3L, 0.0, 1.0)
     val jobsNd = jobsOf(KMeansND.fit(spark, vecs, initNd, maxIter = iters, delta = 0.0))
     assert(jobsNd.length == iters, s"n-dim fit ran ${jobsNd.length} jobs")
-    jobsNd.foreach { case (st, rec) =>
-      assert(st == 2 && rec > 0 && rec <= initNd.length * parts, s"n-dim job: $st stages, $rec records")
+    jobsNd.foreach { case (st, ts, rec) =>
+      assert(st == 1 && ts == parts && rec == 0, s"n-dim job: $st stages, $ts tasks, $rec records")
     }
+  }
+
+  /** `KMeansLoop.fit`'s centroids and SSE (KeepOld, `iters` iterations)
+    * replayed sequentially: each partition's partial with the kernel's
+    * arithmetic, the partials summed from 0.0 in ascending partition index.
+    */
+  private def replay(parts: Seq[Seq[(Double, Double)]], init: Seq[Centroid2D],
+      iters: Int): (Seq[Centroid2D], Double) = {
+    var cs = init.sortBy(_.cid)
+    var sse = Double.NaN
+    for (_ <- 0 until iters) {
+      val k = cs.length
+      val sums = new Array[Double](k * 4)
+      parts.foreach { part =>
+        val acc = new Array[Double](k * 4)
+        part.foreach { case (x, y) =>
+          val ds = cs.map { c => val (dx, dy) = (x - c.cx, y - c.cy); dx * dx + dy * dy }
+          val best = ds.indices.reduce((a, b) => if (ds(b) < ds(a)) b else a)
+          acc(best * 4) += 1.0; acc(best * 4 + 1) += x; acc(best * 4 + 2) += y
+          acc(best * 4 + 3) += ds(best)
+        }
+        for (i <- sums.indices) sums(i) += acc(i)
+      }
+      val live = (0 until k).filter(j => sums(j * 4) > 0.0)
+      cs = cs.indices.map(j => if (sums(j * 4) > 0.0)
+        Centroid2D(cs(j).cid, sums(j * 4 + 1) / sums(j * 4), sums(j * 4 + 2) / sums(j * 4)) else cs(j))
+      sse = live.foldLeft(0.0)((s, j) => s + sums(j * 4 + 3))
+    }
+    (cs, sse)
+  }
+
+  private def bits(cs: Seq[Centroid2D], sse: Double): Seq[Long] =
+    cs.sortBy(_.cid).flatMap(c => Seq(c.cid.toLong, java.lang.Double.doubleToRawLongBits(c.cx),
+      java.lang.Double.doubleToRawLongBits(c.cy))) :+ java.lang.Double.doubleToRawLongBits(sse)
+
+  test("partials merge in partition order: fits are bit-reproducible and bit-equal a replay") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(21L)
+    // the first point of each partition goes to cid 0: at |x| = 1e20 every
+    // centroid is equally far, and the lowest cid wins ties. Cluster 0's x
+    // sums then cancel only in partition order: (s + 1e20) − 1e20 is 0.0,
+    // while the reverse order, (−1e20 + 1e20) + s, is s
+    val parts = Seq(1.0, 1.0e20, -1.0e20).map(x0 =>
+      (x0, 20.0) +: Seq.fill(99)((rnd.nextDouble() * 100, rnd.nextDouble() * 100)))
+    val init = cs2d :+ Centroid2D(4, 20.0, 1.0e6) // wins no point: KeepOld
+    val iters = 3
+    def fit(p: Seq[Seq[(Double, Double)]]) = {
+      val df = spark.sparkContext.parallelize(p.flatten, p.length).toDF("x", "y")
+      assert(df.rdd.glom().collect().map(_.length).toSeq == p.map(_.length))
+      val r = KMeansLoop.fit(spark, df, init, maxIter = iters, delta = 0.0)
+      bits(r.centroids, r.sse)
+    }
+    val (wantCs, wantSse) = replay(parts, init, iters)
+    val first = fit(parts)
+    assert(first == fit(parts), "two 3-partition fits differ")
+    assert(first == bits(wantCs, wantSse), "the 3-partition fit differs from its replay")
+
+    val one = Seq(parts.flatten)
+    val (seqCs, seqSse) = replay(one, init, iters)
+    assert(fit(one) == bits(seqCs, seqSse), "the 1-partition fit differs from a sequential replay")
   }
 
   test("Rerandomize repair in the fit runs one bbox per fit, not one per iteration") {

@@ -20,7 +20,7 @@ class SourcesAndPlansSpec extends SparkSpec {
   test("tie fixture: equidistant point takes the lower centroid id") {
     // centroids from rows 2,3 of the fixture: (1,1) and (9,1); point (5,0)
     // is equidistant -> cid 0 (mapper.py:43 strict <)
-    val pts = TextFormats.readPointsCsv(spark, res("points_tie.csv")).limit(1)
+    val pts = TextFormats.readPointsCsv(spark, res("points_tie.csv"))
     val cs = Seq(Centroid2D(0, 1.0, 1.0), Centroid2D(1, 9.0, 1.0))
     val out = Assign.withNearest(pts.where(col("x") === 5.0), cs).head()
     assert(out.getInt(out.fieldIndex("cluster_id")) == 0)

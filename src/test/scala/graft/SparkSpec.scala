@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -28,33 +29,47 @@ trait SparkSpec extends AnyFunSuite {
     try body finally spark.conf.unset(graft.operators.DriverRegime.Switch)
   }
 
-  /** `body`'s result and the number of Spark jobs it started. A marker
-    * job run after `body` flushes the listener: the bus delivers events
-    * in order, so once the marker has ended every job of `body` has
-    * been seen.
+  /** Runs `body` with `listener` attached. A marker job run after `body`
+    * flushes the bus: listeners get events in order, so once the marker
+    * has ended `listener` has seen every event of `body`. The marker's
+    * own events reach `listener` too, under the job description
+    * [[Marker]].
     */
-  def countingJobs[T](body: => T): (T, Int) = {
-    import org.apache.spark.scheduler._
+  def listening[T](listener: SparkListener)(body: => T): T = {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger()
     val markerEnded = new java.util.concurrent.CountDownLatch(1)
     @volatile var marker = -1
-    val listener = new SparkListener {
+    val flush = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit =
-        if (Option(e.properties).exists(_.getProperty("spark.job.description") == "marker"))
-          marker = e.jobId
-        else jobs.incrementAndGet()
+        if (isMarker(e)) marker = e.jobId
       override def onJobEnd(e: SparkListenerJobEnd): Unit =
         if (e.jobId == marker) markerEnded.countDown()
     }
     sc.addSparkListener(listener)
+    sc.addSparkListener(flush)
     try {
       val out = body
-      sc.setJobDescription("marker")
+      sc.setJobDescription(Marker)
       try sc.parallelize(Seq(1), 1).count() finally sc.setJobDescription(null)
       assert(markerEnded.await(60, java.util.concurrent.TimeUnit.SECONDS),
         "listener did not drain")
-      (out, jobs.get)
-    } finally sc.removeSparkListener(listener)
+      out
+    } finally { sc.removeSparkListener(flush); sc.removeSparkListener(listener) }
+  }
+
+  /** The job description of [[listening]]'s marker job. */
+  val Marker = "marker"
+
+  def isMarker(e: SparkListenerJobStart): Boolean =
+    Option(e.properties).exists(_.getProperty("spark.job.description") == Marker)
+
+  /** `body`'s result and the number of Spark jobs it started. */
+  def countingJobs[T](body: => T): (T, Int) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val out = listening(new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        if (!isMarker(e)) jobs.incrementAndGet()
+    })(body)
+    (out, jobs.get)
   }
 }
