@@ -36,18 +36,6 @@ object VecFunctions {
   def distSqN(a: Column, b: Column): Column =
     aggregate(zip_with(a, b, (p, q) => (p - q) * (p - q)), lit(0.0), (acc, v) => acc + v)
 
-  /** Dot product over two `ArrayType(Double)` columns; sequential fold =
-    * deterministic order.
-    */
-  def dot(a: Column, b: Column): Column =
-    aggregate(zip_with(a, b, (p, q) => p * q), lit(0.0), (acc, v) => acc + v)
-
-  /** L2 norm. */
-  def l2norm(a: Column): Column = sqrt(dot(a, a))
-
-  /** Cosine similarity of two double-array columns. */
-  def cosine(a: Column, b: Column): Column = dot(a, b) / (l2norm(a) * l2norm(b))
-
   /** Cast a float array (parquet `ARRAY<FLOAT>`) to a double array so all
     * arithmetic runs in float64 on both engines.
     */

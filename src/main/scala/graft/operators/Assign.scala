@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.functions.ArrayKernels.distSqFast
 import graft.functions.VecFunctions._
 
 /** J1 — nearest-centroid assignment (SURVEY §2.3).
@@ -12,145 +13,96 @@ import graft.functions.VecFunctions._
   * ties keep the FIRST (lowest-id) centroid because the comparison is
   * strict `<` (mapper.py:43).
   *
-  * Two implementations, cross-checked in tests:
+  * One rule, [[argmin]], in the *expression form*: a named column per
+  * centroid distance in ascending cid, `least` over them, a first-match
+  * CASE chain (lowest cid wins ties; a null distance gives −1), then the
+  * temp columns are dropped. One narrow map stage, zero shuffle, fully
+  * inside whole-stage codegen: the centroids ride in the plan as K small
+  * literals, so a 1000-executor scan needs no broadcast exchange. Its
+  * entry points differ only in the distance: [[withNearest]] (2-D
+  * `distSq2`), [[withNearest1]] (1-D `distSq1`) and [[withNearestND]]
+  * (n-dim `distSqFast` over the literal vectors of [[distances]], the
+  * one place a literal centroid array is written).
   *
-  *  1. [[withNearest]] — *expression form*: the argmin is unrolled into a
-  *     `least(d0..dK)` + first-match CASE chain over literal centroids.
-  *     One narrow map stage, zero shuffle, fully inside whole-stage
-  *     codegen. This is the 100-TB path: centroids ride in the plan
-  *     (they are K small literals), so a 1000-executor scan needs no
-  *     broadcast exchange at all.
-  *
-  *  2. [[nearestRelational]] — *relational form*: crossJoin(broadcast(c))
-  *     + per-point min + tie-break, the shape a SQL engine (and our DuckDB
-  *     oracle) expresses directly.
-  *
-  * Both break ties toward the lowest cid, matching mapper.py:43.
+  * [[nearestRelational]] is the *relational form*: crossJoin(broadcast(c))
+  * + per-point min + tie-break, the shape a SQL engine (and our DuckDB
+  * oracle) expresses directly. Tests cross-check the two.
   */
 object Assign {
 
-  /** Minimum squared distance from (x,y) to the centroid set. */
-  def minDistSq2(x: Column, y: Column, cs: Seq[Centroid2D]): Column =
-    least(cs.map(c => distSq2(x, y, lit(c.cx), lit(c.cy))): _*)
-
-  /** Argmin cluster id: first centroid (ascending cid) whose distance
-    * equals the minimum — float equality is safe because both operands are
-    * the identical expression evaluation.
+  /** Adds `outCol`, the cid of the least of `dists` ((cid, distance)
+    * pairs), to `df`. Each distance is staged as a named column, so its
+    * subtree appears ONCE in the plan; inlining it in both `least` and
+    * the CASE arm blows up analysis + codegen (~1.3 s per planning at
+    * K=8 × 64-dim literals against ~0.2 s staged). CollapseProject keeps
+    * the stages split because each alias is referenced twice. The
+    * winning distance is kept as `d2Col` if given. Temp names derive from
+    * `outCol`, so two argmins can stack on one DataFrame.
     */
-  def nearestCid2(x: Column, y: Column, cs: Seq[Centroid2D]): Column = {
-    val sorted = cs.sortBy(_.cid)
-    val mind = minDistSq2(x, y, sorted)
-    sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(distSq2(x, y, lit(c.cx), lit(c.cy)) === mind, lit(c.cid)).otherwise(rest)
-    }
-  }
-
-  // NOTE on the foldRight above: it builds CASE WHEN d0=min THEN 0 WHEN
-  // d1=min THEN 1 ... — evaluated top-down, so the lowest cid wins ties.
-
-  /** 1-D variants (sequential-kmeans.py:14-29, with the argmin CORRECT —
-    * the reference's line 25 stores an unsquared signed diff, documented
-    * divergence per SURVEY §3.2).
-    */
-  def minDistSq1(x: Column, cs: Seq[Centroid1D]): Column =
-    least(cs.map(c => distSq1(x, lit(c.c))): _*)
-
-  def nearestCid1(x: Column, cs: Seq[Centroid1D]): Column = {
-    val sorted = cs.sortBy(_.cid)
-    val mind = minDistSq1(x, sorted)
-    sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(distSq1(x, lit(c.c)) === mind, lit(c.cid)).otherwise(rest)
-    }
-  }
-
-  /** n-dim argmin over a literal centroid seq: K native `distSqFast`
-    * kernels (codegen'd tight loops, see graft.functions.ArrayKernels) +
-    * `least` + first-match CASE chain — one narrow stage, no shuffle.
-    * (History: an `aggregate` HOF fold was correct but interpreted; a
-    * naive `when(..).otherwise(acc)` fold duplicates the accumulator
-    * subtree per centroid and blows up exponentially.) The hot flagship
-    * path delegates to MLlib which adds the |a|²+|b|²-2ab form +
-    * triangle-inequality pruning.
-    * Returns struct(cid INT, d2 DOUBLE).
-    */
-  def nearestND(vec: Column, cs: Seq[CentroidND]): Column = {
-    val sorted = cs.sortBy(_.cid)
-    val dists = sorted.map(c =>
-      graft.functions.ArrayKernels.distSqFast(vec, array(c.vec.map(lit(_)): _*)))
-    val mind = least(dists: _*)
-    // first cid whose distance equals the min -> lowest cid wins ties
-    // (mapper.py:43 strict <); codegen CSE dedups the repeated subtrees
-    val cid = sorted.zip(dists).foldRight(lit(-1): Column) {
-      case ((c, d), rest) => when(d === mind, lit(c.cid)).otherwise(rest)
-    }
-    struct(cid.as("cid"), mind.as("d2"))
-  }
-
-  /** STAGED n-dim argmin: adds `outCol` (the nearest cid) to `df` via
-    * named per-centroid distance columns — the same IEEE operations,
-    * `least`, and first-match tie-break as [[nearestND]], so the result
-    * is bit-identical, but each `distSqFast(vec, literalArray)` subtree
-    * appears ONCE in the plan instead of ~K² times. At nlist=8 × 64-dim
-    * literals the inlined form costs ~1.3 s analysis/codegen per
-    * planning (build-playbook measurement); this form plans in ~0.2 s.
-    * CollapseProject keeps the stages split because every `_nd*` alias
-    * is referenced twice (in `least` and in its CASE arm).
-    */
-  def withNearestND(df: DataFrame, vecCol: Column, cs: Seq[CentroidND],
-      outCol: String): DataFrame =
-    withNearestNDFull(df, vecCol, cs, outCol, d2Col = None)
-
-  /** Like [[withNearestND]] but optionally also keeps the winning squared
-    * distance as `d2Col` (the SSE input for fit-style queries).
-    */
-  def withNearestNDFull(df: DataFrame, vecCol: Column, cs: Seq[CentroidND],
-      outCol: String, d2Col: Option[String]): DataFrame = {
-    val sorted = cs.sortBy(_.cid)
-    // temp names derived from outCol so two staged argmins can stack on
-    // one DataFrame (and a caller column named _nd0 can't collide)
+  private def argmin(df: DataFrame, dists: Seq[(Int, Column)], outCol: String,
+      d2Col: Option[String]): DataFrame = {
+    val sorted = dists.sortBy(_._1)
     def dName(cid: Int) = s"_${outCol}_d$cid"
     val minName = d2Col.getOrElse(s"_${outCol}_min")
-    require(!df.columns.exists(c => c == minName || sorted.exists(s => dName(s.cid) == c)),
-      s"withNearestND temp column collision with input schema for outCol=$outCol")
-    val withDd = df.select(col("*") +: sorted.map(c =>
-      graft.functions.ArrayKernels.distSqFast(vecCol, array(c.vec.map(lit(_)): _*))
-        .as(dName(c.cid))): _*)
-    val withMin = withDd.withColumn(minName,
-      least(sorted.map(c => col(dName(c.cid))): _*))
-    val cid = sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(col(dName(c.cid)) === col(minName), lit(c.cid)).otherwise(rest)
+    require(!df.columns.exists(c => c == minName || sorted.exists(d => dName(d._1) == c)),
+      s"argmin temp column collision with input schema for outCol=$outCol")
+    val cid = sorted.foldRight(lit(-1)) { case ((c, _), rest) =>
+      when(col(dName(c)) === col(minName), lit(c)).otherwise(rest)
     }
-    withMin.withColumn(outCol, cid)
-      .drop(sorted.map(c => dName(c.cid)) ++ (if (d2Col.isEmpty) Seq(minName) else Nil): _*)
+    // `least` takes at least two arguments
+    val mind = sorted.map(d => col(dName(d._1))) match {
+      case Seq(one) => one
+      case ds => least(ds: _*)
+    }
+    df.select(col("*") +: sorted.map { case (c, d) => d.as(dName(c)) }: _*)
+      .withColumn(minName, mind)
+      .withColumn(outCol, cid)
+      .drop(sorted.map(d => dName(d._1)) ++ (if (d2Col.isEmpty) Seq(minName) else Nil): _*)
   }
 
-  /** Expression-form assignment: adds `cluster_id` and `d2` to a 2-D point
-    * DataFrame with columns (x, y). No shuffle.
-    *
-    * STAGED projections, not one inlined tree: each per-centroid distance
-    * is computed once as a named column, then `d2 = least(dd*)`, then the
-    * tie-break CASE reads only column refs. Inlining everything (the
-    * obvious `withColumn(nearestCid2(...))` form) duplicates every
-    * distance subtree ~9× — semantically identical, but analysis +
-    * codegen of the blown-up tree cost ~1.3 s PER QUERY PLANNING at K=8
-    * (measured; the staged form plans in ~0.2 s and runs the same speed
-    * warm). CollapseProject keeps the stages separate because each alias
-    * is referenced more than once.
+  /** The literal coordinates of `c` as an array column. */
+  private def literal(c: CentroidND): Column = array(c.vec.toSeq.map(lit): _*)
+
+  /** (cid, squared distance from `vec` to each literal centroid), in
+    * ascending cid: native `distSqFast` kernels (codegen'd tight loops,
+    * see graft.functions.ArrayKernels).
     */
-  def withNearest(points: DataFrame, cs: Seq[Centroid2D]): DataFrame = {
-    val sorted = cs.sortBy(_.cid)
-    val ddNames = sorted.map(c => s"_dd${c.cid}")
-    val withDd = points.select(col("*") +:
-      sorted.map(c => distSq2(col("x"), col("y"), lit(c.cx), lit(c.cy))
-        .as(s"_dd${c.cid}")): _*)
-    val withD2 = withDd.withColumn("d2", least(ddNames.map(col): _*))
-    val cid = sorted.foldRight(lit(-1)) { (c, rest) =>
-      when(col(s"_dd${c.cid}") === col("d2"), lit(c.cid)).otherwise(rest)
+  def distances(vec: Column, cs: Seq[CentroidND]): Seq[(Int, Column)] =
+    cs.sortBy(_.cid).map(c => c.cid -> distSqFast(vec, literal(c)))
+
+  /** The literal centroid vector of the cid in `cidCol` (a CASE chain;
+    * null for a cid with no centroid).
+    */
+  def centroidOf(cidCol: Column, cs: Seq[CentroidND]): Column =
+    cs.sortBy(_.cid).foldRight(lit(null).cast("array<double>")) { (c, rest) =>
+      when(cidCol === c.cid, literal(c)).otherwise(rest)
     }
-    // keep the historical column order: point cols, cluster_id, d2
-    withD2.withColumn("cluster_id", cid)
-      .select(points.columns.map(col) :+ col("cluster_id") :+ col("d2"): _*)
-  }
+
+  /** Adds `cluster_id` and `d2` to a 2-D point DataFrame with columns
+    * (x, y), in the historical column order: point cols, cluster_id, d2.
+    */
+  def withNearest(points: DataFrame, cs: Seq[Centroid2D]): DataFrame =
+    argmin(points, cs.map(c => c.cid -> distSq2(col("x"), col("y"), lit(c.cx), lit(c.cy))),
+      "cluster_id", Some("d2"))
+      .select(points.columns.toSeq.map(col) :+ col("cluster_id") :+ col("d2"): _*)
+
+  /** 1-D assignment over `x` (sequential-kmeans.py:14-29, with the argmin
+    * CORRECT — the reference's line 25 stores an unsquared signed diff,
+    * documented divergence per SURVEY §3.2).
+    */
+  def withNearest1(df: DataFrame, x: Column, cs: Seq[Centroid1D],
+      outCol: String = "cluster_id"): DataFrame =
+    argmin(df, cs.map(c => c.cid -> distSq1(x, lit(c.c))), outCol, None)
+
+  /** n-dim assignment of the double-array column `vec` to literal
+    * centroids: adds `outCol` (the nearest cid) and, if given, `d2Col`
+    * (the winning squared distance, the SSE input of fit-style queries).
+    * The hot flagship path delegates to MLlib, which adds the
+    * |a|²+|b|²-2ab form + triangle-inequality pruning.
+    */
+  def withNearestND(df: DataFrame, vec: Column, cs: Seq[CentroidND], outCol: String,
+      d2Col: Option[String] = None): DataFrame =
+    argmin(df, distances(vec, cs), outCol, d2Col)
 
   /** Relational-form assignment: broadcast crossJoin + window-min +
     * tie-break on lowest cid. Used for cross-checking and as the

@@ -5,10 +5,11 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.storage.StorageLevel
 
-/** The plan-once Lloyd kernel shared by [[KMeansLoop]] and [[KMeansND]]:
-  * the reference's pass — broadcast K centroids (master.py:184-188), map
-  * each point to its nearest one (mapper.py:35-51), combine per mapper,
-  * reduce to new means (reducer.py:30-44). MLlib's KMeans shuffles its
+/** The plan-once Lloyd kernel and loop shared by [[KMeansLoop]] and
+  * [[KMeansND]]: the reference's pass — broadcast K centroids
+  * (master.py:184-188), map each point to its nearest one
+  * (mapper.py:35-51), combine per mapper, reduce to new means
+  * (reducer.py:30-44). MLlib's KMeans shuffles its
   * per-partition partials through `reduceByKey`; here they are so small
   * (K × (dim + 2) doubles a partition) that the driver merges them, in a
   * fixed order.
@@ -19,10 +20,11 @@ import org.apache.spark.storage.StorageLevel
   * job of one stage per iteration: a per-partition partial
   * (count, coordinate sums, SSE) per centroid, `collect`, and a driver
   * sum in ascending partition index. No Catalyst planning happens inside
-  * the loop, and no shuffle.
+  * the loop, and no shuffle. [[fit]] is the one Lloyd loop over them:
+  * step, move the centroids, stop on the reference's rule.
   *
   * The arithmetic is that of the expression forms (`Assign.withNearest`
-  * over `distSq2`, `Assign.withNearestNDFull` over `SquaredDistance`):
+  * over `distSq2`, `Assign.withNearestND` over `SquaredDistance`):
   * the distance is Σ(aᵢ−cᵢ)² accumulated from 0.0 in ascending i (so it
   * is bit-equal to both), the argmin is strict `<` over ascending cid (the
   * lowest cid wins ties, mapper.py:43), and each mean is sum ÷ count.
@@ -39,6 +41,49 @@ object LloydKernel {
 
   /** One pass: the non-empty clusters by cid, and the total SSE. */
   final case class Step(clusters: Map[Int, Cluster], sse: Double)
+
+  /** A fit: the last centroids, the SSE of the last pass (NaN if none
+    * ran), the passes run, whether the stop rule fired, and each pass's
+    * SSE in order.
+    */
+  final case class Fit[C](
+      centroids: Seq[C],
+      sse: Double,
+      iterations: Int,
+      converged: Boolean,
+      sseHistory: Seq[Double])
+
+  /** Lloyd's loop over the vectors `vec` of `points`, from `init`. Each
+    * pass runs one [[step]] against the centroids' (cid, coordinates)
+    * from `coords`, then `next(centroids, step, pass index)` gives the
+    * new centroids (the caller's merge and empty-cluster policy). The
+    * loop stops after `maxIter` passes, or once
+    * `|SSE(previous pass) − SSE(this pass)| < delta` (master.py:365); the
+    * first pass has no previous SSE, so it never stops the loop.
+    */
+  def fit[C](points: DataFrame, vec: Column, init: Seq[C], maxIter: Int, delta: Double)(
+      coords: C => (Int, Array[Double]),
+      next: (Seq[C], Step, Int) => Seq[C]): Fit[C] = {
+    require(init.nonEmpty, "Lloyd fit: init holds no centroid")
+    val dims = init.map(coords(_)._2.length).distinct
+    require(dims.length == 1, s"Lloyd fit: init centroids differ in length (${dims.mkString(", ")})")
+    pack(points, vec, dims.head) { blocks =>
+      var cs = init
+      var prevSse = Double.NaN
+      var history = Vector.empty[Double]
+      var it = 0
+      var converged = false
+      while (it < maxIter && !converged) {
+        val st = step(blocks, cs.map(coords))
+        cs = next(cs, st, it)
+        history :+= st.sse
+        if (!prevSse.isNaN && math.abs(prevSse - st.sse) < delta) converged = true
+        prevSse = st.sse
+        it += 1
+      }
+      Fit(cs, prevSse, it, converged, history)
+    }
+  }
 
   /** Packs the `dim`-coordinate vectors `vec` of `points` into cached
     * blocks, runs `fit` over them and unpersists them in `finally`. Rows

@@ -867,7 +867,7 @@ object Modularity {
         .agg(sum(col("d")).as("m"), sum(col("sl")).as("ssl"),
           sum((col("d").cast(d19) * col("d").cast(d19)).cast(d38))
             .cast(DecimalType(38, 0)).as("dsq"))
-        .head
+        .head()
       BigInt(r.getLong(0)) * BigInt(r.getLong(1)) -
         BigInt(r.getDecimal(2).toBigIntegerExact)
     }

@@ -122,7 +122,7 @@ object Similarity {
   /** Sign-bit LSH bucket id (0 .. 2^nPlanes-1) for a vector column. */
   def bucketExpr(v: Column, planes: Seq[Array[Double]]): Column =
     planes.zipWithIndex.map { case (p, i) =>
-      val parr = array(p.map(lit(_)): _*)
+      val parr = array(p.toSeq.map(lit(_)): _*)
       when(ArrayKernels.dotFast(v, parr) >= 0.0, lit(1L << i)).otherwise(lit(0L))
     }.reduce(_ + _)
 
@@ -145,7 +145,7 @@ object Similarity {
 
   /** IVF (inverted-file) ANN: coarse-quantize the corpus by
     * nearest-coarse-centroid (the SAME kernel as k-means assignment —
-    * Assign.nearestND), then search only the query's own cell
+    * Assign.withNearestND), then search only the query's own cell
     * (nprobe=1). The scale shape: cells partition the corpus, each query
     * touches |corpus|/nlist candidates.
     */
@@ -154,15 +154,7 @@ object Similarity {
     val q = celled.where(col("vec_id") < nQueries)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
         col("nrm").as("qnrm"), col("cell"))
-    val joined = broadcast(q)
-      .join(celled.select(col("vec_id"), col("v"), col("nrm"), col("cell")), Seq("cell"))
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("cos5", rnd5(
-        ArrayKernels.dotFast(col("qv"), col("v")) / (col("qnrm") * col("nrm"))))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("cos5").desc, col("vec_id"))
-    joined.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-      .select(col("qid"), col("cell"), col("rk"), col("vec_id"), col("cos5"))
+    ivfServe(celled.select(col("vec_id"), col("v"), col("nrm"), col("cell")), q, k)
   }
 
   /** SemDeDup-style semantic deduplication (Abbas et al. 2023,
@@ -184,7 +176,7 @@ object Similarity {
     * vec_id.
     */
   def semDedup(embDf: DataFrame, coarse: Seq[CentroidND], tau: Double): DataFrame = {
-    val celled = Assign.withNearestNDFull(
+    val celled = Assign.withNearestND(
         withNorm(embDf), col("v"), coarse, "cell", d2Col = Some("_d2"))
       .withColumn("d2c", rnd5(col("_d2")))
       .select(col("vec_id"), col("v"), col("nrm"), col("cell"), col("d2c"))
@@ -291,19 +283,10 @@ object Similarity {
     */
   private def probedScored(embDf: DataFrame, coarse: Seq[CentroidND],
       nQueries: Int, nprobe: Int): DataFrame = {
-    val sorted = coarse.sortBy(_.cid)
-    val celled = Assign.withNearestND(withNorm(embDf), col("v"), sorted, "cell")
-    // per-query distance to every coarse cell, staged as named columns
-    val qDd = withNorm(embDf).where(col("vec_id") < nQueries)
-      .select(Seq(col("vec_id"), col("v"), col("nrm")) ++ sorted.map(c =>
-        ArrayKernels.distSqFast(col("v"), array(c.vec.map(lit(_)): _*))
-          .as(s"_qd${c.cid}")): _*)
-    val probeArr = sort_array(array(sorted.map(c =>
-      struct(col(s"_qd${c.cid}").as("d"), lit(c.cid).as("c"))): _*))
-    val probes = qDd
-      .withColumn("p", explode(slice(probeArr, 1, nprobe)))
+    val celled = Assign.withNearestND(withNorm(embDf), col("v"), coarse, "cell")
+    val probes = probeCells(withNorm(embDf).where(col("vec_id") < nQueries), coarse, nprobe)
       .select(col("vec_id").as("qid"), col("v").as("qv"),
-        col("nrm").as("qnrm"), col("p.c").as("cell"))
+        col("nrm").as("qnrm"), col("cell"))
     broadcast(probes)
       .join(celled.select(col("vec_id"), col("v"), col("nrm"), col("cell")), Seq("cell"))
       .where(col("vec_id") =!= col("qid"))
@@ -359,38 +342,40 @@ object Similarity {
     res
   }
 
-  /** STAGED per-subspace PQ encoding: adds `outPrefix0..outPrefix{M-1}`
-    * code columns (argmin codebook entry per subspace slice of `vCol`).
-    * Same staged-named-columns discipline as [[Assign.withNearestND]]:
-    * each subspace distance is computed once as a named column, so the
-    * plan carries M×K distance subtrees instead of ~2·M×K — identical
-    * IEEE ops, `least`, and lowest-cid tie-break as the inlined form.
+  /** Per-subspace PQ encoding: adds `outPrefix0..outPrefix{M-1}` code
+    * columns, each the `Assign.withNearestND` argmin of the subspace
+    * slice of `vCol` over that subspace's codebook (staged distances,
+    * `least`, lowest-cid tie-break).
     */
-  private def withPqCodes(df0: DataFrame, vCol: String,
-      books: Seq[Seq[CentroidND]], subDim: Int, outPrefix: String): DataFrame = {
-    var coded = df0
-    books.zipWithIndex.foreach { case (codes, s) =>
-      val sub = slice(col(vCol), s * subDim + 1, subDim)
-      val sc = codes.sortBy(_.cid)
-      // temp names derived from outPrefix+subspace so they can't collide
-      // with caller columns or a second staged coding pass
-      def dName(cid: Int) = s"_${outPrefix}${s}_d$cid"
-      val minName = s"_${outPrefix}${s}_min"
-      require(!coded.columns.exists(c =>
-          c == minName || sc.exists(k => dName(k.cid) == c)),
-        s"withPqCodes temp column collision for prefix=$outPrefix$s")
-      coded = coded.select(col("*") +: sc.map(c =>
-          ArrayKernels.distSqFast(sub, array(c.vec.map(lit(_)): _*))
-            .as(dName(c.cid))): _*)
-        .withColumn(minName, least(sc.map(c => col(dName(c.cid))): _*))
-      val code = sc.foldRight(lit(-1): Column) { (c, rest) =>
-        when(col(dName(c.cid)) === col(minName), lit(c.cid)).otherwise(rest)
-      }
-      coded = coded.withColumn(s"$outPrefix$s", code)
-        .drop(sc.map(c => dName(c.cid)) :+ minName: _*)
+  private[graft] def withPqCodes(df: DataFrame, vCol: String,
+      books: Seq[Seq[CentroidND]], subDim: Int, outPrefix: String): DataFrame =
+    books.zipWithIndex.foldLeft(df) { case (coded, (codes, s)) =>
+      Assign.withNearestND(coded, slice(col(vCol), s * subDim + 1, subDim), codes, s"$outPrefix$s")
     }
-    coded
+
+  /** Each row of `q` once per its `nprobe` nearest coarse cells, ranked
+    * by (squared distance of `v`, cid), as column `cell`; the distances
+    * are staged as named columns and dropped.
+    */
+  private def probeCells(q: DataFrame, coarse: Seq[CentroidND], nprobe: Int): DataFrame = {
+    val dists = Assign.distances(col("v"), coarse)
+    val probeArr = sort_array(array(dists.map { case (cid, _) =>
+      struct(col(s"_cd$cid").as("d"), lit(cid).as("c")) }: _*))
+    q.select(col("*") +: dists.map { case (cid, d) => d.as(s"_cd$cid") }: _*)
+      .withColumn("_p", explode(slice(probeArr, 1, nprobe)))
+      .select(q.columns.toSeq.map(col) :+ col("_p.c").as("cell"): _*)
   }
+
+  /** Adds the M ADC lookup tables `dt0..dt{M-1}` of the vector `vCol`:
+    * `dt$s` holds the exact squared distances of its `s`-th subspace
+    * slice to that codebook's entries, in ascending cid.
+    */
+  private def withAdcTables(q: DataFrame, vCol: String,
+      books: Seq[Seq[CentroidND]], subDim: Int): DataFrame =
+    books.zipWithIndex.foldLeft(q) { case (acc, (codes, s)) =>
+      acc.withColumn(s"dt$s", array(Assign.distances(
+        slice(col(vCol), s * subDim + 1, subDim), codes).map(_._2): _*))
+    }
 
   /** Product-quantization top-k via asymmetric distance computation
     * (ADC) — the compressed-corpus ANN path: each corpus vector is
@@ -418,13 +403,8 @@ object Similarity {
       (0 until m).map(s => col(s"cell$s")): _*)
 
     // query side: exact subvectors + the M×K ADC lookup tables
-    var q = n.where(col("vec_id") < nQueries)
-      .select(col("vec_id").as("qid"), col("v").as("qv"))
-    books.zipWithIndex.foreach { case (codes, s) =>
-      val qsub = slice(col("qv"), s * subDim + 1, subDim)
-      q = q.withColumn(s"dt$s", array(codes.sortBy(_.cid).map(c =>
-        ArrayKernels.distSqFast(qsub, array(c.vec.map(lit(_)): _*))): _*))
-    }
+    val q = withAdcTables(n.where(col("vec_id") < nQueries)
+      .select(col("vec_id").as("qid"), col("v").as("qv")), "qv", books, subDim)
     val queries = q.select(col("qid") +: (0 until m).map(s => col(s"dt$s")): _*)
 
     // ADC scan: per (query, corpus) pair, M lookups + adds
@@ -451,44 +431,20 @@ object Similarity {
       nQueries: Int, k: Int, nprobe: Int): DataFrame = {
     val m = books.length
     val subDim = books.head.head.vec.length
-    val sortedCoarse = coarse.sortBy(_.cid)
-    val n = withNorm(embDf)
+    val n = embDf.select(col("vec_id"), col("v"))
 
     // corpus: IVF cell + M PQ codes
     val coded = withPqCodes(
-      Assign.withNearestND(
-        n.select(col("vec_id"), col("v")), col("v"), sortedCoarse, "cell"),
-      "v", books, subDim, "code")
+      Assign.withNearestND(n, col("v"), coarse, "cell"), "v", books, subDim, "code")
     val corpus = coded.select(col("vec_id") +: col("cell") +:
       (0 until m).map(s => col(s"code$s")): _*)
 
     // queries: nprobe nearest cells + ADC tables
-    val qDd = n.where(col("vec_id") < nQueries)
-      .select(Seq(col("vec_id"), col("v")) ++ sortedCoarse.map(c =>
-        ArrayKernels.distSqFast(col("v"), array(c.vec.map(lit(_)): _*))
-          .as(s"_cd${c.cid}")): _*)
-    val probeArr = sort_array(array(sortedCoarse.map(c =>
-      struct(col(s"_cd${c.cid}").as("d"), lit(c.cid).as("c"))): _*))
-    var q = qDd.withColumn("p", explode(slice(probeArr, 1, nprobe)))
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("p.c").as("cell"))
-    books.zipWithIndex.foreach { case (codes, s) =>
-      val qsub = slice(col("qv"), s * subDim + 1, subDim)
-      q = q.withColumn(s"dt$s", array(codes.sortBy(_.cid).map(c =>
-        ArrayKernels.distSqFast(qsub, array(c.vec.map(lit(_)): _*))): _*))
-    }
+    val q = withAdcTables(probeCells(n.where(col("vec_id") < nQueries), coarse, nprobe)
+      .select(col("vec_id").as("qid"), col("v").as("qv"), col("cell")), "qv", books, subDim)
     val probes = q.select(col("qid") +: col("cell") +:
       (0 until m).map(s => col(s"dt$s")): _*)
-
-    val adc = (0 until m)
-      .map(s => element_at(col(s"dt$s"), col(s"code$s") + 1))
-      .reduce(_ + _)
-    val joined = broadcast(probes).join(corpus, Seq("cell"))
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("adc5", rnd5(adc))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc5").asc, col("vec_id"))
-    joined.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-      .select(col("qid"), col("cell"), col("rk"), col("vec_id"), col("adc5"))
+    ivfPqServe(corpus, probes, m, k)
   }
 
   /** Broadcast-model IVF+PQ — the PRODUCTION shape of [[ivfPqTopK]].
@@ -624,14 +580,6 @@ object Similarity {
       .select(col("qid"), col("cell"), col("rk"), col("vec_id"), col("adc5"))
   }
 
-  /** CASE-chain selecting the (literal) centroid array of the cell id in
-    * `cellCol` — the vector the residual is taken against.
-    */
-  private def centroidOf(cellCol: Column, coarse: Seq[CentroidND]): Column =
-    coarse.foldRight(lit(null).cast("array<double>"): Column) { (c, rest) =>
-      when(cellCol === c.cid, array(c.vec.map(lit(_)): _*)).otherwise(rest)
-    }
-
   /** Residual IVF-PQ: like [[ivfPqTopK]], but PQ codes quantize the
     * RESIDUAL v − centroid(cell) with residual-trained codebooks —
     * residuals concentrate near zero, so the same code budget gives
@@ -645,48 +593,25 @@ object Similarity {
       nQueries: Int, k: Int, nprobe: Int): DataFrame = {
     val m = books.length
     val subDim = books.head.head.vec.length
-    val sortedCoarse = coarse.sortBy(_.cid)
-    val n = withNorm(embDf)
+    val n = embDf.select(col("vec_id"), col("v"))
 
     // corpus: cell, residual, codes over residual slices
     val coded = withPqCodes(
-      Assign.withNearestND(
-          n.select(col("vec_id"), col("v")), col("v"), sortedCoarse, "cell")
+      Assign.withNearestND(n, col("v"), coarse, "cell")
         .withColumn("r", zip_with(col("v"),
-          centroidOf(col("cell"), sortedCoarse), (a, b) => a - b)),
+          Assign.centroidOf(col("cell"), coarse), (a, b) => a - b)),
       "r", books, subDim, "code")
     val corpus = coded.select(col("vec_id") +: col("cell") +:
       (0 until m).map(s => col(s"code$s")): _*)
 
     // queries: nprobe cells, probe-local residual, ADC tables from it
-    val qDd = n.where(col("vec_id") < nQueries)
-      .select(Seq(col("vec_id"), col("v")) ++ sortedCoarse.map(c =>
-        ArrayKernels.distSqFast(col("v"), array(c.vec.map(lit(_)): _*))
-          .as(s"_cd${c.cid}")): _*)
-    val probeArr = sort_array(array(sortedCoarse.map(c =>
-      struct(col(s"_cd${c.cid}").as("d"), lit(c.cid).as("c"))): _*))
-    var q = qDd.withColumn("p", explode(slice(probeArr, 1, nprobe)))
-      .select(col("vec_id").as("qid"), col("v").as("qv"), col("p.c").as("cell"))
-      .withColumn("qr", zip_with(col("qv"),
-        centroidOf(col("cell"), sortedCoarse), (a, b) => a - b))
-    books.zipWithIndex.foreach { case (codes, s) =>
-      val qsub = slice(col("qr"), s * subDim + 1, subDim)
-      q = q.withColumn(s"dt$s", array(codes.sortBy(_.cid).map(c =>
-        ArrayKernels.distSqFast(qsub, array(c.vec.map(lit(_)): _*))): _*))
-    }
+    val q = withAdcTables(probeCells(n.where(col("vec_id") < nQueries), coarse, nprobe)
+      .select(col("vec_id").as("qid"), col("cell"),
+        zip_with(col("v"), Assign.centroidOf(col("cell"), coarse), (a, b) => a - b).as("qr")),
+      "qr", books, subDim)
     val probes = q.select(col("qid") +: col("cell") +:
       (0 until m).map(s => col(s"dt$s")): _*)
-
-    val adc = (0 until m)
-      .map(s => element_at(col(s"dt$s"), col(s"code$s") + 1))
-      .reduce(_ + _)
-    val joined = broadcast(probes).join(corpus, Seq("cell"))
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("adc5", rnd5(adc))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc5").asc, col("vec_id"))
-    joined.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-      .select(col("qid"), col("cell"), col("rk"), col("vec_id"), col("adc5"))
+    ivfPqServe(corpus, probes, m, k)
   }
 
   /** Broadcast-model RESIDUAL IVF-PQ — the production shape of
@@ -754,17 +679,7 @@ object Similarity {
           transform(array_sort(collect_list(
             when(col("s") === s, struct(col("bcid"), col("dt"))))),
             e => e.getField("dt")).as(s"dt$s")): _*)
-
-    val adc = (0 until m)
-      .map(s => element_at(col(s"dt$s"), col(s"code$s") + 1))
-      .reduce(_ + _)
-    val joined = broadcast(queries).join(corpus, Seq("cell"))
-      .where(col("vec_id") =!= col("qid"))
-      .withColumn("adc5", rnd5(adc))
-    val w = Window.partitionBy(col("qid"))
-      .orderBy(col("adc5").asc, col("vec_id"))
-    joined.withColumn("rk", row_number().over(w)).where(col("rk") <= k)
-      .select(col("qid"), col("cell"), col("rk"), col("vec_id"), col("adc5"))
+    ivfPqServe(corpus, queries, m, k)
   }
 
   /** Broadcast-table IVF cell assignment — the ingest half of

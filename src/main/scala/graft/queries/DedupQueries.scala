@@ -265,7 +265,7 @@ object DedupQueries {
     "q_store_mor_delete" -> ((s, dir) => {
       val m = graft.sources.StagedLayouts.simhashStoreMorManifest(s, dir)
       val at = m.where(col("action") === "mor-delete")
-        .select(col("table_name"), col("delete_dir"), col("thr")).head
+        .select(col("table_name"), col("delete_dir"), col("thr")).head()
       val store = graft.operators.StoreLifecycle.applyPositionTombstones(
         s.table(at.getString(0)), s.read.parquet(at.getString(1)))
       Dedup.incrementalDedup(store,
@@ -288,9 +288,9 @@ object DedupQueries {
     // undisturbed by the historical read.
     "q_store_time_travel" -> ((s, dir) => {
       val versions = graft.sources.StagedLayouts.simhashStoreVersions(s, dir)
-      val cur = versions.agg(max(col("version"))).head.getInt(0)
+      val cur = versions.agg(max(col("version"))).head().getInt(0)
       val at = versions.where(col("version") === cur - 1)
-        .select(col("table_name"), col("thr")).head
+        .select(col("table_name"), col("thr")).head()
       Dedup.incrementalDedup(s.table(at.getString(0)),
           docs(s, dir).where(col("doc_id") > at.getLong(1)))
         .orderBy("doc_id")

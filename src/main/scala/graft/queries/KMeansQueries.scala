@@ -478,8 +478,7 @@ object KMeansQueries {
     // SURVEY §3.2 documented divergence)
     "kmeans_1d" -> ((s, dir) => {
       val cs = Centroids.k1d
-      Tables.points1d(s, dir)
-        .withColumn("cluster_id", Assign.nearestCid1(col("x"), cs))
+      Assign.withNearest1(Tables.points1d(s, dir), col("x"), cs)
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("cnt"), rnd(avg(col("x")), 4).as("new_x"))
         .orderBy("cluster_id")
@@ -505,7 +504,7 @@ object KMeansQueries {
     // free-convergence kmeans_fit_nd.
     "kmeans_fit_nd_unrolled" -> ((s, dir) => {
       val cs = unrolledCentroidsND(s, dir)
-      Assign.withNearestNDFull(ndPoints(s, dir), col("v"), cs,
+      Assign.withNearestND(ndPoints(s, dir), col("v"), cs,
           "cluster_id", d2Col = Some("dmin"))
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)).as("cnt"),

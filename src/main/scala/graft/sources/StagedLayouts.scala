@@ -114,7 +114,7 @@ object StagedLayouts {
     * new batch.
     */
   private def prefixThreshold(df: DataFrame, id: String): Long =
-    df.agg(max(col(id))).head.getLong(0) * 4 / 5
+    df.agg(max(col(id))).head().getLong(0) * 4 / 5
 
   private def stageDir(s: SparkSession, sfDir: String): String =
     stage("events", sfDir) { tmp =>
@@ -588,7 +588,7 @@ object StagedLayouts {
   private def tableLocation(s: SparkSession, tableName: String): String =
     s.sql(s"DESCRIBE TABLE EXTENDED $tableName")
       .where(col("col_name") === "Location")
-      .head.getString(1)
+      .head().getString(1)
 
   /** Parquet data-file count of a staged TABLE's directory — the
     * compaction A/B measurement (IncrementalSpec).

@@ -451,7 +451,7 @@ object EventStream {
     val q = stream.writeStream.outputMode(OutputMode.Update())
       .foreachBatch { (batch: Dataset[org.apache.spark.sql.Row], _: Long) =>
         val (cs, acc) = state.get()
-        val assigned = batch.withColumn("cluster_id", Assign.nearestCid1(col("x"), cs))
+        val assigned = Assign.withNearest1(batch, col("x"), cs)
           .groupBy(col("cluster_id"))
           .agg(count(lit(1)).as("n"), sum(col("x")).as("sx"))
           .collect()

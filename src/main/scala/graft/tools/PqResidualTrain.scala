@@ -21,18 +21,13 @@ object PqResidualTrain {
   def main(args: Array[String]): Unit = {
     val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
-    val cells = TrainedIvfCentroids.cells.sortBy(_.cid)
+    val cells = TrainedIvfCentroids.cells
     val emb = Tables.embeddings(spark, "/root/testdata/sf0.01")
       .select(col("vec_id"), toDoubleArray(col("embedding")).as("vec"))
     // residual = vec − centroid of the assigned cell
-    val celled = KMeansND.withNearest(emb.select(col("vec_id"), col("vec")), cells)
-    val centArr = cells.foldRight(lit(null)
-        .cast("array<double>"): org.apache.spark.sql.Column) { (c, rest) =>
-      when(col("cluster_id") === c.cid, array(c.vec.map(lit(_)): _*)).otherwise(rest)
-    }
-    val resid = celled.withColumn("cent", centArr)
-      .withColumn("vec", zip_with(col("vec"), col("cent"), (a, b) => a - b))
-      .select(col("vec_id"), col("vec"))
+    val resid = Assign.withNearestND(emb, col("vec"), cells, "cell")
+      .select(col("vec_id"),
+        zip_with(col("vec"), Assign.centroidOf(col("cell"), cells), (a, b) => a - b).as("vec"))
     val sb = new StringBuilder
     sb.append("package graft.operators\n\n")
     sb.append("/** RESIDUAL product-quantization codebooks (per-cell residual\n")

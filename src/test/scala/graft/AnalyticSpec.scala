@@ -579,7 +579,7 @@ class AnalyticSpec extends SparkSpec {
     val od = Tables.orders(spark, sf).select(col("o_orderkey").as("k"))
     val exact = li.join(od, Seq("k")).count()
     def estAt(w: Int): Long = graft.operators.CountMin
-      .joinSizeEstimate(li, od, w).head.getLong(0)
+      .joinSizeEstimate(li, od, w).head().getLong(0)
     // the bound holds even at a deliberately collision-heavy width,
     // and the gap is the visible collision mass
     val coarse = estAt(64)

@@ -227,7 +227,7 @@ class ExtensionSpec extends SparkSpec {
     val got = EventStream.incrementalAssign(spark, tmp.getAbsolutePath, init)
     // single micro-batch -> equals one batch Lloyd step on the same data
     val batch = Tables.events(spark, sf).select(col("value").as("x"))
-    val assigned = batch.withColumn("cluster_id", Assign.nearestCid1(col("x"), init))
+    val assigned = Assign.withNearest1(batch, col("x"), init)
       .groupBy("cluster_id").agg(avg(col("x")).as("m")).collect()
       .map(r => r.getInt(0) -> r.getDouble(1)).toMap
     got.foreach { c =>

@@ -930,7 +930,7 @@ class GraphSpec extends SparkSpec {
     val edges = GraphQueries.supplyEdges(spark, sf)
     val fromSizes = HyperBall.neighborhoodSizes(edges, rounds = 3)
       .agg(sum(floor(col("est_raw") * 100 + lit(0.5)).cast("long")))
-      .head.getLong(0)
+      .head().getLong(0)
     assert(nf.last._2 == fromSizes,
       s"neighborhoodFunction final mass ${nf.last._2} != sizes-derived $fromSizes")
   }

@@ -15,7 +15,7 @@ class IncrementalSpec extends SparkSpec {
   private def docs = Tables.documents(spark, sf)
 
   private def bounds: (Long, Long) = {
-    val maxId = docs.agg(max(col("doc_id"))).head.getLong(0)
+    val maxId = docs.agg(max(col("doc_id"))).head().getLong(0)
     (maxId * 4 / 5, maxId)
   }
 
@@ -85,7 +85,7 @@ class IncrementalSpec extends SparkSpec {
     import graft.operators.{Similarity, TrainedIvfCentroids}
     val cells = TrainedIvfCentroids.cells
     val emb = Similarity.emb(spark, sf)
-    val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
+    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
     val thr = maxId * 4 / 5
     val store = Similarity.ivfAssignBroadcast(
       emb.where(col("vec_id") <= thr), cells)
@@ -122,7 +122,7 @@ class IncrementalSpec extends SparkSpec {
     val cells = TrainedIvfCentroids.cells
     val books = TrainedPqCodebooks.books
     val emb = Similarity.emb(spark, sf)
-    val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
+    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
     val thr = maxId * 4 / 5
     def enc(df: org.apache.spark.sql.DataFrame) =
       Similarity.ivfPqEncodeBroadcast(df, cells, books)
@@ -441,7 +441,7 @@ class IncrementalSpec extends SparkSpec {
     import graft.operators.{Similarity, TrainedIvfCentroids}
     val cells = TrainedIvfCentroids.cells
     val emb = Similarity.emb(spark, sf)
-    val maxId = emb.agg(max(col("vec_id"))).head.getLong(0)
+    val maxId = emb.agg(max(col("vec_id"))).head().getLong(0)
     val thr = maxId * 4 / 5
 
     def celled(df: org.apache.spark.sql.DataFrame) =
@@ -485,7 +485,7 @@ class IncrementalSpec extends SparkSpec {
     import graft.operators.{Similarity, StoreLifecycle, TrainedIvfCentroids}
     val cells = TrainedIvfCentroids.cells
     val emb = Similarity.emb(spark, sf)
-    val thr = emb.agg(max(col("vec_id"))).head.getLong(0) * 4 / 5
+    val thr = emb.agg(max(col("vec_id"))).head().getLong(0) * 4 / 5
     val keptAll = Similarity.semDedup(emb, cells, 0.4)
       .select("vec_id").collect().map(_.getLong(0)).toSet
     val live = emb.where(!StoreLifecycle.semTombstonedVecs(col("vec_id"), thr))

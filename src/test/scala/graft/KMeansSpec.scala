@@ -19,7 +19,7 @@ class KMeansSpec extends SparkSpec {
     val got = df.select(
       graft.functions.VecFunctions.distSq2(col("x"), col("y"), lit(3.0), lit(4.0)),
       graft.functions.VecFunctions.distSq1(col("x"), lit(5.0)),
-      graft.functions.VecFunctions.distSqN(col("v"), array(c.map(lit(_)): _*)))
+      graft.functions.VecFunctions.distSqN(col("v"), array(c.toSeq.map(lit(_)): _*)))
       .collect()
     rows.zip(got).foreach { case ((x, y, v), r) =>
       val d2 = (x - 3.0) * (x - 3.0) + (y - 4.0) * (y - 4.0)
@@ -42,8 +42,52 @@ class KMeansSpec extends SparkSpec {
     // 1-D tie
     val cs1 = Seq(Centroid1D(0, 5.0), Centroid1D(1, 15.0))
     val df1 = Seq(10.0).toDF("x")
-    val cid1 = df1.select(Assign.nearestCid1(col("x"), cs1)).head().getInt(0)
+    val cid1 = Assign.withNearest1(df1, col("x"), cs1).select("cluster_id").head().getInt(0)
     assert(cid1 == 0)
+    // n-dim, with and without the winning distance kept
+    val csN = cs.map(c => CentroidND(c.cid, Array(c.cx, c.cy)))
+    val vecs = Seq(Tuple1(Array(15.0, 0.0))).toDF("v")
+    val nd = Assign.withNearestND(vecs, col("v"), csN, "cell").head()
+    assert(nd.getAs[Int]("cell") == 1 && nd.schema.fieldNames.toSeq == Seq("v", "cell"))
+    val ndD = Assign.withNearestND(vecs, col("v"), csN, "cell", d2Col = Some("d")).head()
+    assert(ndD.getAs[Int]("cell") == 1 && ndD.getAs[Double]("d") == 25.0)
+    // one PQ subspace code: subspace 1 = (15, 0) ties entries 1 and 2
+    val book = Seq(csN, csN)
+    val pq = Similarity.withPqCodes(Seq(Tuple1(Array(0.0, 0.0, 15.0, 0.0))).toDF("v"),
+      "v", book, subDim = 2, outPrefix = "code").head()
+    assert(pq.getAs[Int]("code0") == 0 && pq.getAs[Int]("code1") == 1)
+    // a null input matches no centroid: -1 (and a null distance)
+    val nulls = Seq((Some(15.0), 0.0), (None, 0.0)).toDF("x", "y")
+    assert(Assign.withNearest(nulls, cs).orderBy(col("x").asc_nulls_last)
+      .select("cluster_id").collect().map(_.getInt(0)).toSeq == Seq(1, -1))
+    // (one centroid: `least` is skipped)
+    assert(Assign.withNearest1(nulls, col("x"), Seq(Centroid1D(0, 0.0)))
+      .where(col("x").isNull).select("cluster_id").head().getInt(0) == -1)
+    val nullVecs = Seq(Tuple1(Some(Array(15.0, 0.0))), Tuple1(None)).toDF("v")
+    val ndNull = Assign.withNearestND(nullVecs, col("v"), csN, "cell", d2Col = Some("d"))
+      .where(col("v").isNull).head()
+    assert(ndNull.getAs[Int]("cell") == -1 && ndNull.isNullAt(ndNull.fieldIndex("d")))
+    // an input column named like a temp column fails loudly
+    Seq("_cell_d1", "_cell_min").foreach { taken =>
+      val e = intercept[IllegalArgumentException](
+        Assign.withNearestND(vecs.withColumn(taken, lit(0)), col("v"), csN, "cell"))
+      assert(e.getMessage.contains("temp column collision"), e.getMessage)
+    }
+    intercept[IllegalArgumentException](Assign.withNearest(df.withColumn("d2", lit(0.0)), cs))
+  }
+
+  test("one argmin rule: no CASE chain or literal-centroid distance outside Assign.scala") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    val literalDist = """distSqFast\([^\n]*,\s*array\(""".r
+    val hits: Seq[Path] = scala.util.Using.resource(Files.walk(Paths.get("src/main/scala")))(
+      _.iterator.asScala.filter { p =>
+        p.toString.endsWith(".scala") && p.getFileName.toString != "Assign.scala" && {
+          val src = Files.readString(p)
+          src.contains("foldRight(lit(-1)") || literalDist.findFirstIn(src).nonEmpty
+        }
+      }.toList)
+    assert(hits.isEmpty, s"argmin copies outside Assign.scala: ${hits.mkString(", ")}")
   }
 
   test("expression form == relational form on fixture data (J1 cross-check)") {
@@ -110,6 +154,69 @@ class KMeansSpec extends SparkSpec {
     assert(res.converged && res.iterations < 50)
   }
 
+  test("stop rule: |ΔSSE| < delta after the first pass, in both fits, bit-identical") {
+    import spark.implicits._
+    val rnd = new scala.util.Random(41)
+    val raw = Seq.tabulate(400) { i =>
+      val (bx, by) = Seq((10.0, 10.0), (60.0, 15.0), (30.0, 70.0), (80.0, 80.0))(i % 4)
+      (bx + rnd.nextGaussian() * 12, by + rnd.nextGaussian() * 12)
+    }
+    // one partition: the kernel's partial sums are the replay's sums
+    val pts = spark.sparkContext.parallelize(raw, 1).toDF("x", "y")
+    val vecs = pts.select(array(col("x"), col("y")).as("vec"))
+    val init = Seq(Centroid2D(0, 0.0, 0.0), Centroid2D(1, 5.0, 0.0),
+      Centroid2D(2, 0.0, 5.0), Centroid2D(3, 5.0, 5.0))
+    val maxIter = 30
+    // plain-Scala Lloyd replay (strict-< argmin, KeepOld): SSE per pass
+    val sses = {
+      var cs = init.map(c => (c.cx, c.cy))
+      (0 until maxIter).map { _ =>
+        val acc = Array.fill(cs.length)(Array(0.0, 0.0, 0.0, 0.0)) // n, sx, sy, sse
+        raw.foreach { case (x, y) =>
+          val d = cs.map { case (cx, cy) => 0.0 + (x - cx) * (x - cx) + (y - cy) * (y - cy) }
+          val j = d.indices.foldLeft(0)((b, i) => if (d(i) < d(b)) i else b)
+          acc(j)(0) += 1.0; acc(j)(1) += x; acc(j)(2) += y; acc(j)(3) += d(j)
+        }
+        cs = cs.indices.map(j =>
+          if (acc(j)(0) > 0) (acc(j)(1) / acc(j)(0), acc(j)(2) / acc(j)(0)) else cs(j))
+        acc.filter(_(0) > 0).foldLeft(0.0)(_ + _(3))
+      }
+    }
+    // ds(i) = |ΔSSE| at pass i + 1 (1-based), for passes 2 .. maxIter
+    val ds = sses.sliding(2).map { case Seq(a, b) => math.abs(a - b) }.toIndexedSeq
+    def stopAt(delta: Double) = ds.indexWhere(_ < delta) match {
+      case -1 => (maxIter, false)
+      case i => (i + 2, true)
+    }
+    // the first pass ≥ 3 whose |ΔSSE| is below every earlier one
+    val t = (1 until ds.length).find(i => ds(i) < ds.take(i).min).get
+    def fits(delta: Double, n: Int = maxIter) = {
+      val a = KMeansLoop.fit(spark, pts, init, maxIter = n, delta = delta)
+      val b = KMeansND.fit(spark, vecs,
+        init.map(c => CentroidND(c.cid, Array(c.cx, c.cy))), maxIter = n, delta = delta)
+      assert(a.iterations == b.iterations && a.converged == b.converged)
+      assert(a.sse.equals(b.sse), s"sse ${a.sse} vs ${b.sse}")
+      assert(a.centroids.map(c => (c.cid, c.cx, c.cy)) ==
+        b.centroids.map(c => (c.cid, c.vec(0), c.vec(1))))
+      a
+    }
+    val full = fits(0.0)
+    assert(full.sseHistory == sses && !full.converged && full.iterations == maxIter)
+    // a delta between two known |ΔSSE| values stops at exactly pass t + 2
+    val between = fits((ds(t) + ds.take(t).min) / 2)
+    assert((between.iterations, between.converged) == (t + 2, true))
+    assert(between.sse == sses(t + 1) && between.sseHistory == sses.take(t + 2))
+    // |ΔSSE| equal to delta does not stop: the comparison is strict
+    val equal = fits(ds(t))
+    assert((equal.iterations, equal.converged) == stopAt(ds(t)) && equal.iterations != t + 2)
+    // the first pass has no previous SSE: even an infinite delta runs two
+    val inf = fits(Double.PositiveInfinity)
+    assert((inf.iterations, inf.converged) == (2, true))
+    // no pass: 0 iterations, NaN sse, the init centroids
+    val none = fits(0.5, n = 0)
+    assert(none.iterations == 0 && none.sse.isNaN && !none.converged && none.centroids == init)
+  }
+
   test("result invariant under row order (property: repartition+shuffle)") {
     val pts = Tables.points2d(spark, sf)
     val shuffled = pts.repartition(7, col("y"))
@@ -168,10 +275,10 @@ class KMeansSpec extends SparkSpec {
       assert(close(c.cx, m(0)) && close(c.cy, m(1)))
     }
 
-    // n-dim: Assign.withNearestNDFull + groupBy, on the same 2-dim points
+    // n-dim: Assign.withNearestND + groupBy, on the same 2-dim points
     // (tie + empty cluster) and on the 64-dim embeddings
     def wantND(vecs: DataFrame, ccs: Seq[CentroidND], dim: Int) =
-      Assign.withNearestNDFull(vecs, col("vec"), ccs, "cluster_id", Some("d2"))
+      Assign.withNearestND(vecs, col("vec"), ccs, "cluster_id", Some("d2"))
         .groupBy(col("cluster_id"))
         .agg(count(lit(1)), (0 until dim).map(i => avg(col("vec")(i))) :+ sum(col("d2")): _*)
         .collect()

@@ -159,18 +159,18 @@ class RecallSpec extends SparkSpec {
       val total = books.zipWithIndex.map { case (codes, s) =>
         least(codes.map(c => ArrayKernels.distSqFast(
           slice(col("v"), s * subDim + 1, subDim),
-          array(c.vec.map(lit(_)): _*))): _*)
+          array(c.vec.toSeq.map(lit(_)): _*))): _*)
       }.reduce(_ + _)
       vecCol.agg(sum(total)).collect().head.getDouble(0)
     }
 
     val raw = distortion(emb.select(col("v")), TrainedPqCodebooks.books)
-    val celled = KMeansND.withNearest(emb.select(col("vec_id"), col("v").as("vec"))
-        .withColumnRenamed("vec", "vec"), cells)
+    val celled = Assign.withNearestND(emb.select(col("vec_id"), col("v").as("vec")),
+      col("vec"), cells, "cluster_id")
     val resid = celled.withColumn("cent",
         cells.foldRight(lit(null).cast("array<double>"): org.apache.spark.sql.Column) {
           (c, rest) => when(col("cluster_id") === c.cid,
-            array(c.vec.map(lit(_)): _*)).otherwise(rest)
+            array(c.vec.toSeq.map(lit(_)): _*)).otherwise(rest)
         })
       .select(zip_with(col("vec"), col("cent"), (a, b) => a - b).as("v"))
     val res = distortion(resid, TrainedResidualPq.books)

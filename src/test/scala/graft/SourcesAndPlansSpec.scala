@@ -136,6 +136,6 @@ class SourcesAndPlansSpec extends SparkSpec {
     assert(attempts.map(_._3).sum == 1000) // no rows lost across the retry
     val byPart = attempts.map(a => a._1 -> a._2).toMap
     assert(byPart(3) == 1, "partition 3 should have succeeded on attempt 1")
-    assert(byPart.filterKeys(_ != 3).values.forall(_ == 0))
+    assert(byPart.view.filterKeys(_ != 3).values.forall(_ == 0))
   }
 }

@@ -55,7 +55,7 @@ class SpatialSpec extends SparkSpec {
 
   test("kth-NN distance clears the cell bound (prune-losslessness margin)") {
     val maxKth = SpatialGrid.knnGrid(pts, cell, nProbes, k)
-      .agg(max(sqrt(col("d2")))).head.getDouble(0)
+      .agg(max(sqrt(col("d2")))).head().getDouble(0)
     assert(maxKth < cell,
       s"5th-NN $maxKth must stay under cell=$cell or the 3x3 prune can drop a true neighbor")
   }
@@ -68,7 +68,7 @@ class SpatialSpec extends SparkSpec {
 
   test("cell stats partition the point count exactly") {
     val stats = SpatialGrid.cellStats(pts, 25.0)
-    val total = stats.agg(sum(col("n"))).head.getLong(0)
+    val total = stats.agg(sum(col("n"))).head().getLong(0)
     assert(total === pts.count())
     // every point's cell is present
     val missing = pts

@@ -937,7 +937,7 @@ class TextOpsSpec extends SparkSpec {
         r.getLong(3), r.getString(4)))
     val rows = Tables.documents(spark, sf).select("doc_id", "text", "lang")
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
-    val kn = kn3Replay(rows.map(r => (r._1, r._2)), nProbe = Int.MaxValue,
+    val kn = kn3Replay(rows.toSeq.map(r => (r._1, r._2)), nProbe = Int.MaxValue,
       trainLt = 5)
     val langOf = rows.map(r => r._1 -> r._3).toMap
     // score_n = score_u DIV n_trigrams, then the exact DESCENDING

@@ -99,8 +99,8 @@ class WarehouseSpec extends SparkSpec {
       s"flagged ranges diverge: extra=${flagged -- changedBase -- inserted} " +
         s"missing=${(changedBase ++ inserted) -- flagged}")
     // counts on flagged ranges reconcile with the row-level CDC ops
-    val nA = q("q_table_diff_ranges").agg(sum(col("n_a"))).head.getLong(0)
-    val nB = q("q_table_diff_ranges").agg(sum(col("n_b"))).head.getLong(0)
+    val nA = q("q_table_diff_ranges").agg(sum(col("n_a"))).head().getLong(0)
+    val nB = q("q_table_diff_ranges").agg(sum(col("n_b"))).head().getLong(0)
     val dels = keys.count(_ % 97 == 0)
     val ins = keys.count(_ % 101 == 0)
     assert(nB - nA == ins - dels,
