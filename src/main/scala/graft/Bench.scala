@@ -16,20 +16,13 @@ object Bench {
     // session would have amortized anyway). Round-2 profiling showed the
     // top cold numbers were exactly this JIT cost (minhash 14.5 s cold
     // vs 3.5 s warm at sf0.1).
-    // dev-loop filters: SPARK_GRAFT_ONLY=q1,q2 benches just those
-    // queries; SPARK_GRAFT_SKIP excludes (derived-scale runs drop the
-    // declared brute-force baselines)
-    val only = sys.env.get("SPARK_GRAFT_ONLY")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-    val skip = sys.env.get("SPARK_GRAFT_SKIP")
-      .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
+    // dev-loop filters: SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP
+    val selected = SparkEntry.selectedQueries
     val warmDir = sys.env.getOrElse("SPARK_GRAFT_WARM_DIR", "/root/testdata/sf0.001")
     if (new java.io.File(warmDir).isDirectory && warmDir != sfDir) {
       val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
       try {
-        SparkEntry.queries.toSeq
-          .filter { case (n, _) => (only.isEmpty || only(n)) && !skip(n) }
-          .map { case (_, fn) =>
+        selected.map { case (_, fn) =>
           pool.submit(new Runnable {
             override def run(): Unit =
               try fn(spark, warmDir).count() catch { case _: Throwable => }
@@ -41,9 +34,7 @@ object Bench {
     // headline) and warm (second run: steady-state compute, the number
     // that scales with data volume)
     val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    val results = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter(q => (only.isEmpty || only(q._1)) && !skip(q._1))
-      .map { case (name, fn) =>
+    val results = selected.sortBy(_._1).map { case (name, fn) =>
       def once(): Double = {
         val t0 = System.nanoTime()
         try { fn(spark, sfDir).count() } catch {

@@ -26,6 +26,19 @@ object SparkEntry {
       WarehouseQueries.queries ++ GraphQueries.queries ++
       QualityQueries.queries ++ SpatialQueries.queries
 
+  /** [[queries]] under the dev-loop filters Bench and Verify share
+    * (unset, every query runs): `SPARK_GRAFT_ONLY=q1,q2` keeps just
+    * those queries, `SPARK_GRAFT_SKIP` drops those (derived-scale runs
+    * drop the declared brute-force baselines).
+    */
+  def selectedQueries: Seq[(String, (SparkSession, String) => DataFrame)] = {
+    def names(env: String): Set[String] =
+      sys.env.get(env).map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty)
+    val only = names("SPARK_GRAFT_ONLY")
+    val skip = names("SPARK_GRAFT_SKIP")
+    queries.toSeq.filter { case (n, _) => (only.isEmpty || only(n)) && !skip(n) }
+  }
+
   /** For each key in queries, equivalent ANSI SQL runnable by DuckDB on
     * the same parquet tables. Omitted keys (iterative fits, MLlib) get the
     * weaker rows-only check.

@@ -23,13 +23,6 @@ object Verify {
         .flatMap(v => scala.util.Try(v.trim.toInt).toOption)
         .filter(_ > 0).getOrElse(4))
     try {
-      // dev-loop filters (driver never sets them): dump only these /
-      // all-but-these queries — SKIP exists for derived-scale runs where
-      // the declared brute-force baselines are intentionally excluded
-      val only = sys.env.get("SPARK_GRAFT_ONLY")
-        .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
-      val skip = sys.env.get("SPARK_GRAFT_SKIP")
-        .map(_.split(",").map(_.trim).toSet).getOrElse(Set.empty[String])
       // longest-first scheduling: the handful of multi-second queries
       // (streaming sinks, dedup/graph iteration families, k-means fits)
       // go to the pool first so they overlap the long tail of sub-second
@@ -39,8 +32,8 @@ object Verify {
         "pipeline_", "sim_", "q_tpch_q2", "q_tpch_q16", "q_tpch_q21")
       def costRank(n: String): Int =
         if (slowPrefixes.exists(n.startsWith)) 0 else 1
-      val tasks = SparkEntry.queries.toSeq
-        .filter(q => (only.isEmpty || only(q._1)) && !skip(q._1))
+      // dev-loop filters: SPARK_GRAFT_ONLY / SPARK_GRAFT_SKIP
+      val tasks = SparkEntry.selectedQueries
         .sortBy { case (n, _) => (costRank(n), n) }
         .map { case (name, fn) =>
         pool.submit(new Runnable {

@@ -46,7 +46,7 @@ object Betweenness {
     * join conditions: frontier and visited DERIVE from the edge frame,
     * so dataset-tagged refs (e("dst")) trip the ambiguous-self-join
     * check as soon as eager = false leaves the lineage untruncated
-    * (the PlanAudit pipeline).
+    * (the lazy, explainable pipeline).
     */
   def forward(edges: DataFrame, seeds: DataFrame, rounds: Int,
               eager: Boolean = true): DataFrame = {

@@ -51,7 +51,7 @@ object KCore {
   /** Fixed-`rounds` peel (oracle-replayable). Returns (node, deg):
     * surviving nodes with their degree inside the surviving subgraph.
     * `eager = false` skips the per-round lineage truncation so the
-    * whole pipeline stays explainable (PlanAudit only).
+    * whole pipeline stays explainable with `.explain`.
     */
   def peel(edges: DataFrame, k: Int, rounds: Int, eager: Boolean = true): DataFrame = {
     if (eager) {

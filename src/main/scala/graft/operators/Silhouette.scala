@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Squared-Euclidean silhouette (Rousseeuw 1987; the one-pass
@@ -115,21 +115,19 @@ object Silhouette {
     * floats are the final per-pair ratios (identical IEEE ops on both
     * engines) floored to micros. Pairs with coincident centroids
     * (M² = 0) are excluded from the max, and a cluster with no valid
-    * pair reports 0 — both rules pinned in the oracle. The plan is the
-    * same honest shape as [[report]]: one map-side-combined aggregate
-    * produces the per-cluster row, and the max ranges over the OTHER
-    * clusters' stats riding in as K−1 literals per arm.
+    * pair reports 0 — both rules pinned in the oracle. The K output
+    * rows are built from the already-collected stats (`cs`, via
+    * [[dbLeaves]]), so no second pass over the points runs; the max
+    * ranges over the OTHER clusters' stats riding in as K−1 literals
+    * per arm.
     */
-  def daviesBouldin(ints: DataFrame, cs: Seq[ClusterStats]): DataFrame = {
+  def daviesBouldin(spark: SparkSession, cs: Seq[ClusterStats]): DataFrame = {
     require(cs.nonEmpty, "davies-bouldin of an empty assignment")
+    import spark.implicits._
     val ls = dbLeaves(cs)
-    val agg = ints.groupBy(col("cluster_id"))
-      .agg(count(lit(1)).as("n"), sum(col("xi")).as("sx"),
-        sum(col("yi")).as("sy"), sum(col("q")).as("sq"))
-      .withColumn("mx", expr("sx DIV n")).withColumn("my", expr("sy DIV n"))
-      .withColumn("s2own", expr(
-        "CAST(sq - 2 * (mx * sx + my * sy) + n * (mx * mx + my * my) " +
-          "AS DOUBLE) / CAST(n AS DOUBLE)"))
+    val agg = ls.map(l => (l.cid, l.n, l.mx, l.my, l.sse))
+      .toDF("cluster_id", "n", "mx", "my", "sse")
+      .withColumn("s2own", expr("CAST(sse AS DOUBLE) / CAST(n AS DOUBLE)"))
     val rmax: Column = ls.foldLeft(lit(null).cast("double")) { (acc, me) =>
       val terms = ls.filter(o => o.cid != me.cid).flatMap { o =>
         val m2 = (me.mx - o.mx) * (me.mx - o.mx) +

@@ -10,9 +10,10 @@ import graft.queries.QueryHelpers._
   * (SURVEY §2: S1, P1, J1, J2, A1, A4, A5, A6; §7.1 minimum slice).
   *
   * Spark side uses the expression-form assignment (no shuffle, full
-  * codegen); the oracle SQL uses the equivalent relational form
-  * (cross join + window-min + lowest-cid tie-break). Both evaluate the
-  * identical float arithmetic, so assignments match bit-for-bit.
+  * codegen); the oracle SQL builds every assignment and unrolled fit
+  * through [[lloydCtes]] (per-row `least()` + first-match CASE,
+  * lowest-cid tie-break). Both evaluate the identical float arithmetic,
+  * so assignments match bit-for-bit.
   */
 object KMeansQueries {
 
@@ -22,50 +23,96 @@ object KMeansQueries {
   private def assigned2d(spark: SparkSession, sfDir: String, cs: Seq[Centroid2D]): DataFrame =
     Assign.withNearest(Tables.points2d(spark, sfDir), cs)
 
+  /** Per-cluster step stats of an assignment (count, 4dp means, SSE in
+    * 1e9 units): the tail kmeans_step and kmeans_fit_unrolled share. */
+  private def stepStats(assigned: DataFrame): DataFrame =
+    assigned.groupBy(col("cluster_id"))
+      .agg(count(lit(1)).as("cnt"),
+        rnd(avg(col("x")), 4).as("new_x"),
+        rnd(avg(col("y")), 4).as("new_y"),
+        rnd(sum(col("d2")) / lit(1e9), 2).as("sse_e9"))
+      .orderBy("cluster_id")
+
   // ---- shared oracle SQL fragments ----
 
-  /** CTEs p (points), d (per-centroid distances), a (assignment).
-    *
-    * The SQL mirrors the Spark expression form token-for-token: per-row
-    * scalar `least()` + first-match CASE chain (lowest cid wins ties,
-    * mapper.py:43 strict `<`). No window/grouping — so no unique-key
-    * requirement ((l_orderkey, l_linenumber) is NOT unique in the
-    * synthetic fixtures) and bit-identical float evaluation on both
-    * engines.
+  /** The one SQL argmin: `d` computes one distance column dd<k> per
+    * centroid (ascending cid) over `from`, `n` adds their `least()` as
+    * dmin and `a` keeps `keep`, dmin and the first cid whose distance
+    * equals it. The first-match CASE mirrors the Spark expression form
+    * token-for-token: lowest cid wins ties (mapper.py:43 strict `<`), a
+    * null distance (an empty cluster's pivoted NULL centroid) drops out
+    * of `least()` and never matches, and a row with no distance at all
+    * gets -1. No window or grouping, so no unique-key requirement
+    * ((l_orderkey, l_linenumber) is NOT unique in the synthetic
+    * fixtures) and bit-identical float evaluation on both engines.
     */
-  private def assignCtes(cs: Seq[Centroid2D]): String = {
-    val sorted = cs.sortBy(_.cid)
-    val dcols = sorted.map { c =>
-      val cx = Centroids.sqlDouble(c.cx); val cy = Centroids.sqlDouble(c.cy)
-      s"(x - $cx)*(x - $cx) + (y - $cy)*(y - $cy) AS dd${c.cid}"
-    }.mkString(",\n        ")
-    val leastArgs = sorted.map(c => s"dd${c.cid}").mkString(", ")
-    val caseArms = sorted.map(c => s"WHEN dd${c.cid} = d2 THEN ${c.cid}").mkString(" ")
-    s"""WITH p AS (SELECT l_orderkey, l_linenumber, l_extendedprice AS x, l_quantity AS y FROM lineitem),
-       |d AS (SELECT l_orderkey, l_linenumber, x, y,
-       |        $dcols
-       |      FROM p),
-       |m AS (SELECT *, least($leastArgs) AS d2 FROM d),
-       |a AS (SELECT l_orderkey, l_linenumber, x, y, d2,
-       |        CAST(CASE $caseArms ELSE -1 END AS INT) AS cluster_id
-       |      FROM m)""".stripMargin
+  private def argmin(d: String, n: String, a: String, from: String,
+      keep: Seq[String], dists: Seq[(Int, String)], cidCol: String): Seq[String] = {
+    val cols = keep.mkString(", ")
+    val dcols = dists.map { case (k, e) => s"$e AS dd$k" }.mkString(",\n        ")
+    val leastArgs = dists.map { case (k, _) => s"dd$k" }.mkString(", ")
+    val caseArms = dists.map { case (k, _) => s"WHEN dd$k = dmin THEN $k" }.mkString(" ")
+    Seq(s"$d AS (SELECT $cols,\n        $dcols\n      FROM $from)",
+      s"$n AS (SELECT *, least($leastArgs) AS dmin FROM $d)",
+      s"$a AS (SELECT $cols, dmin, CAST(CASE $caseArms ELSE -1 END AS INT) AS $cidCol FROM $n)")
   }
 
-  /** Same, 1-D over l_quantity. */
-  private def assignCtes1d(cs: Seq[Centroid1D]): String = {
-    val sorted = cs.sortBy(_.cid)
-    val dcols = sorted.map { c =>
-      val cx = Centroids.sqlDouble(c.c)
-      s"(x - $cx)*(x - $cx) AS dd${c.cid}"
+  /** `WITH` CTEs of `iters` unrolled Lloyd passes plus a final
+    * assignment, the oracle twin of [[Assign]] (`iters = 0`) and of the
+    * unrolled fits (SURVEY §5.1 promise; the reference's driver loop
+    * master.py:352-366). `p` is `points`; `w0` holds `init` as one
+    * `DOUBLE[]` column c<k> per cid. Pass i assigns `p CROSS JOIN
+    * w(i-1)` (d<i>, n<i>, a<i>) with the scalar ascending distance chain
+    * `(x - c<k>[1])*(x - c<k>[1]) + …` the Spark kernels evaluate; between
+    * passes g<i> takes the per-cluster means of `coords` rounded at 4dp
+    * (the §7.5 cross-engine contract) and w<i> pivots them to ONE row,
+    * so "centroids become the next pass's constants" needs no unique
+    * point key. An empty cluster pivots to NULL and drops out of the
+    * argmin, exactly as its cid is absent from the Spark side's
+    * collected literal set. The last assignment is `a`: `carry`, dmin,
+    * cluster_id.
+    */
+  private def lloydCtes(points: String, carry: Seq[String], coords: Seq[String],
+      init: Seq[(Int, Array[Double])], iters: Int): String = {
+    val sorted = init.sortBy(_._1)
+    val cids = sorted.map(_._1)
+    def dist(k: Int): String = coords.zipWithIndex.map { case (x, j) =>
+      s"($x - c$k[${j + 1}])*($x - c$k[${j + 1}])"
+    }.mkString(" + ")
+    val w0 = sorted.map { case (k, v) =>
+      v.map(Centroids.sqlDouble).mkString("[", ", ", s"] AS c$k")
     }.mkString(",\n        ")
-    val leastArgs = sorted.map(c => s"dd${c.cid}").mkString(", ")
-    val caseArms = sorted.map(c => s"WHEN dd${c.cid} = d2 THEN ${c.cid}").mkString(" ")
-    s"""WITH p AS (SELECT l_quantity AS x FROM lineitem),
-       |d AS (SELECT x, $dcols FROM p),
-       |m AS (SELECT *, least($leastArgs) AS d2 FROM d),
-       |a AS (SELECT x, d2, CAST(CASE $caseArms ELSE -1 END AS INT) AS cluster_id
-       |      FROM m)""".stripMargin
+    val ctes = scala.collection.mutable.ArrayBuffer(
+      s"p AS ($points)", s"w0 AS (SELECT\n        $w0)")
+    for (i <- 1 to iters + 1) {
+      val a = if (i > iters) "a" else s"a$i"
+      ctes ++= argmin(s"d$i", s"n$i", a, s"p CROSS JOIN w${i - 1}",
+        carry, cids.map(k => k -> dist(k)), "cluster_id")
+      if (i <= iters) {
+        val means = coords.map(x => rndSql(s"avg($x)", 4)).mkString("[", ", ", "]")
+        ctes += s"g$i AS (SELECT cluster_id, $means AS c FROM $a GROUP BY cluster_id)"
+        val pivot = cids.map(k => s"max(CASE WHEN cluster_id = $k THEN c END) AS c$k")
+          .mkString(",\n        ")
+        ctes += s"w$i AS (SELECT\n        $pivot\n      FROM g$i)"
+      }
+    }
+    ctes.mkString("WITH ", ",\n", "")
   }
+
+  /** [[lloydCtes]] with no pass: the lineitem points, keyed like
+    * Tables.points2d, assigned to `cs`. */
+  private def lloydCtes2d(cs: Seq[Centroid2D]): String =
+    lloydCtes("SELECT l_orderkey, l_linenumber, l_extendedprice AS x, l_quantity AS y FROM lineitem",
+      Seq("l_orderkey", "l_linenumber", "x", "y"), Seq("x", "y"),
+      cs.map(c => c.cid -> Array(c.cx, c.cy)), iters = 0)
+
+  /** SQL twin of [[stepStats]] over the CTE `a`. */
+  private val stepStatsSql =
+    s"""SELECT cluster_id, count(*) AS cnt,
+       |       ${rndSql("avg(x)", 4)} AS new_x,
+       |       ${rndSql("avg(y)", 4)} AS new_y,
+       |       ${rndSql("sum(dmin) / 1e9", 2)} AS sse_e9
+       |FROM a GROUP BY cluster_id ORDER BY cluster_id""".stripMargin
 
   /** Unrolled fixed-iteration Lloyd fit (SURVEY §5.1 promise; the
     * reference's driver loop master.py:352-366): each iteration assigns
@@ -74,6 +121,7 @@ object KMeansQueries {
     * bit-identical on both engines when the raw avgs agree at 4dp), and
     * the K-row result becomes the next iteration's plan literals — the
     * same driver-resident-centroids shape as KMeansLoop/the reference.
+    * Its SQL twin is [[lloydCtes]] with the same `iters`.
     */
   private def unrolledCentroids(s: SparkSession, dir: String, iters: Int): Seq[Centroid2D] = {
     val pts = Tables.points2d(s, dir).select(col("x"), col("y"))
@@ -87,56 +135,6 @@ object KMeansQueries {
         .toSeq.sortBy(_.cid)
     }
     cs
-  }
-
-  /** SQL twin of the unrolled fit: the centroid collect is replaced by a
-    * group-means CTE pivoted to ONE row (cx0..cy7) and CROSS JOINed back
-    * onto the points — relationally expressing "centroids become next
-    * iteration's constants" without needing a unique point key. An empty
-    * cluster pivots to NULL, its dd_k drops out of least() and the CASE
-    * arm never fires — exactly matching the Spark side, where the cid is
-    * simply absent from the collected literal set.
-    */
-  private def unrolledOracleSql(init: Seq[Centroid2D], iters: Int): String = {
-    val sorted = init.sortBy(_.cid)
-    val cids = sorted.map(_.cid)
-    val leastArgs = cids.map(k => s"dd$k").mkString(", ")
-    val caseArms = cids.map(k => s"WHEN dd$k = dmin THEN $k").mkString(" ")
-    def dCte(i: Int, src: String, cx: Int => String, cy: Int => String): String = {
-      val dcols = cids.map { k =>
-        s"(x - ${cx(k)})*(x - ${cx(k)}) + (y - ${cy(k)})*(y - ${cy(k)}) AS dd$k"
-      }.mkString(",\n        ")
-      s"d$i AS (SELECT x, y,\n        $dcols\n      FROM $src)"
-    }
-    def nCte(i: Int) = s"n$i AS (SELECT *, least($leastArgs) AS dmin FROM d$i)"
-    def aCte(i: Int) =
-      s"a$i AS (SELECT x, y, dmin, CAST(CASE $caseArms ELSE -1 END AS INT) AS cluster_id FROM n$i)"
-    def gCte(i: Int) =
-      s"g$i AS (SELECT cluster_id, ${rndSql("avg(x)", 4)} AS cx, ${rndSql("avg(y)", 4)} AS cy FROM a$i GROUP BY cluster_id)"
-    def wCte(i: Int) = {
-      val cols = cids.flatMap(k => Seq(
-        s"max(CASE WHEN cluster_id = $k THEN cx END) AS cx$k",
-        s"max(CASE WHEN cluster_id = $k THEN cy END) AS cy$k")).mkString(",\n        ")
-      s"w$i AS (SELECT\n        $cols\n      FROM g$i)"
-    }
-    val ctes = scala.collection.mutable.ArrayBuffer[String](
-      "p AS (SELECT l_extendedprice AS x, l_quantity AS y FROM lineitem)")
-    for (i <- 1 to iters + 1) {
-      if (i == 1)
-        ctes += dCte(1, "p",
-          k => Centroids.sqlDouble(sorted.find(_.cid == k).get.cx),
-          k => Centroids.sqlDouble(sorted.find(_.cid == k).get.cy))
-      else
-        ctes += dCte(i, s"p CROSS JOIN w${i - 1}", k => s"cx$k", k => s"cy$k")
-      ctes += nCte(i); ctes += aCte(i)
-      if (i <= iters) { ctes += gCte(i); ctes += wCte(i) }
-    }
-    s"""WITH ${ctes.mkString(",\n")}
-       |SELECT cluster_id, count(*) AS cnt,
-       |       ${rndSql("avg(x)", 4)} AS new_x,
-       |       ${rndSql("avg(y)", 4)} AS new_y,
-       |       ${rndSql("sum(dmin) / 1e9", 2)} AS sse_e9
-       |FROM a${iters + 1} GROUP BY cluster_id ORDER BY cluster_id""".stripMargin
   }
 
   // ---- unrolled ND fit (64-dim embeddings, K=4, 3 iterations) ----
@@ -156,7 +154,7 @@ object KMeansQueries {
   /** ND twin of [[unrolledCentroids]]: per-iteration group means of all
     * 64 dims rounded at 4dp (floor form) become the next iteration's
     * plan literals. Empty clusters drop out of the collected set exactly
-    * like the 2-D form.
+    * like the 2-D form. Its SQL twin is [[lloydCtes]] over `v[1]`..`v[64]`.
     */
   private def unrolledCentroidsND(s: SparkSession, dir: String): Seq[CentroidND] = {
     val pts = ndPoints(s, dir)
@@ -171,58 +169,6 @@ object KMeansQueries {
         .toSeq.sortBy(_.cid)
     }
     cs
-  }
-
-  /** SQL twin: same CROSS-JOIN-pivot trick as [[unrolledOracleSql]], with
-    * the per-centroid distance written as the ascending left-associative
-    * 64-term sum the SquaredDistance kernel evaluates.
-    */
-  private def unrolledOracleSqlND: String = {
-    val sorted = ndInit
-    val cids = sorted.map(_.cid)
-    val leastArgs = cids.map(k => s"dd$k").mkString(", ")
-    val caseArms = cids.map(k => s"WHEN dd$k = dmin THEN $k").mkString(" ")
-    def distTerms(term: Int => String): String =
-      (0 until NdDim).map { j =>
-        val c = term(j)
-        s"(v[${j + 1}] - $c)*(v[${j + 1}] - $c)"
-      }.mkString(" + ")
-    def dCte(i: Int, src: String, c: (Int, Int) => String): String = {
-      val dcols = cids.map(k => s"${distTerms(j => c(k, j))} AS dd$k")
-        .mkString(",\n        ")
-      s"d$i AS (SELECT v,\n        $dcols\n      FROM $src)"
-    }
-    def nCte(i: Int) = s"n$i AS (SELECT *, least($leastArgs) AS dmin FROM d$i)"
-    def aCte(i: Int) =
-      s"a$i AS (SELECT v, dmin, CAST(CASE $caseArms ELSE -1 END AS INT) AS cluster_id FROM n$i)"
-    def gCte(i: Int) = {
-      val means = (0 until NdDim)
-        .map(j => s"${rndSql(s"avg(v[${j + 1}])", 4)} AS c$j").mkString(", ")
-      s"g$i AS (SELECT cluster_id, $means FROM a$i GROUP BY cluster_id)"
-    }
-    def wCte(i: Int) = {
-      val cols = cids.flatMap(k => (0 until NdDim).map(j =>
-        s"max(CASE WHEN cluster_id = $k THEN c$j END) AS cx${k}_$j"))
-        .mkString(",\n        ")
-      s"w$i AS (SELECT\n        $cols\n      FROM g$i)"
-    }
-    val ctes = scala.collection.mutable.ArrayBuffer[String](
-      "p AS (SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings)")
-    for (i <- 1 to NdIters + 1) {
-      if (i == 1)
-        ctes += dCte(1, "p",
-          (k, j) => Centroids.sqlDouble(sorted.find(_.cid == k).get.vec(j)))
-      else
-        ctes += dCte(i, s"p CROSS JOIN w${i - 1}", (k, j) => s"cx${k}_$j")
-      ctes += nCte(i); ctes += aCte(i)
-      if (i <= NdIters) { ctes += gCte(i); ctes += wCte(i) }
-    }
-    s"""WITH ${ctes.mkString(",\n")}
-       |SELECT cluster_id, count(*) AS cnt,
-       |       ${rndSql("avg(v[1])", 4)} AS new_c0,
-       |       ${rndSql("avg(v[2])", 4)} AS new_c1,
-       |       ${rndSql("sum(dmin) / 1e3", 2)} AS sse_e3
-       |FROM a${NdIters + 1} GROUP BY cluster_id ORDER BY cluster_id""".stripMargin
   }
 
   // ---- k-means‖ scalable seeding (Bahmani et al. 2012) ----
@@ -310,16 +256,11 @@ object KMeansQueries {
       |      FROM sd${KppK - 1})""".stripMargin
     // Lloyd rounds over the candidate set: exact integer weighted means,
     // keepold on empty seats
+    def centers(px: String, py: String) =
+      cids.map(k => k -> d2(px, py, s"cx$k", s"cy$k"))
     (1 to KppLloyd).foreach { i =>
-      val dcols = cids.map(k =>
-        s"${d2("cxi", "cyi", s"cx$k", s"cy$k")} AS dd$k").mkString(",\n        ")
-      val leastArgs = cids.map(k => s"dd$k").mkString(", ")
-      val caseArms = cids.map(k => s"WHEN dd$k = dmin THEN $k").mkString(" ")
-      ctes += s"""ld$i AS (SELECT cxi, cyi, wc,
-        |        $dcols
-        |      FROM cw CROSS JOIN w${i - 1})""".stripMargin
-      ctes += s"ln$i AS (SELECT *, least($leastArgs) AS dmin FROM ld$i)"
-      ctes += s"la$i AS (SELECT cxi, cyi, wc, CAST(CASE $caseArms END AS INT) AS cid FROM ln$i)"
+      ctes ++= argmin(s"ld$i", s"ln$i", s"la$i", s"cw CROSS JOIN w${i - 1}",
+        Seq("cxi", "cyi", "wc"), centers("cxi", "cyi"), "cid")
       ctes += s"""lg$i AS (SELECT cid, sum(wc*cxi) // sum(wc) AS ncx,
         |  sum(wc*cyi) // sum(wc) AS ncy FROM la$i GROUP BY cid)""".stripMargin
       val wcols = cids.flatMap(k => Seq(
@@ -333,15 +274,8 @@ object KMeansQueries {
     }
     // final distributed pass: every point to its nearest final center
     // (lowest cid on ties — ascending CASE order), per-center support
-    val fdcols = cids.map(k =>
-      s"${d2("xi", "yi", s"cx$k", s"cy$k")} AS dd$k").mkString(",\n        ")
-    val fleast = cids.map(k => s"dd$k").mkString(", ")
-    val fcase = cids.map(k => s"WHEN dd$k = dmin THEN $k").mkString(" ")
-    ctes += s"""fd AS (SELECT xi, yi, w,
-      |        $fdcols
-      |      FROM pts CROSS JOIN w$KppLloyd)""".stripMargin
-    ctes += s"fn AS (SELECT *, least($fleast) AS dmin FROM fd)"
-    ctes += s"fa AS (SELECT w, CAST(CASE $fcase END AS INT) AS cid FROM fn)"
+    ctes ++= argmin("fd", "fn", "fa", s"pts CROSS JOIN w$KppLloyd",
+      Seq("w"), centers("xi", "yi"), "cid")
     ctes += "fg AS (SELECT cid, CAST(sum(w) AS BIGINT) AS n_points FROM fa GROUP BY cid)"
     val centerRows = cids.map(k =>
       s"SELECT CAST($k AS INT) AS cluster_id, CAST(cx$k AS BIGINT) AS cx_c, CAST(cy$k AS BIGINT) AS cy_c FROM w$KppLloyd")
@@ -398,14 +332,7 @@ object KMeansQueries {
     // A1+A6 — one full Lloyd step: means + per-cluster SSE piggybacked on
     // the same aggregation pass (reference rescans input twice instead,
     // master.py:365)
-    "kmeans_step" -> ((s, dir) =>
-      assigned2d(s, dir, Centroids.k2d)
-        .groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("cnt"),
-          rnd(avg(col("x")), 4).as("new_x"),
-          rnd(avg(col("y")), 4).as("new_y"),
-          rnd(sum(col("d2")) / lit(1e9), 2).as("sse_e9"))
-        .orderBy("cluster_id")),
+    "kmeans_step" -> ((s, dir) => stepStats(assigned2d(s, dir, Centroids.k2d))),
 
     // evaluation — per-cluster squared-Euclidean silhouette of the
     // shipped literal-centroid assignment, exact-integer end-to-end
@@ -428,7 +355,7 @@ object KMeansQueries {
     // operators.Silhouette.daviesBouldin)
     "kmeans_davies_bouldin" -> ((s, dir) => {
       val ints = Silhouette.integerized(assigned2d(s, dir, Centroids.k2d))
-      Silhouette.daviesBouldin(ints, Silhouette.stats(ints))
+      Silhouette.daviesBouldin(s, Silhouette.stats(ints))
     }),
 
     // A6 — global objective f() (master.py:315-332)
@@ -489,13 +416,7 @@ object KMeansQueries {
     // (counts, means, SSE) of the resulting model.
     "kmeans_fit_unrolled" -> ((s, dir) => {
       val cs = unrolledCentroids(s, dir, iters = 2)
-      Assign.withNearest(Tables.points2d(s, dir).select(col("x"), col("y")), cs)
-        .groupBy(col("cluster_id"))
-        .agg(count(lit(1)).as("cnt"),
-          rnd(avg(col("x")), 4).as("new_x"),
-          rnd(avg(col("y")), 4).as("new_y"),
-          rnd(sum(col("d2")) / lit(1e9), 2).as("sse_e9"))
-        .orderBy("cluster_id")
+      stepStats(Assign.withNearest(Tables.points2d(s, dir).select(col("x"), col("y")), cs))
     }),
 
     // §3.1 extended to the ND path: 3 unrolled Lloyd iterations on the
@@ -556,12 +477,12 @@ object KMeansQueries {
         |FROM lineitem""".stripMargin,
 
     "kmeans_assign" ->
-      s"""${assignCtes(Centroids.k2d)}
+      s"""${lloydCtes2d(Centroids.k2d)}
          |SELECT l_orderkey, l_linenumber, x, y, cluster_id FROM a
          |ORDER BY l_orderkey, l_linenumber, x, y""".stripMargin,
 
     "kmeans_recenter" ->
-      s"""${assignCtes(Centroids.k2d)}
+      s"""${lloydCtes2d(Centroids.k2d)}
          |SELECT cluster_id, count(*) AS cnt,
          |       ${rndSql("avg(x)", 4)} AS new_x,
          |       ${rndSql("avg(y)", 4)} AS new_y
@@ -576,7 +497,7 @@ object KMeansQueries {
     // (probed at both gate scales). i and st are MATERIALIZED: DuckDB
     // re-executes plain CTEs per reference.
     "kmeans_silhouette" ->
-      s"""${assignCtes(Centroids.k2d)},
+      s"""${lloydCtes2d(Centroids.k2d)},
          |i AS MATERIALIZED (SELECT l_orderkey, l_linenumber, x, y, cluster_id,
          |    CAST(floor(x + 0.5) AS BIGINT) AS xi,
          |    CAST(floor(y + 0.5) AS BIGINT) AS yi,
@@ -614,7 +535,7 @@ object KMeansQueries {
     // centroid pairs FILTERed out of the max — the identical float
     // sequence as the Spark side's literal-stats greatest() arms
     "kmeans_davies_bouldin" ->
-      s"""${assignCtes(Centroids.k2d)},
+      s"""${lloydCtes2d(Centroids.k2d)},
          |i AS MATERIALIZED (SELECT cluster_id,
          |    CAST(floor(x + 0.5) AS BIGINT) AS xi,
          |    CAST(floor(y + 0.5) AS BIGINT) AS yi,
@@ -654,21 +575,15 @@ object KMeansQueries {
          |  0 AS cluster
          |  FROM (SELECT l_extendedprice AS x, l_quantity AS y FROM lineitem))""".stripMargin),
 
-    "kmeans_step" ->
-      s"""${assignCtes(Centroids.k2d)}
-         |SELECT cluster_id, count(*) AS cnt,
-         |       ${rndSql("avg(x)", 4)} AS new_x,
-         |       ${rndSql("avg(y)", 4)} AS new_y,
-         |       ${rndSql("sum(d2) / 1e9", 2)} AS sse_e9
-         |FROM a GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
+    "kmeans_step" -> s"${lloydCtes2d(Centroids.k2d)}\n$stepStatsSql",
 
     "kmeans_sse" ->
-      s"""${assignCtes(Centroids.k2d)}
-         |SELECT count(*) AS n_points, ${rndSql("sum(d2) / 1e9", 2)} AS sse_e9
+      s"""${lloydCtes2d(Centroids.k2d)}
+         |SELECT count(*) AS n_points, ${rndSql("sum(dmin) / 1e9", 2)} AS sse_e9
          |FROM a""".stripMargin,
 
     "kmeans_repair_keepold" ->
-      s"""${assignCtes(Centroids.k2dWithEmpty)},
+      s"""${lloydCtes2d(Centroids.k2dWithEmpty)},
          |c AS (SELECT * FROM ${Centroids.sql2d(Centroids.k2dWithEmpty)}),
          |g AS (SELECT cluster_id, count(*) AS cnt,
          |        ${rndSql("avg(x)", 4)} AS mx, ${rndSql("avg(y)", 4)} AS my
@@ -677,15 +592,25 @@ object KMeansQueries {
          |       coalesce(g.mx, c.cx) AS new_x, coalesce(g.my, c.cy) AS new_y
          |FROM c LEFT JOIN g ON g.cluster_id = c.cid ORDER BY cluster_id""".stripMargin,
 
-    "kmeans_fit_unrolled" -> unrolledOracleSql(Centroids.k2d, iters = 2),
+    "kmeans_fit_unrolled" ->
+      s"""${lloydCtes("SELECT l_extendedprice AS x, l_quantity AS y FROM lineitem",
+           Seq("x", "y"), Seq("x", "y"), Centroids.k2d.map(c => c.cid -> Array(c.cx, c.cy)), iters = 2)}
+         |$stepStatsSql""".stripMargin,
 
-    "kmeans_fit_nd_unrolled" -> unrolledOracleSqlND,
+    "kmeans_fit_nd_unrolled" ->
+      s"""${lloydCtes("SELECT list_transform(embedding, x -> CAST(x AS DOUBLE)) AS v FROM embeddings",
+           Seq("v"), (1 to NdDim).map(j => s"v[$j]"), ndInit.map(c => c.cid -> c.vec), NdIters)}
+         |SELECT cluster_id, count(*) AS cnt,
+         |       ${rndSql("avg(v[1])", 4)} AS new_c0,
+         |       ${rndSql("avg(v[2])", 4)} AS new_c1,
+         |       ${rndSql("sum(dmin) / 1e3", 2)} AS sse_e3
+         |FROM a GROUP BY cluster_id ORDER BY cluster_id""".stripMargin,
 
     "kmeans_repair_rerandomize" -> {
       val r = new java.util.Random(RerandSeed)
       val u1 = Centroids.sqlDouble(r.nextDouble())
       val u2 = Centroids.sqlDouble(r.nextDouble())
-      s"""${assignCtes(Centroids.k2dWithEmpty)},
+      s"""${lloydCtes2d(Centroids.k2dWithEmpty)},
          |bb AS (SELECT min(x) AS xlo, max(x) AS xhi, min(y) AS ylo, max(y) AS yhi FROM p),
          |c AS (SELECT * FROM ${Centroids.sql2d(Centroids.k2dWithEmpty)}),
          |g AS (SELECT cluster_id, avg(x) AS mx, avg(y) AS my FROM a GROUP BY cluster_id)
@@ -697,7 +622,8 @@ object KMeansQueries {
     },
 
     "kmeans_1d" ->
-      s"""${assignCtes1d(Centroids.k1d)}
+      s"""${lloydCtes("SELECT l_quantity AS x FROM lineitem", Seq("x"), Seq("x"),
+           Centroids.k1d.map(c => c.cid -> Array(c.c)), iters = 0)}
          |SELECT cluster_id, count(*) AS cnt, ${rndSql("avg(x)", 4)} AS new_x
          |FROM a GROUP BY cluster_id ORDER BY cluster_id""".stripMargin)
 }

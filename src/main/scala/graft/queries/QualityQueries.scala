@@ -126,8 +126,8 @@ object QualityQueries {
       // columns reduce FIRST to a per-(col, value) hash count (string
       // GROUP KEYS are hash-aggregable; only buffers must be mutable),
       // then min/max/distinct run over the tiny value table. Same rows,
-      // same types — the oracle hash pins equality; PLANS.md shows no
-      // corpus-row Sort.
+      // same types — the oracle hash pins equality; the formatted plan
+      // (graft.tools.ExplainDump) shows no corpus-row Sort.
       val aggs = intCols.flatMap { c =>
         val e = enc(c)
         Seq(count(e).as(s"nn_$c"), countDistinct(e).as(s"nd_$c"),

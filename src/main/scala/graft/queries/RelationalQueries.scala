@@ -67,9 +67,9 @@ object RelationalQueries {
     // layout, not the planner, paid for the join's shuffle. This is the
     // 100-TB fact-fact join answer (a broadcast can't apply: both sides
     // are big; an unbucketed SMJ shuffles both). The `merge` hint keeps
-    // the plan on SMJ so the elision is observable in PLANS.md; the
-    // oracle is the identical join on the FLAT tables — layout must
-    // never change answers.
+    // the plan on SMJ so the elision is observable in its formatted
+    // plan (graft.tools.ExplainDump); the oracle is the identical join
+    // on the FLAT tables — layout must never change answers.
     "q_bucket_join" -> ((s, dir) => {
       val (liName, ordName) = graft.sources.StagedLayouts
         .bucketedLineitemOrders(s, dir)

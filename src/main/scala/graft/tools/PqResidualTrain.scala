@@ -18,6 +18,14 @@ object PqResidualTrain {
   val SubDim = 16
   val K = 8
 
+  /** TrainedResidualPq.scala holding `books`. */
+  def source(books: Seq[Seq[CentroidND]]): String = CentroidLiterals.source(Seq(
+    "RESIDUAL product-quantization codebooks (per-cell residual",
+    s"vs TrainedIvfCentroids, M=$M subspaces, K=$K codes, 10 iters)",
+    "frozen as literals. Regenerate with graft.tools.PqResidualTrain."),
+    "TrainedResidualPq",
+    s"  val books: Seq[Seq[CentroidND]] = ${CentroidLiterals.books(books)}\n")
+
   def main(args: Array[String]): Unit = {
     val spark = graft.Session.builder().getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -28,31 +36,15 @@ object PqResidualTrain {
     val resid = Assign.withNearestND(emb, col("vec"), cells, "cell")
       .select(col("vec_id"),
         zip_with(col("vec"), Assign.centroidOf(col("cell"), cells), (a, b) => a - b).as("vec"))
-    val sb = new StringBuilder
-    sb.append("package graft.operators\n\n")
-    sb.append("/** RESIDUAL product-quantization codebooks (per-cell residual\n")
-    sb.append(s"  * vs TrainedIvfCentroids, M=$M subspaces, K=$K codes, 10 iters)\n")
-    sb.append("  * frozen as literals. Regenerate with graft.tools.PqResidualTrain.\n  */\n")
-    sb.append("object TrainedResidualPq {\n")
-    sb.append("  val books: Seq[Seq[CentroidND]] = Seq(\n")
-    (0 until M).foreach { s =>
+    val books = (0 until M).map { s =>
       val sub = resid.select(col("vec_id"),
         slice(col("vec"), s * SubDim + 1, SubDim).as("vec"))
       val init = Centroids.randomInitND(K, SubDim, seed = 200L + s, -0.2, 0.2)
       val res = KMeansND.fit(spark, sub, init, maxIter = 10, delta = 0.0)
       println(s"[pq-residual-train] subspace $s sse=${res.sse}")
-      sb.append("    Seq(\n")
-      res.centroids.foreach { c =>
-        sb.append(s"      CentroidND(${c.cid}, Array(")
-        sb.append(c.vec.map(v => s"$v").mkString(", "))
-        sb.append(")),\n")
-      }
-      sb.append("    ),\n")
+      res.centroids
     }
-    sb.append("  )\n}\n")
-    java.nio.file.Files.writeString(
-      java.nio.file.Paths.get("src/main/scala/graft/operators/TrainedResidualPq.scala"),
-      sb.toString)
+    CentroidLiterals.write("TrainedResidualPq", source(books))
     println("[pq-residual-train] wrote TrainedResidualPq.scala")
     spark.stop()
   }

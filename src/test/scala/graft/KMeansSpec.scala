@@ -90,6 +90,18 @@ class KMeansSpec extends SparkSpec {
     assert(hits.isEmpty, s"argmin copies outside Assign.scala: ${hits.mkString(", ")}")
   }
 
+  test("one SQL argmin: no least()-as-dmin or CASE chain outside KMeansQueries.argmin") {
+    import java.nio.file.{Files, Paths}
+    val src = Files.readString(Paths.get("src/main/scala/graft/queries/KMeansQueries.scala"))
+    val start = src.indexOf("  private def argmin(")
+    val rest = if (start < 0) src else src.take(start) + src.drop(src.indexOf("\n  }\n", start))
+    val leastAsDmin = """least\(.*\) AS dmin""".r
+    val hits = rest.linesIterator
+      .filter(l => l.contains("WHEN dd") || leastAsDmin.findFirstIn(l).nonEmpty).toList
+    assert(hits.isEmpty, s"argmin copies outside KMeansQueries.argmin:\n${hits.mkString("\n")}")
+    assert(start >= 0, "KMeansQueries.argmin is gone")
+  }
+
   test("expression form == relational form on fixture data (J1 cross-check)") {
     val pts = Tables.points2d(spark, sf)
     val exprForm = Assign.withNearest(pts, Centroids.k2d)
@@ -477,6 +489,15 @@ class KMeansSpec extends SparkSpec {
     assert(got.length == Splits + 1)
     assert(got.map(_._2).sum == pts.length.toLong)
     got.foreach { case (_, _, _, _, sse) => assert(sse >= 0L) }
+  }
+
+  test("davies-bouldin: the report reuses the collected stats, no second aggregate") {
+    def run() = graft.queries.KMeansQueries
+      .queries("kmeans_davies_bouldin")(spark, sf).collect()
+    run() // warm: one-time jobs of a first run are not counted
+    val (_, jobs) = countingJobs(run())
+    // a second groupBy over the points, as before, ran 6
+    assert(jobs == 5, s"$jobs jobs")
   }
 
   test("davies-bouldin: report equals a naive driver replay; nonnegative") {
