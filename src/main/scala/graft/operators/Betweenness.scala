@@ -43,33 +43,31 @@ object Betweenness {
   /** Source-keyed forward BFS carrying path counts — the shared
     * first half of Brandes: (s, node, dist, σ) for every node within
     * `rounds` hops of each seed. Renamed edge columns + name-resolved
-    * join conditions: frontier and visited DERIVE from the edge frame,
-    * so dataset-tagged refs (e("dst")) trip the ambiguous-self-join
-    * check as soon as eager = false leaves the lineage untruncated
-    * (the lazy, explainable pipeline).
+    * join conditions: a caller's seed (or visited) frame may share
+    * lineage with the edge frame, and dataset-tagged refs (e("dst"))
+    * then trip Spark's ambiguous-self-join check; names resolve the
+    * same whatever lineage the inputs share.
     */
-  def forward(edges: DataFrame, seeds: DataFrame, rounds: Int,
-              eager: Boolean = true): DataFrame = {
-    if (eager) {
-      val d = forwardDriver(edges, seeds, rounds)
-      if (d.isDefined) return d.get
-    }
-    def ck(df: DataFrame) = if (eager) df.localCheckpoint(true) else df
+  def forward(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
+    val d = forwardDriver(edges, seeds, rounds)
+    if (d.isDefined) return d.get
     val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"))
-    var visited = ck(seeds.select(col("node").as("s")).distinct()
+    var visited = seeds.select(col("node").as("s")).distinct()
       .select(col("s"), col("s").as("node"), lit(0).as("dist"),
-        lit(1L).as("sigma")))
+        lit(1L).as("sigma"))
+      .localCheckpoint(true)
     var frontier = visited
     for (i <- 1 to rounds) {
-      val next = ck(frontier
+      val next = frontier
         .join(e, col("node") === col("e_src"))
         .select(col("s"), col("e_dst").as("node"), col("sigma"))
         .join(visited.select(col("s"), col("node")), Seq("s", "node"),
           "left_anti")
         .groupBy(col("s"), col("node"))
         .agg(sum(col("sigma")).as("sigma"))
-        .select(col("s"), col("node"), lit(i).as("dist"), col("sigma")))
-      visited = ck(visited.unionAll(next))
+        .select(col("s"), col("node"), lit(i).as("dist"), col("sigma"))
+        .localCheckpoint(true)
+      visited = visited.unionAll(next).localCheckpoint(true)
       frontier = next
     }
     visited
@@ -146,8 +144,8 @@ object Betweenness {
     * identically).
     */
   def harmonic(edges: DataFrame, seeds: DataFrame, rounds: Int,
-               scale: Long = 10000L, eager: Boolean = true): DataFrame =
-    harmonicFromForward(forward(edges, seeds, rounds, eager), scale)
+               scale: Long = 10000L): DataFrame =
+    harmonicFromForward(forward(edges, seeds, rounds), scale)
 
   /** [[harmonic]]'s aggregate half over a PRECOMPUTED forward frame —
     * the staged-shared-state entry point (the HyperBall `packedStates`
@@ -164,31 +162,28 @@ object Betweenness {
         count(lit(1)).as("n_sources"))
 
   def run(edges: DataFrame, seeds: DataFrame, rounds: Int,
-          scale: Long = 10000L, eager: Boolean = true): DataFrame =
-    runFromForward(forward(edges, seeds, rounds, eager), edges, rounds,
-      scale, eager)
+          scale: Long = 10000L): DataFrame =
+    runFromForward(forward(edges, seeds, rounds), edges, rounds, scale)
 
   /** The backward (dependency-accumulation) half of Brandes over a
     * PRECOMPUTED forward frame — see [[harmonicFromForward]] for the
     * staging contract. `rounds` must equal the forward pass's depth.
     */
   def runFromForward(visited: DataFrame, edges: DataFrame, rounds: Int,
-          scale: Long = 10000L, eager: Boolean = true): DataFrame = {
+          scale: Long = 10000L): DataFrame = {
     // rounds = 0 has no deepest level to seed δ from (the accumulator
     // below would be empty and reduce would throw); the algorithm's
     // meaningful domain starts at one hop
     require(rounds >= 1, s"Brandes backward pass needs rounds >= 1, got $rounds")
-    if (eager) {
-      val d = backwardDriver(visited, edges, rounds, scale)
-      if (d.isDefined) return d.get
-    }
-    def ck(df: DataFrame) = if (eager) df.localCheckpoint(true) else df
+    val d = backwardDriver(visited, edges, rounds, scale)
+    if (d.isDefined) return d.get
     val e = edges.select(col("src").as("e_src"), col("dst").as("e_dst"))
 
     // backward: deepest level seeds δ = 0; each shallower level joins
     // its successor level's (σ, δ) through the edges
-    var delta = ck(visited.where(col("dist") === rounds)
-      .select(col("s"), col("node"), lit(0L).as("delta")))
+    var delta = visited.where(col("dist") === rounds)
+      .select(col("s"), col("node"), lit(0L).as("delta"))
+      .localCheckpoint(true)
     val acc = Seq.newBuilder[DataFrame]
     if (rounds > 0) acc += delta
     for (d <- (rounds - 1) to 0 by -1) {
@@ -205,10 +200,11 @@ object Betweenness {
         .groupBy(col("s"), col("node"))
         .agg(sum(expr(s"(sigma * ($scale + wdelta)) div wsigma"))
           .as("cdelta"))
-      delta = ck(lvl.select(col("s"), col("node"))
+      delta = lvl.select(col("s"), col("node"))
         .join(contrib, Seq("s", "node"), "left")
         .select(col("s"), col("node"),
-          coalesce(col("cdelta"), lit(0L)).as("delta")))
+          coalesce(col("cdelta"), lit(0L)).as("delta"))
+        .localCheckpoint(true)
       if (d > 0) acc += delta // dist-0 rows are the sources themselves
     }
 

@@ -32,23 +32,21 @@ object Bfs {
     * from `seeds` (node). Returns (node, dist) for every node reached
     * within `rounds` hops; seeds are at dist 0.
     */
-  def run(edges: DataFrame, seeds: DataFrame, rounds: Int,
-          eager: Boolean = true): DataFrame = {
-    if (eager) {
-      val d = driverReplay(edges, seeds, rounds)
-      if (d.isDefined) return d.get
-    }
-    def ck(df: DataFrame) = if (eager) df.localCheckpoint(true) else df
+  def run(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
+    val d = driverReplay(edges, seeds, rounds)
+    if (d.isDefined) return d.get
     val e = edges.select(col("src"), col("dst"))
-    var visited = ck(seeds.select(col("node")).distinct()
-      .withColumn("dist", lit(0)))
+    var visited = seeds.select(col("node")).distinct()
+      .withColumn("dist", lit(0))
+      .localCheckpoint(true)
     var frontier = visited.select(col("node"))
     for (i <- 1 to rounds) {
-      val next = ck(e.join(frontier, e("src") === frontier("node"), "left_semi")
+      val next = e.join(frontier, e("src") === frontier("node"), "left_semi")
         .select(col("dst").as("node")).distinct()
         .join(visited.select(col("node")), Seq("node"), "left_anti")
-        .withColumn("dist", lit(i)))
-      visited = ck(visited.unionAll(next))
+        .withColumn("dist", lit(i))
+        .localCheckpoint(true)
+      visited = visited.unionAll(next).localCheckpoint(true)
       frontier = next.select(col("node"))
     }
     visited

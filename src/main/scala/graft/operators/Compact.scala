@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.{SaveMode, SparkSession}
 
 /** Small-file compaction — the operational pass every long-lived 100-TB
   * table needs: streaming sinks and fine-grained ingestion leave
@@ -20,7 +20,7 @@ object Compact {
       inFiles: Int, inBytes: Long, outFiles: Int, rows: Long)
 
   /** Total size and count of the data files under a parquet dataset. */
-  def datasetFiles(spark: SparkSession, dir: String): (Int, Long) = {
+  def datasetFiles(dir: String): (Int, Long) = {
     val fs = new java.io.File(dir)
     val files = Option(fs.listFiles()).getOrElse(Array.empty)
       .filter(f => f.isFile && f.getName.endsWith(".parquet"))
@@ -34,12 +34,12 @@ object Compact {
   def compactParquet(
       spark: SparkSession, inDir: String, outDir: String,
       targetBytes: Long = 128L * 1024 * 1024): CompactStats = {
-    val (nIn, bytesIn) = datasetFiles(spark, inDir)
+    val (nIn, bytesIn) = datasetFiles(inDir)
     val nOut = math.max(1, math.ceil(bytesIn.toDouble / targetBytes).toInt)
     val df = spark.read.parquet(inDir)
     df.repartition(nOut).write.mode(SaveMode.Overwrite).parquet(outDir)
     val rows = spark.read.parquet(outDir).count()
-    val (nOutActual, _) = datasetFiles(spark, outDir)
+    val (nOutActual, _) = datasetFiles(outDir)
     CompactStats(nIn, bytesIn, nOutActual, rows)
   }
 }

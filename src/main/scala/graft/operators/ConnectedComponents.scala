@@ -132,7 +132,7 @@ object ConnectedComponents {
     var converged = false
     var round = 0
     val doBroadcast = PageRank.chooseBroadcast(broadcastLabels,
-      eager = true, labels.count(), broadcastMaxNodes)
+      labels.count(), broadcastMaxNodes)
     while (!converged && round < maxIters) {
       round += 1
       // neighbor-min: each node takes the min of its own and its

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Grid-bucketed DBSCAN (Ester, Kriegel, Sander, Xu 1996) — the
@@ -67,7 +67,7 @@ object Dbscan {
   /** Full DBSCAN labeling: (xi, yi, w, nbw, role, cluster) ordered by
     * (xi, yi); cluster = min packed id of the component, −1 for noise.
     */
-  def run(s: SparkSession, emb: DataFrame, eps: Long, minPts: Long,
+  def run(emb: DataFrame, eps: Long, minPts: Long,
       maxIters: Int = 32): DataFrame = {
     val pts = scaledPoints(emb).localCheckpoint(true)
     val mx = pts.agg(max(col("xi")), max(col("yi")), min(col("xi")),

@@ -86,21 +86,18 @@ object Dedup {
     *               (stop-shingles); intersections count rare shingles
     *               only — the standard candidate-generation approximation
     * @param tau    minimum (rare-shingle) Jaccard to emit
+    *
+    * The result is materialized (local checkpoint), so a downstream
+    * plan reads it as an RDD scan.
     */
-  /** `eager = false` (plan audit only) skips the caches and the final
-    * localCheckpoint so `.explain` shows the real operator tree — the
-    * production path materializes eagerly, which makes its downstream
-    * plan an opaque RDD scan.
-    */
-  def jaccardPairs(docs: DataFrame, n: Int = 3, dfCap: Int = 100, tau: Double = 0.05,
-      eager: Boolean = true): DataFrame = {
+  def jaccardPairs(docs: DataFrame, n: Int = 3, dfCap: Int = 100,
+      tau: Double = 0.05): DataFrame = {
     // eager one-job materialization, not .cache(): the shingle stream
     // feeds several independent exchanges (sizes, stop, the rare join)
     // that AQE submits concurrently, and a lazy cache does not dedupe
     // concurrent first computation (the dedup_minhash_est JobProfile
     // finding, applied family-wide)
-    val ss = if (eager) shingles(docs, n).localCheckpoint(true)
-      else shingles(docs, n)
+    val ss = shingles(docs, n).localCheckpoint(true)
     val sizes = ss.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
     // Stop-shingle removal as groupBy-df → broadcast anti-join, NOT a
     // count-over-window: the window form sorts and shuffles every
@@ -118,13 +115,12 @@ object Dedup {
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
     val sa = sizes.select(col("doc_id").as("doc_a"), col("nsh").as("na"))
     val sb = sizes.select(col("doc_id").as("doc_b"), col("nsh").as("nb"))
-    val out = inter.join(sa, "doc_a").join(sb, "doc_b")
+    // materialize the (tiny) pair set eagerly; the shingle checkpoint is
+    // reclaimed by the ContextCleaner once the result drops the reference
+    inter.join(sa, "doc_a").join(sb, "doc_b")
       .withColumn("jac", col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .where(col("jac") >= tau)
-    // materialize the (tiny) pair set eagerly; the shingle checkpoint is
-    // reclaimed by the ContextCleaner once out drops the reference
-    if (!eager) return out
-    out.localCheckpoint(true)
+      .localCheckpoint(true)
   }
 
   /** PPJoin-style prefix-filtered Jaccard pairs — the high-threshold
@@ -152,7 +148,7 @@ object Dedup {
     * candidate pairs (Σ_cand n rows), never the corpus cross product.
     */
   def jaccardPrefixPairs(docs: DataFrame, n: Int = 8, tauNum: Int = 7,
-      tauDen: Int = 10, eager: Boolean = true): DataFrame = {
+      tauDen: Int = 10): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     // EXACT-DEDUP FIRST — the pipeline-order invariant that makes
     // prefix filtering viable at scale: identical texts collapse to
@@ -169,13 +165,12 @@ object Dedup {
     // WORD shingles, not char n-grams: prefix filtering needs a
     // long-tailed shingle vocabulary (wordShingles scaladoc — char-8
     // degenerates to 2.69e9 candidates on this corpus at volume)
-    val ss0 = wordShingles(uniq, n)
     // eager one-job materialization, not .cache(): ss feeds four
     // independent exchanges (sizes, dfreq, the pref join, arrs) that AQE
     // submits concurrently — a lazy cache let the exact-dedup groupBy +
     // shingle explode run 3–4× in overlapping stage jobs (JobProfile:
     // warm sum(job wall) 16.9 s vs 5.5 s total at sf0.1)
-    val ss = if (eager) ss0.localCheckpoint(true) else ss0
+    val ss = wordShingles(uniq, n).localCheckpoint(true)
     val sizes = ss.groupBy(col("doc_id")).agg(count(lit(1)).as("nsh"))
     val dfreq = ss.groupBy(col("sh")).agg(count(lit(1)).as("df"))
     val w = Window.partitionBy(col("doc_id")).orderBy(col("df"), col("sh"))
@@ -211,15 +206,14 @@ object Dedup {
       .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
         size(array_intersect(col("arr_a"), col("arr_b"))).cast("long")
           .as("inter"))
-    val out = inter
+    inter
       .where(lit(tauDen) * col("inter") >=
         lit(tauNum) * (col("na") + col("nb") - col("inter")))
       .withColumn("jac",
         col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .select(col("doc_a"), col("doc_b"), col("na"), col("nb"),
         col("inter"), col("jac"))
-    if (!eager) return out
-    out.localCheckpoint(true)
+      .localCheckpoint(true)
   }
 
   /** Asymmetric shingle CONTAINMENT — the doc-in-doc / quote-detection
@@ -235,11 +229,10 @@ object Dedup {
     * the Jaccard query's rare-set Jaccard).
     */
   def containmentPairs(docs: DataFrame, n: Int = 5, dfCap: Int = 50,
-      tau: Double = 0.4, eager: Boolean = true): DataFrame = {
+      tau: Double = 0.4): DataFrame = {
     // eager one-job materialization, not .cache() — the jaccardPairs/
     // dedup_minhash_est concurrent-first-computation finding
-    val ss = if (eager) shingles(docs, n).localCheckpoint(true)
-      else shingles(docs, n)
+    val ss = shingles(docs, n).localCheckpoint(true)
     val stop = ss.groupBy(col("sh")).agg(count(lit(1)).as("df"))
       .where(col("df") > dfCap).select(col("sh"))
     val rare = ss.join(broadcast(stop), Seq("sh"), "left_anti")
@@ -248,12 +241,11 @@ object Dedup {
     val b = rare.select(col("doc_id").as("doc_b"), col("sh"))
     val inter = a.join(b, Seq("sh")).where(col("doc_a") =!= col("doc_b"))
       .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("inter"))
-    val out = inter
+    inter
       .join(rsz.select(col("doc_id").as("doc_a"), col("nr").as("na")), "doc_a")
       .withColumn("cont", col("inter").cast("double") / col("na"))
       .where(col("cont") >= tau)
-    if (!eager) return out
-    out.localCheckpoint(true)
+      .localCheckpoint(true)
   }
 
   /** Universal-hash modulus (Mersenne prime 2^31−1) and per-function
@@ -337,18 +329,17 @@ object Dedup {
     */
   def minhashPairs(
       docs: DataFrame, n: Int = 8, nHash: Int = 12, rowsPerBand: Int = 2,
-      tau: Double = 0.5, eager: Boolean = true): DataFrame = {
+      tau: Double = 0.5): DataFrame = {
     val nBands = nHash / rowsPerBand
     // eager one-job materialization, not .cache(): each of these frames
     // feeds 2–3 independent exchanges that AQE submits concurrently, and
     // a lazy cache does not dedupe concurrent first computation (the
     // dedup_minhash_est JobProfile finding, applied family-wide)
-    def cached(df: DataFrame) = if (eager) df.localCheckpoint(true) else df
     // native one-pass signature kernel (shuffle-free; see
     // minhashSignatureFast/MinhashKernel). Materialized: the band
     // self-join consumes it twice; one row per doc, so it is small at
     // any corpus size.
-    val mh = cached(minhashSignatureFast(docs, n, nHash))
+    val mh = minhashSignatureFast(docs, n, nHash).localCheckpoint(true)
     // band key = the raw signature rows (numeric join keys — no extra
     // hashing needed)
     val keyNames = (0 until rowsPerBand).map(r => s"k$r")
@@ -370,10 +361,11 @@ object Dedup {
     // cache: cand is consumed three times (candDocs ×2, inter join) and
     // is tiny — without it the whole signature pipeline re-executes per
     // consumer
-    val cand = cached(bands.as("x").join(bands.as("y"), "band" +: keyNames)
+    val cand = bands.as("x").join(bands.as("y"), "band" +: keyNames)
       .where(col("x.doc_id") < col("y.doc_id"))
       .select(col("x.doc_id").as("doc_a"), col("y.doc_id").as("doc_b"))
-      .distinct())
+      .distinct()
+      .localCheckpoint(true)
     // exact shingle SETS are materialized ONLY for candidate docs — at
     // corpus scale candidates are a sliver, so the expensive verify never
     // touches the non-candidate bulk. (The oracle computes sizes for
@@ -397,10 +389,14 @@ object Dedup {
     // sets are SORTED once per doc so the per-pair intersection is a
     // native sorted-merge count (graft_sorted_intersect_count) — no
     // per-pair hash relation, no materialized intersection array
-    val sets = cached(shingleHashArray(docs.join(broadcast(candDocs), "doc_id"), n)
+    val sets = shingleHashArray(docs.join(broadcast(candDocs), "doc_id"), n)
       .select(col("doc_id"), array_sort(array_distinct(col("hs"))).as("shs"))
-      .withColumn("nsh", size(col("shs")).cast("long"))) // consumed by both join sides
-    val out = cand
+      .withColumn("nsh", size(col("shs")).cast("long"))
+      .localCheckpoint(true) // consumed by both join sides
+    // eagerly materialize the verified pairs (tiny); the intermediate
+    // checkpoints are reclaimed by the ContextCleaner once the result
+    // drops the references — see jaccardPairs note
+    cand
       .join(sets.select(col("doc_id").as("doc_a"), col("shs").as("sha"),
         col("nsh").as("na")), "doc_a")
       .join(sets.select(col("doc_id").as("doc_b"), col("shs").as("shb"),
@@ -410,11 +406,7 @@ object Dedup {
       .withColumn("jac", col("inter").cast("double") / (col("na") + col("nb") - col("inter")))
       .where(col("jac") >= tau)
       .select(col("doc_a"), col("doc_b"), col("inter"), col("na"), col("nb"), col("jac"))
-    // eagerly materialize the verified pairs (tiny); the intermediate
-    // checkpoints are reclaimed by the ContextCleaner once out drops
-    // the references — see jaccardPairs note
-    if (!eager) return out
-    out.localCheckpoint(true)
+      .localCheckpoint(true)
   }
 
   /** Signature-only Jaccard ESTIMATE over the LSH candidates: matching
@@ -429,8 +421,7 @@ object Dedup {
     * (same keys, same streaming self-join; see the shape notes there).
     */
   def minhashEstimatePairs(docs: DataFrame, n: Int = 8, nHash: Int = 12,
-      rowsPerBand: Int = 2, minMatches: Int = 6,
-      eager: Boolean = true): DataFrame = {
+      rowsPerBand: Int = 2, minMatches: Int = 6): DataFrame = {
     val nBands = nHash / rowsPerBand
     // EAGER one-job materialization, not .cache(): the signature table
     // feeds three independent exchanges (bands, sigA, sigB) that AQE
@@ -438,8 +429,7 @@ object Dedup {
     // first computation — JobProfile measured the signature pass running
     // 3× in overlapping stage jobs (sum of job wall 5.8 s vs 4.6 s total
     // at sf0.1 warm). One row per doc, same bytes the cache held.
-    val mh0 = minhashSignatureFast(docs, n, nHash)
-    val mh = if (eager) mh0.localCheckpoint(true) else mh0.cache()
+    val mh = minhashSignatureFast(docs, n, nHash).localCheckpoint(true)
     val keyNames = (0 until rowsPerBand).map(r => s"k$r")
     val bandCols = (0 until nBands).map { bi =>
       struct(lit(bi).as("band") +:
@@ -460,15 +450,14 @@ object Dedup {
     val matchCount = (0 until nHash)
       .map(i => when(col(s"a$i") === col(s"b$i"), 1L).otherwise(0L))
       .reduce(_ + _)
-    val out = cand.join(sigA, "doc_a").join(sigB, "doc_b")
+    // mh is a localCheckpoint (no unpersist handle); the ContextCleaner
+    // reclaims it once the result drops the reference
+    cand.join(sigA, "doc_a").join(sigB, "doc_b")
       .withColumn("matches", matchCount)
       .where(col("matches") >= minMatches)
       .select(col("doc_a"), col("doc_b"), col("matches"),
         (col("matches").cast("double") / lit(nHash.toDouble)).as("est"))
-    if (!eager) return out
-    // mh is a localCheckpoint on this path (no unpersist handle); the
-    // ContextCleaner reclaims it once res drops the reference
-    out.localCheckpoint(true)
+      .localCheckpoint(true)
   }
 
   /** 64-bit SimHash per doc over distinct whitespace tokens.
@@ -1100,21 +1089,20 @@ object Dedup {
     * the fixture queries use 8 (fixture docs average ~50 tokens).
     */
   /** The sliding W-token window stream (doc_id, start, h) — shared by
-    * the substring-dedup family. `eager` materializes it once (it is
-    * always scanned at least twice downstream).
+    * the substring-dedup family, materialized once (it is always
+    * scanned at least twice downstream).
     */
-  private def substringWindows(docs: DataFrame, w: Int,
-      eager: Boolean): DataFrame = {
+  private def substringWindows(docs: DataFrame, w: Int): DataFrame = {
     val toks = spread(docs.select(col("doc_id"),
         filter(split(lower(col("text")), "\\s+"), t => t =!= "").as("ts")))
       .where(size(col("ts")) >= w)
-    val wins0 = toks.select(col("doc_id"),
+    toks.select(col("doc_id"),
         explode(transform(sequence(lit(1), size(col("ts")) - (w - 1)),
           i => struct(i.cast("long").as("start"),
             DistinctSketch.hash60(concat_ws(" ", slice(col("ts"), i, lit(w))))
               .as("h")))).as("wn"))
       .select(col("doc_id"), col("wn.start").as("start"), col("wn.h").as("h"))
-    if (eager) wins0.localCheckpoint(true) else wins0
+      .localCheckpoint(true)
   }
 
   /** Merge a (doc_id, start) window-position stream into maximal
@@ -1139,8 +1127,8 @@ object Dedup {
         col("n_windows"))
   }
 
-  def substringSpans(docs: DataFrame, w: Int, eager: Boolean = true): DataFrame = {
-    val wins = substringWindows(docs, w, eager)
+  def substringSpans(docs: DataFrame, w: Int): DataFrame = {
+    val wins = substringWindows(docs, w)
     val dupHashes = wins.groupBy(col("h"))
       .agg(count(lit(1)).as("c")).where(col("c") > 1).select(col("h"))
     mergeSpans(wins.join(dupHashes, "h").select(col("doc_id"), col("start")), w)
@@ -1160,9 +1148,8 @@ object Dedup {
     * hash-keyed aggregate vs [[substringSpans]] (the per-hash
     * first-occurrence min(struct)) — same shuffle bounds.
     */
-  def substringRemovalStats(docs: DataFrame, w: Int,
-      eager: Boolean = true): DataFrame = {
-    val wins = substringWindows(docs, w, eager)
+  def substringRemovalStats(docs: DataFrame, w: Int): DataFrame = {
+    val wins = substringWindows(docs, w)
     val firsts = wins.groupBy(col("h"))
       .agg(min(struct(col("doc_id"), col("start"))).as("f"),
         count(lit(1)).as("c"))

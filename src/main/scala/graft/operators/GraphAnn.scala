@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import graft.functions.ArrayKernels
@@ -63,7 +63,7 @@ object GraphAnn {
     * bruteTopK's (qid, rk, vec_id, cos5) shape for queries
     * vec_id < nQueries.
     */
-  def beamSearch(s: SparkSession, embDf: DataFrame, graph: DataFrame,
+  def beamSearch(embDf: DataFrame, graph: DataFrame,
       nQueries: Int, beam: Int, rounds: Int, k: Int,
       entries: Int = 4): DataFrame = {
     val n = Similarity.withNorm(embDf).localCheckpoint(true)

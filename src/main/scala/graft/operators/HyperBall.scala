@@ -55,11 +55,10 @@ object HyperBall {
   /** (node, nnz, est): raw-HLL ball(v, rounds) size estimates over the
     * symmetrized `edges` (src, dst). nnz is the node's non-empty
     * register count (an integer that gates the sketch shape directly).
-    */
-  /** `eager = false` (plan audit only) skips the per-round
-    * localCheckpoints so `.explain` shows the real round tree; the
-    * production path materializes eagerly to truncate iteration
-    * lineage (the standard iterative-operator discipline here).
+    *
+    * Every round's state is materialized by a local checkpoint, which
+    * truncates iteration lineage (the standard iterative-operator
+    * discipline here); [[round]] is the one round's unexecuted plan.
     *
     * `broadcastSketches` is the [[PageRank.run]] two-regime gate
     * applied to the sketch frame: when the |V|-row packed state fits
@@ -72,10 +71,9 @@ object HyperBall {
     * executor budget PageRank's 5M-node cap implies.
     */
   def neighborhoodSizes(edges: DataFrame, rounds: Int,
-      eager: Boolean = true,
       broadcastSketches: Option[Boolean] = None,
       broadcastMaxNodes: Long = 150000L): DataFrame =
-    estimateOf(packedStates(edges, rounds, eager, broadcastSketches,
+    estimateOf(packedStates(edges, rounds, broadcastSketches,
       broadcastMaxNodes).last)
 
   /** The neighborhood FUNCTION + effective diameter — what HyperANF
@@ -91,7 +89,7 @@ object HyperBall {
   def neighborhoodFunction(edges: DataFrame, rounds: Int,
       broadcastSketches: Option[Boolean] = None,
       broadcastMaxNodes: Long = 150000L): DataFrame =
-    neighborhoodFunctionFrom(packedStates(edges, rounds, eager = true,
+    neighborhoodFunctionFrom(packedStates(edges, rounds,
       broadcastSketches, broadcastMaxNodes))
 
   /** [[neighborhoodFunction]] from pre-built round states (index =
@@ -112,59 +110,72 @@ object HyperBall {
           .as("reached_90pct"))
   }
 
-  /** State after each round 0..rounds (each materialized when eager) —
+  /** State after each round 0..rounds (each materialized) —
     * shared by [[neighborhoodSizes]] (which needs only the last),
     * [[neighborhoodFunction]] (which folds every round), and the
     * per-scale-dir staging (StagedLayouts.hyperballStates) that lets
     * graph_ball_sketch and graph_eff_diameter pay the round loop
     * once. */
   def packedStates(edges: DataFrame, rounds: Int,
-      eager: Boolean,
       broadcastSketches: Option[Boolean],
       broadcastMaxNodes: Long): Seq[DataFrame] = {
     // the driver replay only serves the auto regime: an explicit
     // broadcastSketches is a caller (spec) forcing a distributed path
-    if (eager && broadcastSketches.isEmpty) {
+    if (broadcastSketches.isEmpty) {
       val d = packedStatesDriver(edges, rounds)
       if (d.isDefined) return d.get
     }
-    def mat(df: DataFrame): DataFrame =
-      if (eager) df.localCheckpoint(true) else df
-    val e = edges.select(col("src").as("u"), col("dst").as("v"))
+    val e = symmetrized(edges).cache()
+    var state = initState(e).localCheckpoint(true)
+    val buf = scala.collection.mutable.ArrayBuffer(state)
+    val doBroadcast = PageRank.chooseBroadcast(broadcastSketches,
+      state.count(), broadcastMaxNodes)
+    for (_ <- 1 to rounds) {
+      state = round(e, state, doBroadcast).localCheckpoint(true)
+      buf += state
+    }
+    e.unpersist(blocking = true)
+    buf.toSeq
+  }
+
+  /** Both directions of every (src, dst) edge, as (u, v). */
+  private[graft] def symmetrized(edges: DataFrame): DataFrame =
+    edges.select(col("src").as("u"), col("dst").as("v"))
       .unionAll(edges.select(col("dst").as("u"), col("src").as("v")))
-      .cache()
-    // PACKED state layout: ONE row per node carrying all 64 registers
-    // as array<long> (index i = register i, 0 = empty; real ranks are
-    // ≥ 1). The r10 (node, reg, rank) layout materialized |E|·64 rows
-    // per round-join and shuffled 64× the rows it needed to — the one
-    // plan flagged weak in round 10. Packed, the per-round join is |E|
-    // rows and the merge is 64 codegen'd MAX aggregates (map-side
-    // combined, constant-size buffer — the KMeansND aggregation shape).
-    var state = mat(e.select(col("u").as("node")).distinct()
+
+  /** Round-0 state over the nodes of the symmetrized edges `e`.
+    * PACKED state layout: ONE row per node carrying all 64 registers
+    * as array<long> (index i = register i, 0 = empty; real ranks are
+    * ≥ 1). The r10 (node, reg, rank) layout materialized |E|·64 rows
+    * per round-join and shuffled 64× the rows it needed to — the one
+    * plan flagged weak in round 10. Packed, the per-round join is |E|
+    * rows and the merge is 64 codegen'd MAX aggregates (map-side
+    * combined, constant-size buffer — the KMeansND aggregation shape).
+    */
+  private[graft] def initState(e: DataFrame): DataFrame =
+    e.select(col("u").as("node")).distinct()
       .select(col("node"), regCol(col("node")).as("reg"),
         rankCol(col("node")).as("rank"))
       .select(col("node"),
         transform(sequence(lit(0L), lit(Registers - 1L)),
           i => when(i === col("reg"), col("rank")).otherwise(lit(0L)))
-          .as("ranks")))
-    // elementwise zip-max across a node's group, as 64 independent
-    // long-MAX aggregates reassembled into the array — stays inside
-    // whole-stage codegen, partial-aggregates before the shuffle
+          .as("ranks"))
+
+  /** ONE sketch round (unexecuted), the plan the spec audits in both
+    * regimes: join the state onto the symmetrized edges `e` (broadcast
+    * or shuffle per the gate), then fold self + in-neighbors by an
+    * elementwise register MAX — 64 independent long-MAX aggregates
+    * reassembled into the array, which stays inside whole-stage
+    * codegen and partial-aggregates before the shuffle.
+    */
+  private[graft] def round(e: DataFrame, state: DataFrame,
+      doBroadcast: Boolean): DataFrame = {
+    val stateSide = if (doBroadcast) broadcast(state) else state
+    val fromNbrs = e.join(stateSide, e("v") === stateSide("node"))
+      .select(e("u").as("node"), col("ranks"))
     val zipMax = array((1 to Registers).map(i =>
       max(element_at(col("ranks"), i))): _*).as("ranks")
-    val buf = scala.collection.mutable.ArrayBuffer(state)
-    val doBroadcast = PageRank.chooseBroadcast(broadcastSketches, eager,
-      state.count(), broadcastMaxNodes)
-    for (_ <- 1 to rounds) {
-      val stateSide = if (doBroadcast) broadcast(state) else state
-      val fromNbrs = e.join(stateSide, e("v") === stateSide("node"))
-        .select(e("u").as("node"), col("ranks"))
-      state = mat(state.unionAll(fromNbrs)
-        .groupBy(col("node")).agg(zipMax))
-      buf += state
-    }
-    e.unpersist(blocking = true)
-    buf.toSeq
+    state.unionAll(fromNbrs).groupBy(col("node")).agg(zipMax)
   }
 
   /** Two-regime driver replay of the round loop (optimization round

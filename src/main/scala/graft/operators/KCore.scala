@@ -39,27 +39,25 @@ object KCore {
   /** One peel round: survivors = nodes with current degree >= k; keep
     * only edges with BOTH endpoints surviving.
     */
-  private def peelRound(e: DataFrame, k: Int, eager: Boolean = true): DataFrame = {
+  private def peelRound(e: DataFrame, k: Int): DataFrame = {
     val keep = e.groupBy(col("src")).agg(count(lit(1)).as("d"))
       .where(col("d") >= k)
       .select(col("src").as("node"))
     val kept = e.join(keep, e("src") === keep("node"), "left_semi")
       .join(keep, e("dst") === keep("node"), "left_semi")
-    if (eager) kept.localCheckpoint(true) else kept
+    kept.localCheckpoint(true)
   }
 
   /** Fixed-`rounds` peel (oracle-replayable). Returns (node, deg):
     * surviving nodes with their degree inside the surviving subgraph.
-    * `eager = false` skips the per-round lineage truncation so the
-    * whole pipeline stays explainable with `.explain`.
+    * Each distributed round is checkpointed, so round N's plan does not
+    * re-nest rounds 1..N−1.
     */
-  def peel(edges: DataFrame, k: Int, rounds: Int, eager: Boolean = true): DataFrame = {
-    if (eager) {
-      val d = driverReplay(edges, k, rounds)
-      if (d.isDefined) return d.get
-    }
+  def peel(edges: DataFrame, k: Int, rounds: Int): DataFrame = {
+    val d = driverReplay(edges, k, rounds)
+    if (d.isDefined) return d.get
     var e = symmetrize(edges)
-    for (_ <- 1 to rounds) e = peelRound(e, k, eager)
+    for (_ <- 1 to rounds) e = peelRound(e, k)
     e.groupBy(col("src")).agg(count(lit(1)).as("deg"))
       .select(col("src").as("node"), col("deg"))
   }

@@ -38,7 +38,7 @@ object KMeansLoop {
     * skipped.
     */
   def fit(
-      spark: SparkSession,
+      @scala.annotation.unused spark: SparkSession,
       points: DataFrame,
       init: Seq[Centroid2D],
       maxIter: Int,

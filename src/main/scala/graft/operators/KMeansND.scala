@@ -29,7 +29,7 @@ object KMeansND {
     * coordinate are skipped.
     */
   def fit(
-      spark: SparkSession,
+      @scala.annotation.unused spark: SparkSession,
       points: DataFrame, // column `vec: array<double>`
       init: Seq[CentroidND],
       maxIter: Int,

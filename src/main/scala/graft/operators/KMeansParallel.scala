@@ -118,7 +118,7 @@ object KMeansParallel {
   }
 
   /** Oversample + weight (steps 1-4). `points` carries (x, y). */
-  def oversample(s: SparkSession, points: DataFrame, ell: Int,
+  def oversample(points: DataFrame, ell: Int,
       rounds: Int): (Seq[CandW], Seq[BigDecimal]) = {
     val pts = scaledPoints(points).localCheckpoint(true)
     val c0 = pts
@@ -201,9 +201,9 @@ object KMeansParallel {
   /** The full init: oversample, weight, recluster; returns the k
     * centers in centi-units plus the artifacts the spec replays.
     */
-  def initScalable(s: SparkSession, points: DataFrame, k: Int, ell: Int,
+  def initScalable(points: DataFrame, k: Int, ell: Int,
       rounds: Int, lloydRounds: Int): InitResult = {
-    val (weighted, phis) = oversample(s, points, ell, rounds)
+    val (weighted, phis) = oversample(points, ell, rounds)
     InitResult(recluster(weighted, k, lloydRounds), weighted, phis)
   }
 

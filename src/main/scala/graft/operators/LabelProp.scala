@@ -150,7 +150,7 @@ object LabelProp {
       .localCheckpoint(true)
     val states = scala.collection.mutable.ArrayBuffer(labels)
     val doBroadcast = PageRank.chooseBroadcast(broadcastLabels,
-      eager = true, labels.count(), broadcastMaxNodes)
+      labels.count(), broadcastMaxNodes)
     for (_ <- 2 to rounds) {
       val labelSide = if (doBroadcast) broadcast(labels) else labels
       labels = e.join(labelSide, e("v") === labelSide("d"))

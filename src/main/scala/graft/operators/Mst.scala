@@ -53,7 +53,7 @@ object Mst {
       .distinct()
       .localCheckpoint(true) // scanned once per round + the final guard
     driverReplay(s, canon, rounds).getOrElse(
-      distributedRounds(s, canon, rounds, ccMaxIters))
+      distributedRounds(canon, rounds, ccMaxIters))
   }
 
   /** The two-regime driver replay (optimization round 19, guide §1.2
@@ -159,7 +159,7 @@ object Mst {
   }
 
   /** The distributed fixed-round ladder — the over-threshold regime. */
-  private def distributedRounds(s: SparkSession, canon: DataFrame,
+  private def distributedRounds(canon: DataFrame,
       rounds: Int, ccMaxIters: Int): DataFrame = {
     val nodes = canon.select(col("a").as("v"))
       .union(canon.select(col("b").as("v"))).distinct()

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.functions.MediaCodecs
 
@@ -69,14 +69,14 @@ object Multimodal {
     * runs once per row (CollapseProject keeps the stage split; see the
     * Assign.withNearest planning note).
     */
-  def features(media: DataFrame, eager: Boolean = true): DataFrame = {
+  def features(media: DataFrame): DataFrame = {
     // cache: the per-kind branches each filter the SAME synthesized
     // dataset, and the kind filter cannot push below the typed
     // synthesis map — uncached, every branch would re-encode every
     // record's container bytes. The digest result is tiny, so it is
     // materialized eagerly and the cache released (the jaccardPairs
     // pattern — no cached blocks outlive the call).
-    val m = if (eager) media.cache() else media
+    val m = media.cache()
     val img = m.where(col("kind") === "image")
       .withColumn("d", MediaCodecs.ppmDecode(col("content")))
       .select(col("media_id"), col("kind"),
@@ -100,9 +100,7 @@ object Multimodal {
         size(col("fs")).as("n_units"),
         aggregate(col("fs"), lit(0L), (acc, f) => acc + f.getField("rgb_sum")).as("s0"),
         lit(0L).as("s1"), lit(0L).as("s2"))
-    val out = img.unionAll(aud).unionAll(vid)
-    if (!eager) return out
-    val res = out.localCheckpoint(true)
+    val res = img.unionAll(aud).unionAll(vid).localCheckpoint(true)
     m.unpersist()
     res
   }

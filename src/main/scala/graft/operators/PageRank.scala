@@ -60,24 +60,19 @@ object PageRank {
     * additionally pre-partition edges by src so the SMJ reuses the
     * edge layout.
     */
-  def run(edges: DataFrame, iters: Int, eager: Boolean = true,
+  def run(edges: DataFrame, iters: Int,
       broadcastRanks: Option[Boolean] = None,
       broadcastMaxNodes: Long = 5000000L): DataFrame = {
-    if (eager && broadcastRanks.isEmpty) {
+    if (broadcastRanks.isEmpty) {
       val d = driverReplay(edges, None, iters, weighted = false)
       if (d.isDefined) return d.get
     }
-    var edgesWithDeg = withDegrees(edges)
-    var ranks = initRanks(edges)
-    if (eager) {
-      edgesWithDeg = edgesWithDeg.localCheckpoint(true)
-      ranks = ranks.localCheckpoint(true)
-    }
-    val doBroadcast = chooseBroadcast(broadcastRanks, eager,
+    val edgesWithDeg = withDegrees(edges).localCheckpoint(true)
+    var ranks = initRanks(edges).localCheckpoint(true)
+    val doBroadcast = chooseBroadcast(broadcastRanks,
       ranks.count(), broadcastMaxNodes)
     for (_ <- 1 to iters) {
-      ranks = step(edgesWithDeg, ranks, doBroadcast)
-      if (eager) ranks = ranks.localCheckpoint(true)
+      ranks = step(edgesWithDeg, ranks, doBroadcast).localCheckpoint(true)
     }
     ranks
   }
@@ -91,24 +86,21 @@ object PageRank {
     * mass hasn't reached carry rank 0.
     */
   def runPersonalized(edges: DataFrame, seeds: DataFrame, iters: Int,
-      eager: Boolean = true, broadcastRanks: Option[Boolean] = None,
+      broadcastRanks: Option[Boolean] = None,
       broadcastMaxNodes: Long = 5000000L): DataFrame = {
-    if (eager && broadcastRanks.isEmpty) {
+    if (broadcastRanks.isEmpty) {
       val d = driverReplay(edges, Some(seeds), iters, weighted = false)
       if (d.isDefined) return d.get
     }
-    var edgesWithDeg = withDegrees(edges)
+    val edgesWithDeg = withDegrees(edges).localCheckpoint(true)
     val s = seeds.select(col("node").as("snode"), lit(1L).as("s"))
     var ranks = initRanks(edges)
       .join(broadcast(s), col("node") === col("snode"), "left")
       .select(col("node"), coalesce(col("s"), lit(0L)).as("s"))
       .withColumn("rank", col("s") * lit(1000000L))
       .select(col("node"), col("rank"), col("s"))
-    if (eager) {
-      edgesWithDeg = edgesWithDeg.localCheckpoint(true)
-      ranks = ranks.localCheckpoint(true)
-    }
-    val doBroadcast = chooseBroadcast(broadcastRanks, eager,
+      .localCheckpoint(true)
+    val doBroadcast = chooseBroadcast(broadcastRanks,
       ranks.count(), broadcastMaxNodes)
     for (_ <- 1 to iters) {
       val rankSide = if (doBroadcast) broadcast(ranks) else ranks
@@ -122,7 +114,7 @@ object PageRank {
           (col("s") * lit(150000L) +
             expr("(850 * coalesce(sc, 0L)) DIV 1000")).as("rank"),
           col("s"))
-      if (eager) ranks = ranks.localCheckpoint(true)
+      ranks = ranks.localCheckpoint(true)
     }
     ranks.select(col("node"), col("rank"))
   }
@@ -135,22 +127,19 @@ object PageRank {
     * ~1e6-scaled and fixture weights are small integers, so rank·w sits
     * orders below 2⁶³; callers with large weights should pre-normalize.
     */
-  def runWeighted(edges: DataFrame, iters: Int, eager: Boolean = true,
+  def runWeighted(edges: DataFrame, iters: Int,
       broadcastRanks: Option[Boolean] = None,
       broadcastMaxNodes: Long = 5000000L): DataFrame = {
-    if (eager && broadcastRanks.isEmpty) {
+    if (broadcastRanks.isEmpty) {
       val d = driverReplay(edges, None, iters, weighted = true)
       if (d.isDefined) return d.get
     }
     val strength = edges.groupBy(col("src")).agg(sum(col("w")).as("strength"))
-    var ewd = edges.join(strength, "src")
+    val ewd = edges.join(strength, "src")
       .select(col("src"), col("dst"), col("w"), col("strength"))
-    var ranks = initRanks(edges)
-    if (eager) {
-      ewd = ewd.localCheckpoint(true)
-      ranks = ranks.localCheckpoint(true)
-    }
-    val doBroadcast = chooseBroadcast(broadcastRanks, eager,
+      .localCheckpoint(true)
+    var ranks = initRanks(edges).localCheckpoint(true)
+    val doBroadcast = chooseBroadcast(broadcastRanks,
       ranks.count(), broadcastMaxNodes)
     for (_ <- 1 to iters) {
       val rankSide = if (doBroadcast) broadcast(ranks) else ranks
@@ -161,7 +150,7 @@ object PageRank {
       ranks = frame.join(contribs, frame("node") === contribs("dst"), "left")
         .select(col("node"),
           (lit(150000L) + expr("(850 * coalesce(sc, 0L)) DIV 1000")).as("rank"))
-      if (eager) ranks = ranks.localCheckpoint(true)
+      ranks = ranks.localCheckpoint(true)
     }
     ranks
   }
@@ -249,13 +238,13 @@ object PageRank {
       .withColumn("rank", lit(1000000L))
 
   /** The broadcast gate, pure so the spec can pin it: an explicit pin
-    * wins; otherwise broadcast only when the measured node count fits
-    * under the cap (and the count is cheap, i.e. ranks materialized).
-    * `nNodes` is by-name so the count is never run on a pinned call.
+    * wins; otherwise broadcast only when the measured node count (of
+    * the materialized state) fits under the cap. `nNodes` is by-name so
+    * the count is never run on a pinned call.
     */
   private[graft] def chooseBroadcast(broadcastRanks: Option[Boolean],
-      eager: Boolean, nNodes: => Long, broadcastMaxNodes: Long): Boolean =
-    broadcastRanks.getOrElse(eager && nNodes <= broadcastMaxNodes)
+      nNodes: => Long, broadcastMaxNodes: Long): Boolean =
+    broadcastRanks.getOrElse(nNodes <= broadcastMaxNodes)
 
   /** ONE rank iteration (unexecuted), the plan the spec audits in both
     * regimes: contributions join on src (broadcast or shuffle per the

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** A1 + A5 + J2 — per-cluster mean with empty-cluster repair
@@ -46,7 +46,6 @@ object Recenter {
     * bounding box (Rerandomize).
     */
   def recenter(
-      spark: SparkSession,
       assigned: DataFrame,
       old: Seq[Centroid2D],
       policy: RepairPolicy): Seq[Centroid2D] = {

@@ -323,7 +323,7 @@ object Similarity {
   def nearPairsLshMulti(
       embDf: DataFrame, tables: Seq[Seq[Array[Double]]], tau: Double): DataFrame = {
     val n = withNorm(embDf).cache()
-    val candParts = tables.zipWithIndex.map { case (planes, t) =>
+    val candParts = tables.map { planes =>
       val bucketed = n.withColumn("bucket", bucketExpr(col("v"), planes))
       val a = bucketed.select(col("bucket"), col("vec_id").as("id_a"))
       val b = bucketed.select(col("bucket"), col("vec_id").as("id_b"))

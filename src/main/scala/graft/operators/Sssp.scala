@@ -40,27 +40,25 @@ object Sssp {
     * (node, d): cheapest known path weight within `rounds` edges;
     * seeds at d = 0.
     */
-  def run(edges: DataFrame, seeds: DataFrame, rounds: Int,
-          eager: Boolean = true): DataFrame = {
-    if (eager) {
-      val d = driverReplay(edges, seeds, rounds)
-      if (d.isDefined) return d.get
-    }
-    def ck(df: DataFrame) = if (eager) df.localCheckpoint(true) else df
+  def run(edges: DataFrame, seeds: DataFrame, rounds: Int): DataFrame = {
+    val d = driverReplay(edges, seeds, rounds)
+    if (d.isDefined) return d.get
     val e = edges.select(col("src"), col("dst"), col("w"))
-    var dist = ck(seeds.select(col("node")).distinct()
-      .withColumn("d", lit(0L)))
+    var dist = seeds.select(col("node")).distinct()
+      .withColumn("d", lit(0L))
+      .localCheckpoint(true)
     var changed = dist
     for (_ <- 1 to rounds) {
       val cand = e.join(changed, e("src") === changed("node"))
         .select(e("dst").as("node"), (col("d") + col("w")).as("nd"))
         .groupBy(col("node")).agg(min(col("nd")).as("nd"))
-      val merged = ck(dist.join(cand, Seq("node"), "full_outer")
+      val merged = dist.join(cand, Seq("node"), "full_outer")
         .select(col("node"),
           least(coalesce(col("d"), lit(Long.MaxValue)),
             coalesce(col("nd"), lit(Long.MaxValue))).as("d"),
           (coalesce(col("nd"), lit(Long.MaxValue)) <
-            coalesce(col("d"), lit(Long.MaxValue))).as("improved")))
+            coalesce(col("d"), lit(Long.MaxValue))).as("improved"))
+        .localCheckpoint(true)
       changed = merged.where(col("improved")).select(col("node"), col("d"))
       dist = merged.select(col("node"), col("d"))
     }

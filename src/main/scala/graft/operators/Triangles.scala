@@ -31,16 +31,15 @@ object Triangles {
     * list (u, v) with u ≠ v, each undirected edge present once.
     * Node ids must be < 1e8 so the rank scalar cannot collide.
     */
-  def countPerNode(edges: DataFrame, eager: Boolean = true): DataFrame = {
+  def countPerNode(edges: DataFrame): DataFrame = {
     // materialize the edge list first: it feeds BOTH the degree
     // aggregate and the orientation join, and callers hand in derived
     // frames (the basket edge list is itself a self-join + distinct)
     // whose lineage would otherwise execute once per consumer
-    val e0 = edges.select(col("u"), col("v"))
     // (re-spreading THIS checkpoint was tried in round 19 and rejected
     // by measurement — the extra shuffle job offsets the spread gain;
     // only the oriented list below profits from a re-spread)
-    val e = if (eager) e0.localCheckpoint(true) else e0
+    val e = edges.select(col("u"), col("v")).localCheckpoint(true)
     val deg = e.select(col("u").as("node"))
       .unionAll(e.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("d"))
@@ -59,8 +58,7 @@ object Triangles {
     val oriented = ew.select(
       when(col("rku") < col("rkv"), col("u")).otherwise(col("v")).as("src"),
       when(col("rku") < col("rkv"), col("v")).otherwise(col("u")).as("dst"))
-    val o = if (eager) oriented.repartition(p).localCheckpoint(true)
-      else oriented
+    val o = oriented.repartition(p).localCheckpoint(true)
     // higher-neighbor adjacency, sorted for deterministic arrays; one
     // row per node, array length ≤ O(√E) by the orientation bound.
     // Materialized too: it is probed from both endpoints of every edge.
@@ -70,10 +68,10 @@ object Triangles {
     // (sort_array over the adjacency) is CPU-heavy — JobProfile showed
     // the build as a 0.7 s 3-task job on a 32-core box. Same shuffle,
     // pinned width; defaultParallelism is scale-adaptive.
-    val adj0 = (if (eager) o.repartition(p, col("src")) else o)
+    val adj = o.repartition(p, col("src"))
       .groupBy(col("src").as("node"))
       .agg(sort_array(collect_list(col("dst"))).as("nbrs"))
-    val adj = if (eager) adj0.localCheckpoint(true) else adj0
+      .localCheckpoint(true)
     // two-regime probe (the PageRank.chooseBroadcast discipline): the
     // adjacency is O(V + E) rows/entries, so it broadcasts only under
     // the [[DriverRegime]] count gate (≈ 16 MB of packed longs at the
@@ -82,7 +80,7 @@ object Triangles {
     // p-way layout — AQE had coalesced the sort-merge exchange to 10
     // tasks (1.6 s of a 5.4 s warm JobProfile). Above it, the
     // distributed shape is unchanged.
-    val bcastAdj = eager && DriverRegime.fits(e.sparkSession, e.count())
+    val bcastAdj = DriverRegime.fits(e.sparkSession, e.count())
     def probeSide(d: DataFrame) = if (bcastAdj) broadcast(d) else d
     val probed = o
       .join(probeSide(adj.select(col("node").as("src"), col("nbrs").as("nu"))),
@@ -104,7 +102,6 @@ object Triangles {
           c => struct(c.as("node"), lit(1L).as("w"))))).as("s"))
       .select(col("s.node").as("node"), col("s.w").as("w"))
       .groupBy(col("node")).agg(sum(col("w")).as("n_tri"))
-    if (!eager) return out
     val res = out.localCheckpoint(true)
     e.unpersist(blocking = true)
     o.unpersist(blocking = true)

@@ -297,7 +297,7 @@ object KMeansQueries {
     // one distributed assignment pass — every quantity BIGINT /
     // DECIMAL(38,0), so the gate is a hash match end to end.
     "kmeans_init_scalable" -> ((s, dir) => {
-      val res = KMeansParallel.initScalable(s,
+      val res = KMeansParallel.initScalable(
         Tables.points2d(s, dir).select(col("x"), col("y")),
         k = KppK, ell = KppEll, rounds = KppRounds, lloydRounds = KppLloyd)
       KMeansParallel.assignStats(s,
@@ -393,7 +393,7 @@ object KMeansQueries {
       val cs = Centroids.k2dWithEmpty
       val assigned = Assign.withNearest(
         Tables.points2d(s, dir).select(col("x"), col("y")), cs)
-      val repaired = Recenter.recenter(s, assigned, cs,
+      val repaired = Recenter.recenter(assigned, cs,
         Recenter.RepairPolicy.Rerandomize(seed = RerandSeed))
       repaired.toDF()
         .select(col("cid").as("cluster_id"),

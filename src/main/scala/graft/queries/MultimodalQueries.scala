@@ -1,7 +1,6 @@
 package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 import graft.operators.Multimodal
 
 /** Multimodal queries — ALL oracle-checked as of round 3.

@@ -61,7 +61,7 @@ object SimilarityQueries {
     // spread entry seeds, deterministic candidate cap). RecallSpec
     // pins recall ≥ the IVF nprobe=2 rung at matched k.
     "sim_ann_graph" -> ((s, dir) =>
-      graft.operators.GraphAnn.beamSearch(s, Similarity.emb(s, dir),
+      graft.operators.GraphAnn.beamSearch(Similarity.emb(s, dir),
         graft.sources.StagedLayouts.annGraphEdges(s, dir, g = AnnGraphG),
         nQueries = 10, beam = AnnGraphBeam, rounds = AnnGraphRounds, k = 3,
         entries = AnnGraphEntries)),

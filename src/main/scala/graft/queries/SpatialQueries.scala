@@ -45,7 +45,7 @@ object SpatialQueries {
     // weighted multiplicities, deterministic border attachment, exact
     // integer micro-unit geometry end to end)
     "spatial_dbscan" -> ((s, dir) =>
-      graft.operators.Dbscan.run(s, Tables.embeddings(s, dir),
+      graft.operators.Dbscan.run(Tables.embeddings(s, dir),
         eps = DbEps, minPts = DbMinPts, maxIters = DbCcRounds)),
 
     "spatial_knn_grid" -> ((s, dir) =>

@@ -537,7 +537,6 @@ object StreamingQueries {
     // threshold — equality requires the boundary-spanning windows that
     // only the carried state can produce.
     "stream_subseq_sink" -> ((s, dir) => {
-      import scala.jdk.CollectionConverters._
       val m = 8
       val tau = 4.0
       val ev = graft.Tables.events(s, dir)

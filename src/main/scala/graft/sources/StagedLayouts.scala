@@ -675,7 +675,7 @@ object StagedLayouts {
     stage("hyperball", sfDir) { tmp =>
       val sts = graft.operators.HyperBall.packedStates(
         supplyEdges(s, sfDir), rounds = 3,
-        eager = true, broadcastSketches = None, broadcastMaxNodes = 150000L)
+        broadcastSketches = None, broadcastMaxNodes = 150000L)
       sts.zipWithIndex.foreach { case (st, r) =>
         st.write.mode("overwrite").parquet(s"$tmp/round$r")
       }

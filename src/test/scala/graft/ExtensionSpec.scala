@@ -138,7 +138,6 @@ class ExtensionSpec extends SparkSpec {
 
   test("MLlib MinHashLSH agrees with our LSH on the strongest near-dups") {
     import org.apache.spark.ml.feature.{MinHashLSH, HashingTF, Tokenizer}
-    import spark.implicits._
     val docs = Tables.documents(spark, sf)
     val tf = new HashingTF().setInputCol("words").setOutputCol("features")
       .setNumFeatures(1 << 16).setBinary(true)

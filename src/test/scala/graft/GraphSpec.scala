@@ -227,20 +227,32 @@ class GraphSpec extends SparkSpec {
   test("pagerank broadcast gate: pins win, cap decides, count is lazy") {
     import graft.operators.PageRank
     // the cap forced low refuses broadcast no matter how small the graph
-    assert(!PageRank.chooseBroadcast(None, eager = true, nNodes = 10L,
+    assert(!PageRank.chooseBroadcast(None, nNodes = 10L,
       broadcastMaxNodes = 0L))
-    assert(PageRank.chooseBroadcast(None, eager = true, nNodes = 10L,
+    assert(PageRank.chooseBroadcast(None, nNodes = 10L,
       broadcastMaxNodes = 5000000L))
     // a billion-node graph sails over the default cap
-    assert(!PageRank.chooseBroadcast(None, eager = true,
+    assert(!PageRank.chooseBroadcast(None,
       nNodes = 1000000000L, broadcastMaxNodes = 5000000L))
-    // explicit pins never run the node count (by-name argument), and
-    // the non-eager default never counts an unmaterialized frame
-    assert(PageRank.chooseBroadcast(Some(true), eager = false,
+    // explicit pins never run the node count (by-name argument)
+    assert(PageRank.chooseBroadcast(Some(true),
       nNodes = sys.error("pin must not count"), broadcastMaxNodes = 0L))
-    assert(!PageRank.chooseBroadcast(None, eager = false,
-      nNodes = sys.error("non-eager must not count"),
-      broadcastMaxNodes = 5000000L))
+  }
+
+  test("one production path: no operator declares an eager Boolean flag") {
+    import java.nio.file.{Files, Path, Paths}
+    import scala.jdk.CollectionConverters._
+    // such a flag selects a second, cache- and checkpoint-free path that
+    // no query runs and no oracle checks (Spark's own localCheckpoint
+    // argument of that name is not a declaration, so it never matches)
+    val flag = """eager\s*:\s*Boolean""".r
+    val hits: Seq[Path] = scala.util.Using.resource(
+        Files.walk(Paths.get("src/main/scala/graft/operators")))(
+      _.iterator.asScala.filter { p =>
+        p.toString.endsWith(".scala") &&
+          flag.findFirstIn(Files.readString(p)).nonEmpty
+      }.toList)
+    assert(hits.isEmpty, s"eager flags in: ${hits.mkString(", ")}")
   }
 
   test("pagerank above the broadcast cap: shuffle-join plan, identical ranks") {
@@ -720,9 +732,10 @@ class GraphSpec extends SparkSpec {
     assert(sizesOf(None) == sizesOf(Some(false)),
       "driver replay diverged from the distributed rounds")
     // the plan really flips: the pinned broadcast round joins by BHJ,
-    // the pinned shuffle round must not. Auto-broadcast thresholds are
-    // killed in an isolated session so fixture-scale stats can't mask
-    // the gate (the pagerank shuffle-regime pattern)
+    // the pinned shuffle round must not (read on one unexecuted round,
+    // as the checkpointed states hide the join). Auto-broadcast
+    // thresholds are killed in an isolated session so fixture-scale
+    // stats can't mask the gate (the pagerank shuffle-regime pattern)
     val sess = spark.newSession()
     sess.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     sess.conf.set("spark.sql.adaptive.autoBroadcastJoinThreshold", "-1")
@@ -730,9 +743,10 @@ class GraphSpec extends SparkSpec {
     val sEdges = (0L until 20L)
       .flatMap(i => Seq((i, (i + 1) % 20), (i, (i + 5) % 20)))
       .toDF("src", "dst")
+    val e = HyperBall.symmetrized(sEdges)
+    val st0 = HyperBall.initState(e)
     def roundPlan(bc: Boolean): String =
-      HyperBall.neighborhoodSizes(sEdges, rounds = 1,
-        eager = false, broadcastSketches = Some(bc))
+      HyperBall.round(e, st0, doBroadcast = bc)
         .queryExecution.executedPlan.toString
     assert(roundPlan(true).contains("BroadcastHashJoin"),
       "pinned broadcast regime lost its broadcast join")
@@ -754,7 +768,7 @@ class GraphSpec extends SparkSpec {
     // run in both regimes)
     def states(): (Seq[Map[Long, Seq[Long]]], Int) = {
       val (sts, jobs) = countingJobs(HyperBall.packedStates(edges, rounds,
-        eager = true, broadcastSketches = None, broadcastMaxNodes = 5000000L))
+        broadcastSketches = None, broadcastMaxNodes = 5000000L))
       (sts.map(_.collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap), jobs)
     }
     val (drv, drvJobs) = states()

@@ -142,9 +142,9 @@ class KMeansSpec extends SparkSpec {
   test("empty-cluster repair: KeepOld keeps, Rerandomize stays in bbox") {
     val cs = Centroids.k2dWithEmpty
     val assigned = Assign.withNearest(Tables.points2d(spark, sf), cs)
-    val kept = Recenter.recenter(spark, assigned, cs, RepairPolicy.KeepOld)
+    val kept = Recenter.recenter(assigned, cs, RepairPolicy.KeepOld)
     assert(kept.find(_.cid == 8).get == Centroid2D(8, 1.0e9, 1.0e9))
-    val rer = Recenter.recenter(spark, assigned, cs, RepairPolicy.Rerandomize(1L))
+    val rer = Recenter.recenter(assigned, cs, RepairPolicy.Rerandomize(1L))
     val c8 = rer.find(_.cid == 8).get
     assert(c8.cx >= 914.0 && c8.cx <= 105000.0 && c8.cy >= 1.0 && c8.cy <= 50.0)
     // non-empty clusters unaffected by policy choice
@@ -347,7 +347,7 @@ class KMeansSpec extends SparkSpec {
       .groupBy(p => cands.minBy(c => (d2((p._1, p._2), c), c._1, c._2)))
       .map { case (c, ps) => KMeansParallel.CandW(c._1, c._2, ps.map(_._3).sum) }
       .toSet
-    val got = KMeansParallel.initScalable(spark,
+    val got = KMeansParallel.initScalable(
       Tables.points2d(spark, sf).select(col("x"), col("y")),
       k = 8, ell = 16, rounds = 3, lloydRounds = 2)
     assert(got.phiHistory.map(_.toBigInt) == phis.toSeq,
@@ -361,7 +361,7 @@ class KMeansSpec extends SparkSpec {
 
   test("k-means|| init beats the uniform bbox init on post-fit SSE; centers in bbox") {
     val ptsDf = Tables.points2d(spark, sf)
-    val res = KMeansParallel.initScalable(spark,
+    val res = KMeansParallel.initScalable(
       ptsDf.select(col("x"), col("y")),
       k = 8, ell = 16, rounds = 3, lloydRounds = 2)
     val scalable = res.centers.map { case (cid, cx, cy) =>
@@ -387,7 +387,7 @@ class KMeansSpec extends SparkSpec {
     import org.apache.spark.ml.clustering.KMeans
     import org.apache.spark.ml.functions.array_to_vector
     val ptsDf = Tables.points2d(spark, sf)
-    val res = KMeansParallel.initScalable(spark,
+    val res = KMeansParallel.initScalable(
       ptsDf.select(col("x"), col("y")),
       k = 8, ell = 16, rounds = 3, lloydRounds = 2)
     val scalable = res.centers.map { case (cid, cx, cy) =>

@@ -121,7 +121,7 @@ class RecallSpec extends SparkSpec {
   }
 
   test("broadcast-model IVF+PQ matches the literal form exactly, with no literal model in the plan") {
-    import graft.operators.{TrainedIvfCentroids, TrainedPqCodebooks}
+    import graft.operators.TrainedIvfCentroids
     val lit = q("sim_ivf_pq_topk").collect()
       .map(r => (r.getLong(0), r.getInt(1), r.getInt(2), r.getLong(3), r.getDouble(4)))
     val bt = q("sim_ivf_pq_bt").collect()

@@ -31,7 +31,7 @@ class ScaleSpec extends SparkSpec {
     // fragment: 40 tiny files
     Tables.documents(spark, sf).repartition(40)
       .write.mode("overwrite").parquet(frag)
-    val (nFrag, bytes) = Compact.datasetFiles(spark, frag)
+    val (nFrag, bytes) = Compact.datasetFiles(frag)
     assert(nFrag == 40)
     val stats = Compact.compactParquet(spark, frag, compacted,
       targetBytes = bytes) // target = whole dataset → 1 file

@@ -30,7 +30,7 @@ class SourcesAndPlansSpec extends SparkSpec {
     val pts = TextFormats.readPointsCsv(spark, res("points_empty.csv"))
     val cs = Seq(Centroid2D(0, 1.0, 1.0), Centroid2D(1, 500.0, 500.0))
     val assigned = Assign.withNearest(pts, cs)
-    val kept = Recenter.recenter(spark, assigned, cs, Recenter.RepairPolicy.KeepOld)
+    val kept = Recenter.recenter(assigned, cs, Recenter.RepairPolicy.KeepOld)
     assert(kept.find(_.cid == 1).get == Centroid2D(1, 500.0, 500.0))
   }
 

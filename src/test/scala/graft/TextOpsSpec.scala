@@ -670,7 +670,7 @@ class TextOpsSpec extends SparkSpec {
       "every probe bigram was seen — the smoothing gate is vacuous")
     // sanity: a hit-path score is a real probability mass (0 < p <= 1e6
     // per bigram on average can exceed 1e6 only on degenerate corpora)
-    got.values.filter(_._1 > 0).foreach { case (nb, _, _, su) =>
+    got.values.filter(_._1 > 0).foreach { case (_, _, _, su) =>
       assert(su > 0L, "scored doc got zero total mass") }
   }
 
@@ -939,7 +939,6 @@ class TextOpsSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getString(1), r.getString(2)))
     val kn = kn3Replay(rows.toSeq.map(r => (r._1, r._2)), nProbe = Int.MaxValue,
       trainLt = 5)
-    val langOf = rows.map(r => r._1 -> r._3).toMap
     // score_n = score_u DIV n_trigrams, then the exact DESCENDING
     // order-statistic boundaries (ranks ⌈n/3⌉ and n − n/3 — ntile's
     // tile sizes) with comparison bucketing: boundary-score ties

@@ -193,7 +193,7 @@ class WarehouseSpec extends SparkSpec {
       val sorted = ds.map(_._2).sorted
       // split into runs of consecutive days
       val runs = sorted.foldLeft(List.empty[List[Long]]) {
-        case (acc @ (h :: t), d) if h.head == d - 1 => (d :: h) :: t
+        case (h :: t, d) if h.head == d - 1 => (d :: h) :: t
         case (acc, d) => List(d) :: acc
       }.map(r => (r.length.toLong, r.min))
       val (len, start) = runs.maxBy { case (l, s) => (l, -s) }
@@ -278,7 +278,6 @@ class WarehouseSpec extends SparkSpec {
   }
 
   test("KMV rolling actives: exact below sketch capacity, bounded above it") {
-    import org.apache.spark.sql.functions._
     val kmv = graft.queries.WarehouseQueries
       .queries("q_rolling_actives_kmv")(spark, sf)
       .collect().map(r => r.getLong(0) -> r.getDouble(2)).toMap
