@@ -171,9 +171,8 @@ object Betweenness {
     */
   def runFromForward(visited: DataFrame, edges: DataFrame, rounds: Int,
           scale: Long = 10000L): DataFrame = {
-    // rounds = 0 has no deepest level to seed δ from (the accumulator
-    // below would be empty and reduce would throw); the algorithm's
-    // meaningful domain starts at one hop
+    // the deepest level seeds δ, so the backward pass needs one: the
+    // algorithm's meaningful domain starts at one hop
     require(rounds >= 1, s"Brandes backward pass needs rounds >= 1, got $rounds")
     val d = backwardDriver(visited, edges, rounds, scale)
     if (d.isDefined) return d.get
@@ -185,7 +184,7 @@ object Betweenness {
       .select(col("s"), col("node"), lit(0L).as("delta"))
       .localCheckpoint(true)
     val acc = Seq.newBuilder[DataFrame]
-    if (rounds > 0) acc += delta
+    acc += delta
     for (d <- (rounds - 1) to 0 by -1) {
       val lvl = visited.where(col("dist") === d)
         .select(col("s"), col("node"), col("sigma"))

@@ -261,8 +261,9 @@ object Similarity {
   }
 
   /** Multi-probe IVF top-k: each query searches its `nprobe` nearest
-    * coarse cells instead of only its own — the standard recall lever
-    * (README round-1 gap). Probe selection ranks cells by (squared
+    * coarse cells instead of only its own — the standard recall lever:
+    * single-probe IVF misses every true neighbour that sits across a cell
+    * boundary from its query. Probe selection ranks cells by (squared
     * distance, cid); cells partition the corpus so candidates never
     * duplicate. Cost scales linearly with nprobe, shape stays
     * broadcast-join + per-group top-k.
@@ -317,8 +318,8 @@ object Similarity {
   /** Multi-table LSH near-dup pairs: T independent plane sets, candidate
     * pairs unioned across tables then deduped before scoring — the
     * standard LSH amplification (recall 1-(1-p)^T for per-table
-    * collision probability p; README round-1 gap). Scoring touches each
-    * surviving pair once.
+    * collision probability p, the recall lever over one table's p).
+    * Scoring touches each surviving pair once.
     */
   def nearPairsLshMulti(
       embDf: DataFrame, tables: Seq[Seq[Array[Double]]], tau: Double): DataFrame = {

@@ -4,6 +4,7 @@ import java.util.concurrent.ConcurrentHashMap
 import scala.jdk.CollectionConverters._
 import org.apache.spark.scheduler._
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 import graft.operators._
 
 /** The plan-once Lloyd kernel behind `KMeansLoop.fit` and `KMeansND.fit`:
@@ -129,6 +130,98 @@ class LloydKernelSpec extends SparkSpec {
     val one = Seq(parts.flatten)
     val (seqCs, seqSse) = replay(one, init, iters)
     assert(fit(one) == bits(seqCs, seqSse), "the 1-partition fit differs from a sequential replay")
+  }
+
+  /** [[LloydKernel.merged]]'s sums by the point-at-a-time, row-major
+    * loop: each point's distance to each centroid (in cid order) from 0.0
+    * in ascending coordinate, strict `<` over ascending j, each
+    * partition's partial in point order, and the partials summed from 0.0
+    * in ascending partition index.
+    */
+  private def rowMajorSums(parts: Seq[Seq[Array[Double]]], centers: Seq[Array[Double]]): Array[Double] = {
+    val (k, dim) = (centers.length, centers.head.length)
+    val w = dim + 2
+    val sums = new Array[Double](k * w)
+    parts.foreach { part =>
+      val acc = new Array[Double](k * w)
+      part.foreach { x =>
+        var best = 0
+        var bestD = 0.0
+        for (j <- 0 until k) {
+          var d = 0.0
+          for (i <- 0 until dim) { val t = x(i) - centers(j)(i); d += t * t }
+          if (j == 0 || d < bestD) { best = j; bestD = d }
+        }
+        val a = best * w
+        acc(a) += 1.0
+        for (i <- 0 until dim) acc(a + 1 + i) += x(i)
+        acc(a + dim + 1) += bestD
+      }
+      for (i <- sums.indices) sums(i) += acc(i)
+    }
+    sums
+  }
+
+  test("column blocks are bit-identical to the row-major loop: block edges, ties, ±Inf, NaN, 1e20") {
+    import spark.implicits._
+    val rows = LloydKernel.BlockRows
+    // one empty partition, and partitions that end just before, on and
+    // just after a block edge
+    val sizes = Seq(0, rows - 1, rows, rows + 1, 2 * rows + 3)
+    // every bit of every non-NaN value; a NaN's sign and payload are not
+    // the kernel's to fix (the JIT may swap the operands of a commutative
+    // add, x86 keeps the first NaN operand's bits, and a partial's trip
+    // through serialization writes the canonical NaN), so NaN == NaN here
+    val bits = (v: Double) => java.lang.Double.doubleToLongBits(v)
+    val specials = Seq(Double.PositiveInfinity, Double.NegativeInfinity, Double.NaN)
+    def check(dim: Int, k: Int, withSpecials: Boolean, seed: Long): Unit = {
+      val rnd = new scala.util.Random(seed)
+      val what = s"dim $dim, K $k, ±Inf/NaN $withSpecials"
+      // grid points and centroids tie exactly and often; the last centroid
+      // duplicates the first: in both, the lowest cid must win
+      def grid() = Array.fill(dim)(rnd.nextInt(5).toDouble)
+      val cs = Array.fill(k)(grid())
+      if (k > 1) cs(k - 1) = cs(0).clone()
+      // non-contiguous cids, out of order: the step sorts them
+      val centers = rnd.shuffle(cs.indices.map(j => (3 * j + 1) -> cs(j)))
+      val parts = sizes.zipWithIndex.map { case (n, q) =>
+        Seq.tabulate(n) { p =>
+          val x = if (rnd.nextBoolean()) grid() else Array.fill(dim)(rnd.nextDouble() * 6 - 1)
+          // partitions 2–4 open on a point at |x| = 1e20, equally far from
+          // every centroid, so it goes to the lowest cid: that cluster's
+          // coordinate-0 sums then cancel only in partition order
+          if (p == 0) x(0) = Seq(1.0, 1.0e20, -1.0e20, 1.0e20, -1.0e20)(q)
+          if (withSpecials && rnd.nextInt(40) == 0)
+            x(rnd.nextInt(dim)) = specials(rnd.nextInt(specials.length))
+          x
+        }
+      }
+      val df = spark.sparkContext.parallelize(parts, parts.length).flatMap(_.map(Tuple1(_))).toDF("vec")
+      assert(df.rdd.glom().collect().map(_.length).toSeq == sizes, what)
+      val (got, step) = LloydKernel.pack(df, col("vec"), dim) { blocks =>
+        (LloydKernel.merged(blocks, cs.toSeq), LloydKernel.step(blocks, centers))
+      }
+      val want = rowMajorSums(parts, cs.toSeq)
+      val w = dim + 2
+      (0 until k).foreach { j =>
+        (0 until w).foreach(s => assert(bits(got(j * w + s)) == bits(want(j * w + s)),
+          s"$what: centroid $j slot $s: ${got(j * w + s)} vs ${want(j * w + s)}"))
+      }
+      val live = (0 until k).filter(j => want(j * w) > 0.0)
+      assert(step.clusters.keySet == live.map(3 * _ + 1).toSet, what)
+      live.foreach { j =>
+        val c = step.clusters(3 * j + 1)
+        assert(c.count == want(j * w).toLong && bits(c.sse) == bits(want(j * w + dim + 1)), what)
+        (0 until dim).foreach(i => assert(bits(c.mean(i)) == bits(want(j * w + 1 + i) / want(j * w)), what))
+      }
+      val total = live.foldLeft(0.0)((t, j) => t + want(j * w + dim + 1))
+      assert(bits(step.sse) == bits(total), s"$what: total SSE ${step.sse} vs $total")
+    }
+    var seed = 31L
+    for (dim <- Seq(1, 2, 3, 64); k <- Seq(1, 2, 16, 17); withSpecials <- Seq(false, true)) {
+      check(dim, k, withSpecials, seed)
+      seed += 1
+    }
   }
 
   test("Rerandomize repair in the fit runs one bbox per fit, not one per iteration") {
